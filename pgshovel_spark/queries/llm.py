@@ -17,12 +17,16 @@ from pgshovel_spark.operators.multimodal import extract_media_features, sample_f
 from pgshovel_spark.sources.tables import load_table
 
 
-def _media(spark, sf_dir):
+def _spread_docs(spark, sf_dir):
+    """The documents table spread across cores: the single-file
+    fixture would otherwise feed the Arrow mapInPandas stages one
+    python worker total instead of one per partition."""
     d = load_table(spark, sf_dir, "documents")
-    # spread the single-file fixture across cores so the Arrow
-    # mapInPandas stages run one python worker per partition, not one
-    # worker total.
-    return d.repartition(spark.sparkContext.defaultParallelism, "doc_id").select(
+    return d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+
+
+def _media(spark, sf_dir):
+    return _spread_docs(spark, sf_dir).select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
 
@@ -113,10 +117,7 @@ def q_mm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pgshovel_spark.operators.multimodal import _decode_wav_np
 
-    d = load_table(spark, sf_dir, "documents")
-    src = d.repartition(spark.sparkContext.defaultParallelism, "doc_id").select(
-        "doc_id"
-    )
+    src = _spread_docs(spark, sf_dir).select("doc_id")
 
     def synth_extract(batches):
         i = np.arange(_AUD_N)
@@ -168,7 +169,9 @@ def q_mm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {
                     "doc_id": ids,
                     "sample_rate": rates,
-                    "duration_ms": (_AUD_N * 1000) // rates,
+                    "duration_ms": np.where(
+                        rates > 0, (_AUD_N * 1000) // np.maximum(rates, 1), 0
+                    ),
                     "peak": np.abs(d64).max(axis=1),
                     "rms": rms,
                     "zero_crossings": (
@@ -235,10 +238,7 @@ def q_mm_image(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid_average_hash,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    src = d.repartition(spark.sparkContext.defaultParallelism, "doc_id").select(
-        "doc_id"
-    )
+    src = _spread_docs(spark, sf_dir).select("doc_id")
 
     def synth_extract(batches):
         for pdf in batches:
@@ -317,10 +317,7 @@ def q_mm_video(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_avi,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    src = d.repartition(spark.sparkContext.defaultParallelism, "doc_id").select(
-        "doc_id"
-    )
+    src = _spread_docs(spark, sf_dir).select("doc_id")
 
     step = 2
 
@@ -416,10 +413,7 @@ def q_mm_imagedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid_average_hash,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    src = d.repartition(spark.sparkContext.defaultParallelism, "doc_id").select(
-        "doc_id"
-    )
+    src = _spread_docs(spark, sf_dir).select("doc_id")
 
     def synth_extract(batches):
         # per-task synth memo (r14, guide §4.2): pixel content is a

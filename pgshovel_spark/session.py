@@ -25,7 +25,7 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 #: suffixes Spark's byte-string parser accepts (JavaUtils.byteStringAs)
-_SIZE_RE = re.compile(r"^\d+\s*(b|k|kb|m|mb|g|gb|t|tb|p|pb)?$")
+_SIZE_RE = re.compile(r"^\d+(b|k|kb|m|mb|g|gb|t|tb|p|pb)?$")
 
 
 def _env_size(*names: str, default: str) -> str:

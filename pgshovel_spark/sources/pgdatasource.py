@@ -2,9 +2,10 @@
 ``spark.readStream.format("pgshovel")`` via PySpark 4.1's public
 Python DataSource API (``pyspark.sql.datasource``).
 
-This replaces the parquet-landing indirection (sources/pglanding.py —
-slot -> parquet files -> file stream) with a CHECKPOINT-NATIVE source:
-Spark's own offset log is the only watermark.  The reader exposes the
+This is the one way changes leave a replication slot: a
+CHECKPOINT-NATIVE source whose only watermark is Spark's own offset
+log, decoding the binary ``pgoutput`` plugin (sources/pgoutput.py).
+The reader exposes the
 replication slot through ``SimpleDataSourceStreamReader`` — the API
 Spark provides precisely for driver-coordinated, inherently-serial
 sources (a slot decodes WAL in commit order; ordering IS the
@@ -32,17 +33,19 @@ transactions in COMMIT order, so a change's own WAL record lsn is NOT
 monotone across a stream — a transaction that started early and
 committed late arrives with change lsns LOWER than everything already
 delivered.  Offsets therefore key on the transaction's COMMIT-record
-lsn (stamped on every change by both parsers as ``commit_lsn``) plus
+lsn (stamped on every change by the parser as ``commit_lsn``) plus
 the change's index within its transaction — the same (commit_lsn,
 sequence) discipline production CDC connectors use.  A peeked batch
-always contains whole transactions (parsers buffer until COMMIT), so
-batch boundaries never split a transaction and ``commit(end)`` can
-safely advance the slot to ``end.lsn``.
+always contains whole transactions (the parser buffers until COMMIT),
+so an uncapped batch never splits a transaction and ``commit(end)``
+can safely advance the slot to ``end.lsn`` (a ``max_changes`` cap
+may split one; the end offset then carries the last complete
+boundary as ``adv``).
 
 The ``seq`` component continues the envelope's dense per-publisher
 sequence ACROSS batches and restarts (it rides in the checkpointed
 offset), so downstream (epoch, seq)-ordered MERGE sinks need no
-landing-side rebasing.
+rebasing of their own.
 
 Scale posture: the slot pull is control-plane and serial BY PROTOCOL
 (one walsender/slot decodes in commit order); sharding happens per
@@ -55,12 +58,12 @@ too: ``option("shards", '[{"slot": ..., "publication": ...,
 partition per slot, peek/decode/parse on EXECUTORS, offsets a per-slot
 (commit-lsn, idx, seq) vector — measured 80k rows/s offered sustained
 with 8 shards (92k effective at 120k offered) vs the ~15k
-single-slot ceiling (PGRELAY.json pglive_stream_sharded*).  Both in-core plugins are supported over the SQL transport
-(``pg_logical_slot_peek[_binary]_changes``): ``pgoutput`` (the
-production plugin, binary, publication-filtered, protocol v1/v2 with
-streamed in-progress transactions) and ``test_decoding``.
+single-slot ceiling (PGRELAY.json pglive_stream_sharded*).  The
+default SQL transport peeks ``pg_logical_slot_peek_binary_changes``
+(publication-filtered, protocol v1/v2 with streamed in-progress
+transactions).
 
-``transport=walsender`` (pgoutput only) is the HYBRID fast path:
+``transport=walsender`` is the HYBRID fast path:
 steady-state reads ride one persistent START_REPLICATION CopyBoth
 session held by the reader (the runner process is long-lived; the
 push decode path measures ~3-4x the peek transport), commits confirm
@@ -83,7 +86,7 @@ Usage::
     df = (spark.readStream.format("pgshovel")
           .option("sockdir", params.sockdir)
           .option("slot", "my_slot")
-          .option("publication", "my_pub")      # pgoutput (default)
+          .option("publication", "my_pub")
           .load())                               # CHANGE_SCHEMA rows
 
 NOTE: the DataSource class is pickled BY REFERENCE into Spark's
@@ -200,7 +203,7 @@ def _slice_changes(
     delivered commit's lsn would discard its undelivered tail (the
     next peek replays the whole transaction and the position filter
     skips the delivered prefix).  Uncapped slices always end at a
-    transaction boundary (parsers emit whole transactions), so there
+    transaction boundary (the parser emits whole transactions), so there
     ``adv == end['lsn']``."""
     from pgshovel_spark.sources.pgoutput import lsn_to_int
 
@@ -231,7 +234,7 @@ def _slice_changes(
         seq += 1
         lsn, idx = c_lsn, j + 1
     if not stopped and prev_c is not None:
-        # list exhausted: parsers emit whole transactions, so the
+        # list exhausted: the parser emits whole transactions, so the
         # last commit seen is complete
         adv = prev_c
     return rows, {"lsn": lsn, "idx": idx, "seq": seq}, adv
@@ -281,30 +284,26 @@ class PgShovelSimpleStreamReader(SimpleDataSourceStreamReader):
         self.slot = _opt(options, "slot")
         if not self.slot:
             raise ValueError("pgshovel source requires option 'slot'")
-        self.plugin = _opt(options, "plugin", "pgoutput")
-        if self.plugin not in ("pgoutput", "test_decoding"):
-            raise ValueError(f"unknown plugin {self.plugin!r}")
         self.publication = _opt(options, "publication")
-        if self.plugin == "pgoutput" and not self.publication:
-            raise ValueError("plugin=pgoutput requires option 'publication'")
+        if not self.publication:
+            raise ValueError("pgshovel source requires option 'publication'")
         self.proto_version = int(_opt(options, "proto_version", "1"))
         self.streaming = _opt(options, "streaming", "false").lower() == "true"
         # decoder-side replication-origin filter (parse_pgoutput):
         # "none" drops foreign-origin transactions whole (loop
-        # prevention in bidirectional topologies); pgoutput only
+        # prevention in bidirectional topologies)
         self.origin = _opt(options, "origin", "any")
         if self.origin not in ("any", "none"):
             raise ValueError(f"origin must be 'any' or 'none', got {self.origin!r}")
         self.publisher = _opt(options, "publisher", self.slot)
         self.epoch = int(_opt(options, "epoch", "0"))
-        kc = _opt(options, "key_cols")
-        self.key_cols = json.loads(kc) if kc else None
         mc = _opt(options, "max_changes")
-        # upto_nchanges bounds RAW decoded rows per peek; Postgres
-        # completes the in-flight transaction past the limit, so a
-        # bounded peek still returns whole transactions.
+        # rows per batch; the peek window (upto_nchanges, which counts
+        # raw frames) starts at the same size and widens on demand
+        # (see _peek_slice)
         self.max_changes = int(mc) if mc else None
-        # transport=walsender (pgoutput only): steady-state reads come
+        self._window = self.max_changes
+        # transport=walsender: steady-state reads come
         # from ONE persistent START_REPLICATION CopyBoth session held
         # by the reader (the runner process is long-lived) — the
         # server PUSHES decoded transactions, ~3-4x the peek
@@ -316,8 +315,6 @@ class PgShovelSimpleStreamReader(SimpleDataSourceStreamReader):
         self.transport = _opt(options, "transport", "sql")
         if self.transport not in ("sql", "walsender"):
             raise ValueError(f"transport must be 'sql' or 'walsender', got {self.transport!r}")
-        if self.transport == "walsender" and self.plugin != "pgoutput":
-            raise ValueError("transport=walsender requires plugin=pgoutput")
         #: per-trigger poll window on the walsender transport
         self.poll_seconds = float(_opt(options, "poll_seconds", "1.0"))
         self._ws = None  # (PgReplicationConnection, ReplicationStream)
@@ -338,40 +335,30 @@ class PgShovelSimpleStreamReader(SimpleDataSourceStreamReader):
         # confirmed_flush_lsn onward is new.  seq starts dense at 0.
         return {"lsn": 0, "idx": 0, "seq": 0}
 
-    def _peek_parse(self) -> list:
-        # raw pulls go through the ONE shared SQL construction per
-        # plugin (raw_slot_changes[_pgoutput]) — the pull_changes*
-        # helpers use the same, so the paths cannot drift.  The pull
-        # retries briefly on 55006 ("slot is active"): two concurrent
-        # SQL peeks (the runner's read racing an executor's restart
-        # replay) contend transiently on the slot's active lock.
+    def _peek_parse(self, limit: int | None) -> tuple[list, int]:
+        """One SQL peek of the slot (``upto_nchanges = limit``) ->
+        ``(parsed changes, raw frame count)``.  The pull retries
+        briefly on 55006 ("slot is active"): two concurrent SQL peeks
+        (the runner's read racing an executor's restart replay)
+        contend transiently on the slot's active lock."""
         import time
 
+        from pgshovel_spark.sources.pgoutput import (
+            parse_pgoutput,
+            raw_slot_changes_pgoutput,
+        )
         from pgshovel_spark.sources.pgwire import PgError
 
-        def pull():
-            if self.plugin == "pgoutput":
-                from pgshovel_spark.sources.pgoutput import (
-                    raw_slot_changes_pgoutput,
-                )
-
-                return raw_slot_changes_pgoutput(
+        for attempt in range(20):
+            try:
+                raw = raw_slot_changes_pgoutput(
                     self.params,
                     self.slot,
                     self.publication,
                     proto_version=self.proto_version,
                     streaming=self.streaming,
-                    limit=self.max_changes,
+                    limit=limit,
                 )
-            from pgshovel_spark.sources.pglogical import raw_slot_changes
-
-            return raw_slot_changes(
-                self.params, self.slot, limit=self.max_changes
-            )
-
-        for attempt in range(20):
-            try:
-                raw = pull()
                 break
             except (PgError, ConnectionError, OSError) as e:
                 # 55006: concurrent peeks contending on the slot's
@@ -393,13 +380,33 @@ class PgShovelSimpleStreamReader(SimpleDataSourceStreamReader):
                         check_slot_live(self.params, self.slot)
                     raise
                 time.sleep(0.5)
-        if self.plugin == "pgoutput":
-            from pgshovel_spark.sources.pgoutput import parse_pgoutput
+        return parse_pgoutput(raw, origin=self.origin), len(raw)
 
-            return parse_pgoutput(raw, origin=self.origin)
-        from pgshovel_spark.sources.pglogical import parse_test_decoding
+    def _peek_slice(
+        self, start: dict, upto: dict | None, cap: int | None
+    ) -> tuple[list, dict, int]:
+        """Peek and slice ``(start, upto]`` (at most ``cap`` rows).
 
-        return parse_test_decoding(raw, self.key_cols)
+        Uncapped (``max_changes`` unset): one unbounded peek.  Capped:
+        the peek window counts raw frames from ``confirmed_flush_lsn``,
+        and that prefix still holds the previous batch — the engine
+        calls ``commit(N)`` only after it has planned batch N+1 from
+        ``read``.  A window the delivered prefix fills would plan no
+        new offset, so ``commit(N)`` would never run and the stream
+        would stall.  So a FULL window (as many frames as the bound)
+        that yields less than the slice needs is widened 4x and
+        re-peeked; every peek stays bounded, and the widened size is
+        kept for the next read."""
+        for _ in range(10):
+            changes, frames = self._peek_parse(self._window)
+            got = self._slice(changes, start, upto, max_rows=cap)
+            if self._window is None or frames < self._window:
+                break  # unbounded, or the window reached the slot's end
+            rows, end, _adv = got
+            if len(rows) >= cap if upto is None else end["seq"] >= upto["seq"]:
+                break  # the slice is whole
+            self._window *= 4
+        return got
 
     def _slice(
         self,
@@ -453,7 +460,7 @@ class PgShovelSimpleStreamReader(SimpleDataSourceStreamReader):
         parse: the slot replays everything past confirmed_flush on
         reconnect, and keeping the partial batch would duplicate rows
         WITHIN one read (the position filter only dedupes across
-        batches) — LandingCapture.pull_once's exact contract."""
+        batches)."""
         import time
 
         from pgshovel_spark.sources.pgwire import PgError
@@ -500,10 +507,9 @@ class PgShovelSimpleStreamReader(SimpleDataSourceStreamReader):
             # (the position filter only dedupes re-peeked data), so
             # max_changes bounds only the peek transport; walsender
             # batches are bounded by the poll window instead
-            changes, cap = self._walsender_parse(), None
+            rows, end, adv = self._slice(self._walsender_parse(), start, None)
         else:
-            changes, cap = self._peek_parse(), self.max_changes
-        rows, end, adv = self._slice(changes, start, None, max_rows=cap)
+            rows, end, adv = self._peek_slice(start, None, self.max_changes)
         if not rows:
             # idle: reproduce the start offset EXACTLY (including any
             # 'adv' key a capped predecessor batch left in it) — a
@@ -527,7 +533,7 @@ class PgShovelSimpleStreamReader(SimpleDataSourceStreamReader):
         # first latestOffset of the new run), and a peek from
         # confirmed_flush deterministically re-produces any
         # uncommitted range.
-        rows, got, _adv = self._slice(self._peek_parse(), start, end)
+        rows, got, _adv = self._peek_slice(start, end, None)
         if got["seq"] != end["seq"]:
             # The slot can no longer reproduce the planned range —
             # only possible if something advanced it past data Spark
@@ -630,9 +636,9 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
 
     SEQ SEMANTICS: dense PER SHARD (publisher = slot name), continuing
     across batches and restarts — downstream (epoch, seq) MERGE sinks
-    order per publisher, the same contract the landing path documents.
+    order per publisher, the same contract as the single-slot reader.
 
-    Restrictions (enforced): plugin=pgoutput, protocol v1, no v2
+    Restrictions (enforced): protocol v1, no v2
     streaming (stream segments interleave across the probe's
     commit-grouping), origin='any' (a decoder-side origin drop would
     desync the probe's server-side count).
@@ -671,8 +677,6 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
                 "publication": pub,
                 "database": s.get("database", self.default_db),
             }
-        if _opt(options, "plugin", "pgoutput") != "pgoutput":
-            raise ValueError("sharded mode requires plugin=pgoutput")
         if int(_opt(options, "proto_version", "1")) != 1:
             raise ValueError("sharded mode requires proto_version=1")
         if _opt(options, "streaming", "false").lower() == "true":
@@ -1919,7 +1923,6 @@ def rebootstrap_slot(
     params,
     slot: str,
     tables: list[tuple[str, str]],
-    plugin: str = "pgoutput",
     to_table: str | None = None,
     keys: list[str] | None = None,
     columns: list[str] | None = None,
@@ -2003,7 +2006,7 @@ def rebootstrap_slot(
         )
 
     counts: dict[str, int] = {}
-    with exported_slot_snapshot(params, slot, plugin=plugin) as (
+    with exported_slot_snapshot(params, slot) as (
         cpoint,
         snap,
     ):
@@ -2056,15 +2059,13 @@ class PgShovelDataSource(DataSource):
 
     Options: sockdir OR host (one required; host + password = the TCP
     SCRAM transport), slot (required), database, user,
-    port, plugin (pgoutput | test_decoding), publication (required
-    for pgoutput), proto_version, streaming ('true' enables protocol
-    v2 in-progress transaction streaming), origin ('none' drops
-    foreign-origin transactions whole — loop prevention; pgoutput
-    only), publisher, epoch, key_cols (JSON table->pk-list map,
-    test_decoding only), max_changes (bound raw rows per peek),
-    shards (JSON array of {slot, publication, database} — switches to
-    the partition-parallel sharded reader; see
-    PgShovelShardedStreamReader).
+    port, publication (required), proto_version, streaming ('true'
+    enables protocol v2 in-progress transaction streaming), origin
+    ('none' drops foreign-origin transactions whole — loop
+    prevention), publisher, epoch, max_changes (rows per batch),
+    transport ('sql' | 'walsender'), poll_seconds, shards (JSON array
+    of {slot, publication, database} — switches to the
+    partition-parallel sharded reader; see PgShovelShardedStreamReader).
     """
 
     @classmethod

@@ -1,24 +1,19 @@
-"""Live Postgres change capture via LOGICAL DECODING + MVCC-consistent
-parallel snapshot bootstrap — the engine's equivalent of pgshovel's
-capture layer, executed against a real PostgreSQL server.
+"""Live Postgres replication-slot lifecycle + MVCC-consistent parallel
+snapshot bootstrap — the engine's equivalent of pgshovel's capture
+layer, executed against a real PostgreSQL server.
 
 pgshovel captures row changes from a live Postgres and publishes
 mutation records to a bus (reconstructed from public knowledge;
-SURVEY.md §1.1 "Mutation record", §2.A).  This module does the same
-with the database's own public machinery:
+SURVEY.md §1.1 "Mutation record", §2.A).  Capture itself is the binary
+``pgoutput`` plugin (sources/pgoutput.py: decoder, slot creation,
+publications, both transports), delivered to Spark by the native
+``format("pgshovel")`` source (sources/pgdatasource.py).  This module
+holds the plugin-independent parts around it:
 
-- ``create_slot`` / ``pull_changes``: a logical replication slot with
-  the in-core ``test_decoding`` output plugin; ``pull_changes`` parses
-  the decoded stream into the engine's CHANGE_SCHEMA envelope
-  (streaming/change_stream.py), so every existing consumer — latest
-  state, stateful dedup, txn assembly, the executed-MERGE sinks —
-  runs on live-captured changes unchanged.  (Plugin choice:
-  ``test_decoding`` is reachable through the SQL-level slot functions
-  the simple-query protocol already speaks; the binary ``pgoutput``
-  path — the plugin every production deployment runs — is implemented
-  in sources/pgoutput.py since round 10, over BOTH transports
-  (binary slot functions and a real walsender START_REPLICATION
-  stream), emitting the same CHANGE_SCHEMA envelope.)
+- slot lifecycle: ``drop_slot``, ``advance`` (the watermark commit of
+  the peek/advance contract), ``slot_wal_status`` /
+  ``check_slot_live`` (the WAL-retention invalidation probe), and
+  ``pg_observed_schema`` (the drift monitor's live schema probe).
 - ``exported_snapshot`` + ``snapshot_parallel_read``: consistent
   parallel bootstrap.  One driver transaction exports its snapshot
   (``pg_export_snapshot()``); every Spark partition opens its own
@@ -29,20 +24,18 @@ with the database's own public machinery:
   against Derby via sessionInitStatement.
 
 Scale posture: decoding a slot is SERIAL by design (Postgres streams
-WAL in commit order; ordering is the contract), so the slot pull is a
-control-plane driver read — sharding happens per database/partition
-with one slot each, and the fan-out to executors happens AFTER parse
-(the envelope DataFrame).  The bootstrap path is the data-plane one:
-per-partition slice reads parallelize across executors exactly like a
+WAL in commit order; ordering is the contract), so a slot pull is a
+control-plane read — sharding happens per database/publication with
+one slot each.  The bootstrap path is the data-plane one: per-
+partition slice reads parallelize across executors exactly like a
 partitioned JDBC scan, and the snapshot export pins consistency
 without locking writers.
 
-Watermark discipline: ``pull_changes(peek=True)`` (the default)
-leaves the slot's ``confirmed_flush_lsn`` untouched; callers commit a
-batch downstream first and then ``advance(params, slot, upto_lsn)`` —
-crash between the two replays the batch (at-least-once), and the
-replay-idempotent MERGE sinks (streaming/sinks.py) absorb duplicates,
-the same two-phase contract the JDBC incremental source documents.
+Watermark discipline: a slot PEEK leaves ``confirmed_flush_lsn``
+untouched; callers commit a batch downstream first and then
+``advance(params, slot, upto_lsn)`` — crash between the two replays
+the batch (at-least-once), and the replay-idempotent sinks absorb
+duplicates.
 """
 
 from __future__ import annotations
@@ -54,18 +47,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pgshovel_spark.sources.pgwire import PgParams
-from pgshovel_spark.streaming.change_stream import CHANGE_SCHEMA
 
 __all__ = [
-    "create_slot",
     "drop_slot",
-    "pull_changes",
-    "change_batches",
     "pg_observed_schema",
     "advance",
     "slot_wal_status",
     "check_slot_live",
-    "parse_test_decoding",
     "exported_snapshot",
     "snapshot_parallel_read",
 ]
@@ -82,17 +70,6 @@ def _check_slot(slot: str) -> str:
     if not _SLOT_RE.match(slot):
         raise ValueError(f"invalid slot name: {slot!r}")
     return slot
-
-
-def create_slot(params: PgParams, slot: str) -> str:
-    """Create a logical replication slot on the in-core test_decoding
-    plugin; returns the consistent-point LSN the slot starts at."""
-    with params.connect() as c:
-        row = c.query(
-            "select lsn from pg_create_logical_replication_slot"
-            f"('{_check_slot(slot)}', 'test_decoding')"
-        )[0]
-        return row.rows[0][0]
 
 
 def drop_slot(params: PgParams, slot: str) -> None:
@@ -133,330 +110,6 @@ def check_slot_live(params: PgParams, slot: str) -> None:
 
     if slot_wal_status(params, slot) == "lost":
         raise SlotInvalidatedError(slot)
-
-
-# ---------------------------------------------------------------------------
-# test_decoding parser (output format is public contrib/test_decoding)
-# ---------------------------------------------------------------------------
-
-# re.S: a quoted value may contain literal newlines — without DOTALL
-# the change line fails the match and would be silently skipped
-# (caught by tests/test_pg_live.py::test_decoder_adversarial_values).
-# The table capture is NON-GREEDY (.+?) anchored on the first
-# ": <OP>:" delimiter, not [^:]+ — a quoted relation name containing
-# ':' (public."a:b") parses instead of silently mismatching; only a
-# table whose own name embeds ': INSERT:' would still confuse it,
-# which the pathological-identifier test accepts as out of contract.
-_CHANGE_RE = re.compile(r"\Atable (.+?): (INSERT|UPDATE|DELETE):( .*)?\Z", re.S)
-#: PG 11+ renders truncation as 'table a, b: TRUNCATE: (no-flags)' /
-#: '... restart_seqs cascade' — one line for ALL truncated tables.
-#: Must decode (parity with pgoutput's 'T'): before round 10 it was
-#: silently skipped; the strict unparseable-line rule would otherwise
-#: WEDGE the capture loop on it (peek re-reads the same line forever).
-_TRUNCATE_RE = re.compile(r"\Atable (.+?): TRUNCATE:( .*)?\Z", re.S)
-_COMMIT_RE = re.compile(r"\ACOMMIT \d+(?: \(at ([^)]+)\))?\Z")
-
-
-def _parse_tuple(s: str, pos: int) -> tuple[dict[str, str | None], int]:
-    """Parse ``col[type]:value ...`` starting at ``pos``; stops at end
-    of string or at an ``old-key:`` / ``new-tuple:`` marker.  Values
-    come back as their text rendering (None for SQL NULL) — typed
-    projection is the consumer's job, exactly like the Kafka envelope.
-    """
-    out: dict[str, str | None] = {}
-    n = len(s)
-    while pos < n:
-        while pos < n and s[pos] == " ":
-            pos += 1
-        if pos >= n or s.startswith(("old-key:", "new-tuple:"), pos):
-            break
-        try:
-            lb = s.index("[", pos)
-            col = s[pos:lb]
-            rb = s.index("]:", lb)
-        except ValueError:
-            raise ValueError(
-                f"truncated test_decoding tuple at offset {pos}: {s[pos:pos+80]!r}"
-            ) from None
-        pos = rb + 2
-        if pos >= n:
-            raise ValueError(
-                f"test_decoding tuple ends after column header {col!r}: {s[-80:]!r}"
-            )
-        if s[pos] == "'":  # quoted value, '' escapes a quote
-            pos += 1
-            buf = []
-            while True:
-                try:
-                    q = s.index("'", pos)
-                except ValueError:
-                    raise ValueError(
-                        f"unterminated quoted value for column {col!r}: {s[-80:]!r}"
-                    ) from None
-                if q + 1 < n and s[q + 1] == "'":
-                    buf.append(s[pos : q + 1])
-                    pos = q + 2
-                else:
-                    buf.append(s[pos:q])
-                    pos = q + 1
-                    break
-            out[col] = "".join(buf)
-        else:
-            end = s.find(" ", pos)
-            if end == -1:
-                end = n
-            tok = s[pos:end]
-            pos = end
-            out[col] = None if tok == "null" else tok
-    return out, pos
-
-
-def parse_test_decoding(
-    rows: list[tuple[str, int, str]],
-    key_cols: dict[str, list[str]] | None = None,
-) -> list[dict]:
-    """Turn raw ``(lsn, xid, data)`` rows from
-    ``pg_logical_slot_*_changes`` into CHANGE_SCHEMA dicts.
-
-    ``key_cols`` maps table name -> primary-key column list; when
-    given, the ``key`` map is filled from the after-image (INSERT/
-    UPDATE) or old-key (DELETE), which is what the stateful consumers
-    key on.  The commit timestamp on the COMMIT line (present under
-    ``include-timestamp``) stamps every change of that transaction.
-    """
-    key_cols = key_cols or {}
-    changes: list[dict] = []
-    txn: list[dict] = []
-    for lsn, xid, data in rows:
-        if data.startswith("BEGIN"):
-            txn = []
-            continue
-        m = _COMMIT_RE.match(data)
-        if m is not None:
-            ts = m.group(1)
-            for ch in txn:
-                ch["ts"] = ts
-                # The COMMIT record's lsn: the ONLY per-change position
-                # that is monotone across a decoded stream.  Decoding
-                # emits whole transactions in COMMIT order, so a later
-                # batch can carry changes whose own record lsn is LOWER
-                # than everything already seen (their txn started
-                # earlier, committed later) — offset tracking
-                # (pgdatasource.py) must key on (commit_lsn, idx), never
-                # the change lsn.
-                ch["commit_lsn"] = lsn
-            changes.extend(txn)
-            txn = []
-            continue
-        m = _CHANGE_RE.match(data)
-        if m is None:
-            t = _TRUNCATE_RE.match(data)
-            if t is not None:
-                for table in t.group(1).split(", "):
-                    txn.append(
-                        {
-                            "op": "TRUNCATE",
-                            "table": table,
-                            "key": None,
-                            "before": None,
-                            "after": None,
-                            "txid": xid,
-                            "ts": None,
-                            "lsn": lsn,
-                        }
-                    )
-                continue
-            # Only logical-message frames are legitimately non-change
-            # lines on this plugin; anything else is a parse failure
-            # and MUST surface — silently dropping a change line is
-            # data loss, not tolerance (ADVICE r9).
-            if data.startswith("message:"):
-                continue
-            raise ValueError(f"unparseable test_decoding line: {data[:200]!r}")
-        table, op, rest = m.group(1), m.group(2), m.group(3) or ""
-        before: dict[str, str | None] | None = None
-        after: dict[str, str | None] | None = None
-        rest = rest.strip()
-        if rest == "(no-tuple-data)":
-            pass
-        elif rest.startswith("old-key:"):
-            before, pos = _parse_tuple(rest, len("old-key:"))
-            if rest.startswith("new-tuple:", pos):
-                after, _ = _parse_tuple(rest, pos + len("new-tuple:"))
-        elif op == "DELETE":
-            before, _ = _parse_tuple(rest, 0)
-        else:
-            after, _ = _parse_tuple(rest, 0)
-        bare = table.split(".", 1)[-1]
-        src = after if after is not None else (before or {})
-        key = {
-            k: src.get(k)
-            for k in key_cols.get(table, key_cols.get(bare, []))
-            if k in src
-        }
-        txn.append(
-            {
-                "op": op,
-                "table": table,
-                "key": key or None,
-                "before": before,
-                "after": after,
-                "txid": xid,
-                "ts": None,
-                "lsn": lsn,
-            }
-        )
-    return changes
-
-
-def raw_slot_changes(
-    params: PgParams,
-    slot: str,
-    peek: bool = True,
-    limit: int | None = None,
-) -> list[tuple[str, int, str]]:
-    """Raw ``(lsn, xid, data)`` rows from the test_decoding slot
-    functions — the ONE construction of the peek/get SQL, shared by
-    ``pull_changes`` and the native streaming source
-    (pgdatasource.py) so the two paths cannot drift."""
-    fn = "pg_logical_slot_peek_changes" if peek else "pg_logical_slot_get_changes"
-    bound = "null" if limit is None else str(int(limit))
-    with params.connect() as c:
-        res = c.query(
-            f"select lsn::text, xid::text, data from {fn}"
-            f"('{_check_slot(slot)}', null, {bound},"
-            " 'include-timestamp', 'on')"
-        )[0]
-    return [(lsn, int(xid), data) for lsn, xid, data in res.rows]
-
-
-def pull_changes(
-    spark: SparkSession,
-    params: PgParams,
-    slot: str,
-    key_cols: dict[str, list[str]] | None = None,
-    peek: bool = True,
-    publisher: str | None = None,
-    epoch: int = 0,
-) -> tuple[DataFrame, str | None]:
-    """Drain (peek=False) or peek (default) the slot and return
-    ``(envelope DataFrame, max_lsn)``; feed ``max_lsn`` to
-    ``advance`` after the batch commits downstream."""
-    raw = raw_slot_changes(params, slot, peek=peek)
-    parsed = parse_test_decoding(raw, key_cols)
-    max_lsn = raw[-1][0] if raw else None
-    return _envelope_df(spark, parsed, publisher or slot, epoch), max_lsn
-
-
-def _envelope_df(
-    spark: SparkSession, parsed: list[dict], pub: str, epoch: int
-) -> DataFrame:
-    """Parsed change dicts -> CHANGE_SCHEMA DataFrame — shared by the
-    test_decoding and pgoutput capture paths (``ts`` may arrive as the
-    server's text rendering or an already-decoded datetime).
-
-    The row count is known driver-side, so it is stamped on the frame
-    as ``_pgshovel_nrows`` — hot capture loops (LandingCapture) read
-    it instead of paying a count() job that re-evaluates the whole
-    createDataFrame/from_json pipeline per pull."""
-    if not parsed:
-        df = spark.createDataFrame([], CHANGE_SCHEMA)
-        df._pgshovel_nrows = 0
-        return df
-    # Ship the maps as JSON TEXT through the Arrow fast path and
-    # rebuild them JVM-side: createDataFrame over Python dict rows
-    # falls off Arrow onto per-row pickling, which measured 4.4 s for
-    # a 50k-change batch vs 0.5 s total for wire read + parse — the
-    # envelope build would otherwise dominate the whole capture hop.
-    import json
-
-    import pandas as pd
-
-    from pgshovel_spark.sources.pgwire import _dec_tstz
-
-    ts_memo: dict[str, object] = {}
-
-    def ts_of(s):
-        if s is None or not isinstance(s, str):
-            return s  # already a datetime (pgoutput) or absent
-        if s not in ts_memo:  # one distinct commit ts per transaction
-            ts_memo[s] = _dec_tstz(s)
-        return ts_memo[s]
-
-    def j(m):
-        return None if m is None else json.dumps(m)
-
-    pdf = pd.DataFrame(
-        {
-            "op": [ch["op"] for ch in parsed],
-            "table": [ch["table"] for ch in parsed],
-            "key_j": [j(ch["key"]) for ch in parsed],
-            "before_j": [j(ch["before"]) for ch in parsed],
-            "after_j": [j(ch["after"]) for ch in parsed],
-            "txid": [ch["txid"] for ch in parsed],
-            "ts": [ts_of(ch["ts"]) for ch in parsed],
-            "publisher": pub,
-            "epoch": epoch,
-            "seq": range(len(parsed)),
-        }
-    )
-    from pyspark.sql import functions as F
-
-    mt = "map<string,string>"
-    df = spark.createDataFrame(pdf).select(
-        "op",
-        "table",
-        F.from_json("key_j", mt).alias("key"),
-        F.from_json("before_j", mt).alias("before"),
-        F.from_json("after_j", mt).alias("after"),
-        F.col("txid").cast("long"),
-        F.col("ts").cast("timestamp"),
-        "publisher",
-        F.col("epoch").cast("long"),
-        F.col("seq").cast("long"),
-    )
-    df._pgshovel_nrows = len(parsed)
-    return df
-
-
-def deferred_commit_batches(pull, ack, max_pulls: int | None = None):
-    """The shared peek/advance micro-batch discipline (one copy for
-    BOTH plugins): each yielded envelope was PEEKED via ``pull() ->
-    (df, max_lsn)``, and ``ack(max_lsn)`` runs only when the consumer
-    asks for the NEXT batch — a crash mid-batch replays it
-    (at-least-once; the MERGE sinks are replay-idempotent).  Stops
-    when a pull decodes nothing (or after ``max_pulls``); exhausting
-    the allowance leaves the LAST batch unacknowledged by design
-    (same as cdc.incremental_pulls)."""
-    pulls = 0
-    pending: str | None = None
-    while max_pulls is None or pulls < max_pulls:
-        if pending is not None:
-            ack(pending)
-            pending = None
-        df, max_lsn = pull()
-        if max_lsn is None:
-            return
-        pulls += 1
-        pending = max_lsn
-        yield df
-
-
-def change_batches(
-    spark: SparkSession,
-    params: PgParams,
-    slot: str,
-    key_cols: dict[str, list[str]] | None = None,
-    max_pulls: int | None = None,
-):
-    """Micro-batch loop over a test_decoding slot — the logical-
-    decoding analog of ``cdc.incremental_pulls`` (see
-    ``deferred_commit_batches`` for the watermark contract)."""
-    return deferred_commit_batches(
-        lambda: pull_changes(spark, params, slot, key_cols, peek=True),
-        lambda lsn: advance(params, slot, lsn),
-        max_pulls,
-    )
 
 
 def pg_observed_schema(params: PgParams, table: str) -> dict[str, str]:

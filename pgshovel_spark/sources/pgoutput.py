@@ -1,20 +1,21 @@
-"""Binary ``pgoutput`` logical decoding — the production Postgres CDC
-path, live.
+"""Binary ``pgoutput`` logical decoding — the engine's one capture
+plugin, live.
 
-pglogical.py captures through the in-core ``test_decoding`` TEXT
-plugin; every real Postgres deployment (built-in logical replication,
-Debezium, AWS DMS) instead speaks ``pgoutput``: the binary message set
-(Begin / Relation / Insert / Update / Delete / Commit ...) defined by
-the public "Logical Streaming Replication Protocol" chapter of the
+Every real Postgres deployment (built-in logical replication,
+Debezium, AWS DMS) speaks ``pgoutput``: the binary message set (Begin /
+Relation / Insert / Update / Delete / Commit ...) defined by the
+public "Logical Streaming Replication Protocol" chapter of the
 PostgreSQL documentation, scoped by a PUBLICATION.  This module
 implements that decoder and BOTH transports:
 
-- ``pull_changes_pgoutput``: the SQL-level transport
-  (``pg_logical_slot_peek_binary_changes`` + the peek/advance
-  two-phase watermark) — same micro-batch contract as
-  ``pglogical.pull_changes``, same CHANGE_SCHEMA envelope out, so
-  every existing consumer (latest state, stateful dedup, executed
-  MERGE sinks) runs on pgoutput changes unchanged.
+- ``raw_slot_changes_pgoutput``: the SQL-level transport
+  (``pg_logical_slot_peek_binary_changes``; the watermark moves only
+  on ``pglogical.advance``) — raw ``(lsn, xid, payload)`` frames that
+  ``parse_pgoutput`` turns into change dicts.  The native streaming
+  source (pgdatasource.py) is the consumer: it slices parsed changes
+  by (commit_lsn, idx) position and builds the CHANGE_SCHEMA envelope
+  every downstream consumer (latest state, stateful dedup, executed
+  MERGE sinks, the 2PC upsert sink) runs on.
 - ``PgReplicationConnection`` + ``ReplicationStream``: the real
   walsender transport — a ``replication=database`` startup, ``START_
   REPLICATION SLOT ... LOGICAL`` into CopyBoth mode, XLogData /
@@ -22,22 +23,22 @@ implements that decoder and BOTH transports:
   flush-LSN confirmation a production consumer sends).  This is what
   pointing the engine at an actual RDS/production instance exercises.
 
-Decoder semantics vs test_decoding, deliberately aligned:
+Decoder semantics:
 
 - values travel as their TEXT renderings (proto_version 1 tuples are
   text-format; typed projection stays the consumer's job),
 - the ``key`` map is populated from the Relation message's own
   key-column flags — pgoutput ships the replica identity, so no
-  caller-provided key_cols map is needed,
-- unchanged TOAST columns render as ``unchanged-toast-datum`` exactly
-  like test_decoding, so consumers see one sentinel either way.
+  caller-provided key map is needed,
+- unchanged TOAST columns render as the ``unchanged-toast-datum``
+  sentinel.
 
-Scale posture: identical to pglogical.py — a slot is SERIAL by
-design (WAL commit order IS the contract), so decode is a
-control-plane driver read; executor fan-out happens after parse via
-the envelope DataFrame.  Relation metadata is a tiny per-stream dict
-(pgoutput re-sends a Relation message whenever the schema changes,
-which is also how live drift surfaces mid-stream).
+Scale posture: a slot is SERIAL by design (WAL commit order IS the
+contract), so decode is a control-plane read; executor fan-out
+happens per slot (the sharded reader) or after the source hands rows
+to Spark.  Relation metadata is a tiny per-stream dict (pgoutput
+re-sends a Relation message whenever the schema changes, which is
+also how live drift surfaces mid-stream).
 """
 
 from __future__ import annotations
@@ -52,12 +53,10 @@ __all__ = [
     "create_slot_pgoutput",
     "exported_slot_snapshot",
     "create_publication",
-    "pull_changes_pgoutput",
     "backlog_stats_pgoutput",
     "backlog_plan_pgoutput",
     "giant_commit_plan",
     "chunk_slot_changes_pgoutput",
-    "change_batches_pgoutput",
     "PgReplicationConnection",
     "ReplicationStream",
     "lsn_to_int",
@@ -67,8 +66,9 @@ __all__ = [
 #: PostgreSQL timestamps count microseconds from 2000-01-01 UTC.
 _PG_EPOCH = datetime.datetime(2000, 1, 1, tzinfo=datetime.timezone.utc)
 
-#: test_decoding's rendering of an unchanged TOAST datum — reused so
-#: consumers see ONE sentinel whichever plugin captured the change.
+#: placeholder value for an unchanged TOAST column ('u' in TupleData):
+#: the server did not send the datum, so the text rendering in-core
+#: logical decoding uses for it stands in.
 _TOAST_SENTINEL = "unchanged-toast-datum"
 
 
@@ -184,8 +184,9 @@ def parse_pgoutput(
     origin: str = "any",
 ) -> list[dict]:
     """Decode raw ``(lsn, xid, payload)`` pgoutput messages (from the
-    binary slot functions or walsender XLogData) into CHANGE_SCHEMA
-    dicts — the same shape ``pglogical.parse_test_decoding`` emits.
+    binary slot functions or walsender XLogData) into change dicts
+    (op/table/key/before/after/txid/ts/lsn/commit_lsn) — the input
+    ``pgdatasource._slice_changes`` turns into CHANGE_SCHEMA rows.
 
     ``relations`` carries Relation metadata across calls for a
     LONG-LIVED stream (walsender); pass a dict to persist it.  The
@@ -350,8 +351,7 @@ def parse_pgoutput(
             # A 'K' old tuple is KEY-ONLY: non-key columns arrive as
             # placeholder NULLs (the values were not sent), so keeping
             # them would misreport "column was NULL" — restrict to the
-            # key columns, which also matches test_decoding's old-key
-            # rendering.  'O' (REPLICA IDENTITY FULL) keeps everything.
+            # key columns.  'O' (REPLICA IDENTITY FULL) keeps everything.
             if kind == "I":
                 tag = r.take(1)
                 if tag != b"N":
@@ -435,9 +435,9 @@ def create_slot_pgoutput(params: PgParams, slot: str) -> str:
         return row.rows[0][0]
 
 
-def exported_slot_snapshot(params: PgParams, slot: str, plugin: str = "pgoutput"):
-    """ATOMIC bootstrap->stream handoff: create the logical slot via
-    the walsender's ``CREATE_REPLICATION_SLOT ... LOGICAL <plugin>
+def exported_slot_snapshot(params: PgParams, slot: str):
+    """ATOMIC bootstrap->stream handoff: create the pgoutput slot via
+    the walsender's ``CREATE_REPLICATION_SLOT ... LOGICAL pgoutput
     (SNAPSHOT 'export')`` and yield ``(consistent_point, snapshot_id)``
     as a context manager.
 
@@ -467,16 +467,13 @@ def exported_slot_snapshot(params: PgParams, slot: str, plugin: str = "pgoutput"
 
     from pgshovel_spark.sources.pglogical import _check_slot
 
-    if plugin not in ("pgoutput", "test_decoding"):
-        raise ValueError(f"unknown plugin {plugin!r}")
-
     @contextmanager
     def _ctx():
         conn = PgReplicationConnection(params)
         try:
             res = conn.query(
                 f"CREATE_REPLICATION_SLOT {_check_slot(slot)} LOGICAL "
-                f"{plugin} (SNAPSHOT 'export')"
+                "pgoutput (SNAPSHOT 'export')"
             )[0]
             # (slot_name, consistent_point, snapshot_name, output_plugin)
             _name, consistent_point, snapshot_id, _plug = res.rows[0]
@@ -609,9 +606,11 @@ def raw_slot_changes_pgoutput(
 ) -> list[tuple[str, int, bytes]]:
     """Raw ``(lsn, xid, payload)`` rows from the binary slot functions
     — the ONE construction of the peek/get SQL (options, publication,
-    bound), shared by ``pull_changes_pgoutput`` and the native
-    streaming source (pgdatasource.py) so the two paths cannot
-    drift."""
+    bound), used by the native streaming source (pgdatasource.py).
+    ``limit`` is the server's ``upto_nchanges``: it counts raw frames
+    (Begin/Relation/Commit included, not changes), and a non-streamed
+    transaction's frames are all emitted at its commit record, so a
+    bounded peek still ends on a transaction boundary."""
     import re
 
     from pgshovel_spark.sources.pglogical import _check_slot
@@ -928,72 +927,6 @@ def chunk_slot_changes_pgoutput(
     with params.connect() as c:
         res = c.query(sql)[0]
     return [(lsn, int(xid), data) for lsn, xid, data in res.rows]
-
-
-def pull_changes_pgoutput(
-    spark,
-    params: PgParams,
-    slot: str,
-    publication: str,
-    peek: bool = True,
-    publisher: str | None = None,
-    epoch: int = 0,
-    proto_version: int = 1,
-    streaming: bool = False,
-    work_mem: str | None = None,
-    origin: str = "any",
-):
-    """Drain (peek=False) or peek (default) the pgoutput slot through
-    ``pg_logical_slot_*_binary_changes`` and return
-    ``(envelope DataFrame, max_lsn)`` — the exact contract of
-    ``pglogical.pull_changes``, same two-phase watermark discipline
-    (advance() after the batch commits downstream).
-
-    ``proto_version=2, streaming=True`` enables in-progress
-    transaction streaming (PG 14+): transactions larger than
-    ``logical_decoding_work_mem`` arrive as StreamStart/Stop segments
-    and commit via StreamCommit — the decoder reassembles them in
-    commit order, so the envelope is identical either way.
-    ``work_mem`` (e.g. ``'64kB'``) sets that GUC on the decoding
-    session, forcing the streamed path for testing."""
-    from pgshovel_spark.sources.pglogical import _envelope_df
-
-    raw = raw_slot_changes_pgoutput(
-        params,
-        slot,
-        publication,
-        peek=peek,
-        proto_version=proto_version,
-        streaming=streaming,
-        work_mem=work_mem,
-    )
-    parsed = parse_pgoutput(raw, origin=origin)
-    max_lsn = raw[-1][0] if raw else None
-    return _envelope_df(spark, parsed, publisher or slot, epoch), max_lsn
-
-
-def change_batches_pgoutput(
-    spark,
-    params: PgParams,
-    slot: str,
-    publication: str,
-    max_pulls: int | None = None,
-):
-    """Micro-batch loop over a pgoutput slot — the exact contract of
-    ``pglogical.change_batches`` (the shared
-    ``deferred_commit_batches`` watermark discipline)."""
-    from pgshovel_spark.sources.pglogical import (
-        advance,
-        deferred_commit_batches,
-    )
-
-    return deferred_commit_batches(
-        lambda: pull_changes_pgoutput(
-            spark, params, slot, publication, peek=True
-        ),
-        lambda lsn: advance(params, slot, lsn),
-        max_pulls,
-    )
 
 
 # ---------------------------------------------------------------------------

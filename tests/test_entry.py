@@ -5,6 +5,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
@@ -34,6 +36,19 @@ def test_session_ships_the_jit_alignment_config(spark):
     s = get_session("cfgtest")
     assert s.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
     assert s.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_env_size_validates_spark_size_strings(monkeypatch):
+    """Size knobs fail at validation with the env var named: '256m'
+    passes, '256 m' (which Spark's byte-string parser rejects) fails
+    here instead of later as a JVM parse error."""
+    from pgshovel_spark.session import _env_size
+
+    monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "256m")
+    assert _env_size("SPARK_GRAFT_MAX_PARTITION_BYTES", default="1m") == "256m"
+    monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "256 m")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_MAX_PARTITION_BYTES"):
+        _env_size("SPARK_GRAFT_MAX_PARTITION_BYTES", default="1m")
 
 
 def test_survey_section2_matches_registry():

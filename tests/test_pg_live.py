@@ -6,8 +6,9 @@ wire-protocol client (sources/pgwire.py).  These tests run every
 previously env-blocked Postgres surface against the real engine:
 
 - wire client type/error conformance
-- logical-decoding capture into the CHANGE_SCHEMA envelope
-  (sources/pglogical.py) + the peek/advance watermark contract
+- pgoutput logical-decoding capture into the CHANGE_SCHEMA envelope
+  (sources/pgoutput.py + the native source, sources/pgdatasource.py)
+  + the peek/advance watermark contract
 - Spark-side replay of the captured envelope == live table state
 - MVCC parallel snapshot bootstrap (pg_export_snapshot + SET
   TRANSACTION SNAPSHOT per executor connection) under concurrent
@@ -60,6 +61,43 @@ def pg():
     server.stop()
 
 
+def _slot(pg, table: str, slot: str, pub: str) -> None:
+    """Publish ``table`` and create a pgoutput slot on it."""
+    from pgshovel_spark.sources import pgoutput as po
+
+    po.create_publication(pg, pub, [table])
+    po.create_slot_pgoutput(pg, slot)
+
+
+def _envelope(spark, pg, slot: str, pub: str, origin: str = "any", **peek):
+    """Peek ``slot`` through the one capture path (raw pgoutput frames
+    -> ``parse_pgoutput`` -> the native source's ``_slice_changes`` and
+    ``_changes_to_batches``) and return ``(CHANGE_SCHEMA DataFrame,
+    last frame lsn or None)``; ``peek`` passes through to
+    ``raw_slot_changes_pgoutput``."""
+    import pyarrow as pa
+
+    from pgshovel_spark.sources import pgoutput as po
+    from pgshovel_spark.sources.pgdatasource import (
+        _changes_to_batches,
+        _slice_changes,
+    )
+    from pgshovel_spark.streaming.change_stream import CHANGE_SCHEMA
+
+    raw = po.raw_slot_changes_pgoutput(pg, slot, pub, **peek)
+    start = {"lsn": 0, "idx": 0, "seq": 0}
+    rows, _end, _adv = _slice_changes(
+        po.parse_pgoutput(raw, origin=origin), start, None, slot, 0
+    )
+    batches = _changes_to_batches(rows)
+    df = (
+        spark.createDataFrame(pa.Table.from_batches(batches))
+        if batches
+        else spark.createDataFrame([], CHANGE_SCHEMA)
+    )
+    return df, (raw[-1][0] if raw else None)
+
+
 # ---------------------------------------------------------------------------
 # wire client
 # ---------------------------------------------------------------------------
@@ -107,54 +145,82 @@ def test_wire_multi_statement_results(pg):
 
 
 # ---------------------------------------------------------------------------
-# logical decoding -> envelope
+# logical decoding -> envelope, through the native reader's contract
 # ---------------------------------------------------------------------------
 
 
-def test_logical_capture_envelope(spark, pg):
+def test_logical_capture_envelope(pg):
+    """The native reader's own output, without Spark: ``read`` hands
+    back CHANGE_SCHEMA Arrow batches — keys from replica identity, the
+    full before-image of a DELETE under REPLICA IDENTITY FULL, commit
+    timestamps on every change, dense seq, publisher = slot."""
+    from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
+    from pgshovel_spark.streaming.change_stream import CHANGE_SCHEMA
+
     with pg.connect() as c:
         c.query(
-            "create table cap_t(id int primary key, name text, bal numeric(10,2))"
+            "create table lce_t(id int primary key, name text, bal numeric(10,2))"
         )
-        pgl.create_slot(pg, "cap_slot")
-        c.query("insert into cap_t values (1,'ann',10.00),(2,'bob',20.00)")
-        c.query("update cap_t set bal = 15.50 where id = 1")
-        c.query("alter table cap_t replica identity full")
-        c.query("delete from cap_t where id = 2")
-    df, max_lsn = pgl.pull_changes(
-        spark, pg, "cap_slot", key_cols={"cap_t": ["id"]}
+    _slot(pg, "lce_t", "lce_slot", "lce_pub")
+    with pg.connect() as c:
+        c.query("insert into lce_t values (1,'ann',10.00),(2,'bob',20.00)")
+        c.query("update lce_t set bal = 15.50 where id = 1")
+        c.query("alter table lce_t replica identity full")
+        c.query("delete from lce_t where id = 2")
+    rdr = PgShovelSimpleStreamReader(
+        {"sockdir": pg.sockdir, "slot": "lce_slot", "publication": "lce_pub"}
     )
-    rows = df.orderBy("seq").collect()
-    assert [r.op for r in rows] == ["INSERT", "INSERT", "UPDATE", "DELETE"]
-    assert rows[0].after == {"id": "1", "name": "ann", "bal": "10.00"}
-    assert rows[0].key == {"id": "1"}
-    assert rows[2].after["bal"] == "15.50"
-    # replica identity full => DELETE ships the full before-image
-    assert rows[3].before == {"id": "2", "name": "bob", "bal": "20.00"}
-    assert rows[3].after is None and rows[3].key == {"id": "2"}
-    # commit timestamps stamp every change; seq is dense in LSN order
-    assert all(r.ts is not None for r in rows)
-    assert [r.seq for r in rows] == [0, 1, 2, 3]
-    assert max_lsn is not None
-    pgl.drop_slot(pg, "cap_slot")
+    it, end = rdr.read(rdr.initialOffset())
+    batches = list(it)
+    assert [f.name for f in batches[0].schema] == CHANGE_SCHEMA.names
+    rows = [r for b in batches for r in b.to_pylist()]
+    for r in rows:
+        for m in ("key", "before", "after"):
+            r[m] = None if r[m] is None else dict(r[m])
+    assert [r["op"] for r in rows] == ["INSERT", "INSERT", "UPDATE", "DELETE"]
+    assert rows[0]["after"] == {"id": "1", "name": "ann", "bal": "10.00"}
+    assert rows[0]["key"] == {"id": "1"}
+    assert rows[2]["after"]["bal"] == "15.50"
+    assert rows[3]["before"] == {"id": "2", "name": "bob", "bal": "20.00"}
+    assert rows[3]["after"] is None and rows[3]["key"] == rows[3]["before"]
+    assert all(r["ts"] is not None for r in rows)
+    assert [r["seq"] for r in rows] == [0, 1, 2, 3] and end["seq"] == 4
+    assert {r["publisher"] for r in rows} == {"lce_slot"}
+    pgl.drop_slot(pg, "lce_slot")
 
 
-def test_peek_advance_watermark_contract(spark, pg):
+def test_peek_advance_watermark_contract(pg):
+    """The native reader's two-phase watermark: ``read`` PEEKS (a
+    batch read twice, or re-read by a fresh reader after a crash
+    before ``commit``, replays identically), and only ``commit``
+    moves the slot — after it a fresh reader starts past the batch."""
+    from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
+
     with pg.connect() as c:
         c.query("create table wm_t(id int primary key, v int)")
-        pgl.create_slot(pg, "wm_slot")
+    _slot(pg, "wm_t", "wm_slot", "wm_pub")
+    opts = {"sockdir": pg.sockdir, "slot": "wm_slot", "publication": "wm_pub"}
+
+    def ids(it):
+        return [dict(a)["id"] for b in it for a in b.column("after").to_pylist()]
+
+    with pg.connect() as c:
         c.query("insert into wm_t values (1, 100)")
-    d1, lsn1 = pgl.pull_changes(spark, pg, "wm_slot")
-    d2, lsn2 = pgl.pull_changes(spark, pg, "wm_slot")
-    # peek is non-destructive: a crashed consumer re-reads the batch
-    assert d1.count() == d2.count() == 1 and lsn1 == lsn2
-    pgl.advance(pg, "wm_slot", lsn1)  # downstream commit -> move watermark
-    d3, lsn3 = pgl.pull_changes(spark, pg, "wm_slot")
-    assert d3.count() == 0 and lsn3 is None
+    rdr = PgShovelSimpleStreamReader(opts)
+    start = rdr.initialOffset()
+    it1, end1 = rdr.read(start)
+    it2, end2 = rdr.read(start)  # peek is non-destructive
+    assert ids(it1) == ids(it2) == ["1"] and end1 == end2
+    # crash before commit: a fresh reader replays the batch
+    it, _ = PgShovelSimpleStreamReader(opts).read(start)
+    assert ids(it) == ["1"]
+    rdr.commit(end1)  # downstream durable -> move the watermark
     with pg.connect() as c:
         c.query("insert into wm_t values (2, 200)")
-    d4, _ = pgl.pull_changes(spark, pg, "wm_slot")
-    assert [r.after["id"] for r in d4.collect()] == ["2"]
+    it, end = PgShovelSimpleStreamReader(opts).read(start)
+    assert ids(it) == ["2"]  # the committed batch is gone from the slot
+    it, idle = rdr.read(end)
+    assert ids(it) == [] and idle == end
     pgl.drop_slot(pg, "wm_slot")
 
 
@@ -163,7 +229,8 @@ def test_envelope_replay_matches_live_state(spark, pg):
     table exactly — latest op per key in seq order, DELETE removes."""
     with pg.connect() as c:
         c.query("create table rep_t(id int primary key, v text)")
-        pgl.create_slot(pg, "rep_slot")
+    _slot(pg, "rep_t", "rep_slot", "rep_pub")
+    with pg.connect() as c:
         c.query(
             "insert into rep_t select g, 'v' || g from generate_series(1, 50) g"
         )
@@ -171,7 +238,7 @@ def test_envelope_replay_matches_live_state(spark, pg):
         c.query("delete from rep_t where id % 11 = 0")
         c.query("insert into rep_t values (11, 'resurrected')")
         live = {r[0]: r[1] for r in c.query("select id, v from rep_t")[0].rows}
-    df, _ = pgl.pull_changes(spark, pg, "rep_slot", key_cols={"rep_t": ["id"]})
+    df, _ = _envelope(spark, pg, "rep_slot", "rep_pub")
     w = Window.partitionBy(F.col("key")["id"]).orderBy(F.col("seq").desc())
     replayed = (
         df.withColumn("rn", F.row_number().over(w))
@@ -303,19 +370,20 @@ def test_relay_postgres_to_derby_merge(spark, pg, tmp_path):
 
     with pg.connect() as c:
         c.query("create table relay_t(id int primary key, v text)")
-        pgl.create_slot(pg, "relay_slot")
+    _slot(pg, "relay_t", "drelay_slot", "drelay_pub")
+    with pg.connect() as c:
         c.query("insert into relay_t values (1,'a'),(2,'b'),(3,'c')")
         c.query("update relay_t set v = 'a2' where id = 1")
-    d1, lsn1 = pgl.pull_changes(spark, pg, "relay_slot", key_cols={"relay_t": ["id"]})
+    d1, lsn1 = _envelope(spark, pg, "drelay_slot", "drelay_pub")
     apply_batch(d1)
     apply_batch(d1)  # replay before advance: idempotent
-    pgl.advance(pg, "relay_slot", lsn1)
+    pgl.advance(pg, "drelay_slot", lsn1)
     with pg.connect() as c:
         c.query("delete from relay_t where id = 2")
         c.query("insert into relay_t values (4,'d')")
-    d2, lsn2 = pgl.pull_changes(spark, pg, "relay_slot", key_cols={"relay_t": ["id"]})
+    d2, lsn2 = _envelope(spark, pg, "drelay_slot", "drelay_pub")
     apply_batch(d2)
-    pgl.advance(pg, "relay_slot", lsn2)
+    pgl.advance(pg, "drelay_slot", lsn2)
 
     rs = st.executeQuery("SELECT ID, V FROM STATE ORDER BY ID")
     derby_state = []
@@ -327,7 +395,7 @@ def test_relay_postgres_to_derby_merge(spark, pg, tmp_path):
             for r in c.query("select id, v from relay_t order by id")[0].rows
         ]
     assert derby_state == pg_state == [(1, "a2"), (3, "c"), (4, "d")]
-    pgl.drop_slot(pg, "relay_slot")
+    pgl.drop_slot(pg, "drelay_slot")
     con.close()
 
 
@@ -336,7 +404,7 @@ def test_capture_under_concurrent_writers(spark, pg):
     the envelope's (txid, seq) respects the server's serialization."""
     with pg.connect() as c:
         c.query("create table cc_t(id int primary key, who text)")
-        pgl.create_slot(pg, "cc_slot")
+    _slot(pg, "cc_t", "cc_slot", "cc_pub")
 
     def writer(tag: str, base: int):
         with pg.connect() as c:
@@ -346,7 +414,7 @@ def test_capture_under_concurrent_writers(spark, pg):
     t1 = threading.Thread(target=writer, args=("t1", 1000))
     t2 = threading.Thread(target=writer, args=("t2", 2000))
     t1.start(); t2.start(); t1.join(); t2.join()
-    df, _ = pgl.pull_changes(spark, pg, "cc_slot", key_cols={"cc_t": ["id"]})
+    df, _ = _envelope(spark, pg, "cc_slot", "cc_pub")
     rows = df.orderBy("seq").collect()
     assert len(rows) == 40
     assert {r.after["id"] for r in rows} == {
@@ -435,32 +503,8 @@ def test_pgwire_backend_exactly_one_winner(pg):
 
 
 # ---------------------------------------------------------------------------
-# micro-batch loop + live schema drift
+# live schema drift + adversarial values
 # ---------------------------------------------------------------------------
-
-
-def test_change_batches_deferred_commit(spark, pg):
-    """The generator advances a batch's LSN watermark only when the
-    consumer asks for the NEXT batch — abandoning it mid-batch
-    replays the batch (the incremental_pulls contract, on the slot)."""
-    with pg.connect() as c:
-        c.query("create table mb_t(id int primary key, v int)")
-        pgl.create_slot(pg, "mb_slot")
-        c.query("insert into mb_t values (1, 10)")
-    gen = pgl.change_batches(spark, pg, "mb_slot")
-    first = next(gen).collect()
-    assert [r.after["id"] for r in first] == ["1"]
-    gen.close()  # crash before the next pull: watermark NOT advanced
-    with pg.connect() as c:
-        c.query("insert into mb_t values (2, 20)")
-    seen = []
-    for df in pgl.change_batches(spark, pg, "mb_slot"):
-        seen.extend(r.after["id"] for r in df.collect())
-    # the abandoned batch replayed (id 1 again), then id 2, then drained
-    assert seen == ["1", "2"]
-    # a fresh loop after full consumption starts empty
-    assert list(pgl.change_batches(spark, pg, "mb_slot")) == []
-    pgl.drop_slot(pg, "mb_slot")
 
 
 def test_live_drift_widen_on_postgres(pg):
@@ -509,10 +553,11 @@ def test_live_drift_widen_on_postgres(pg):
 
 
 def test_decoder_adversarial_values(spark, pg):
-    """Values designed to break a naive test_decoding parser — quotes,
+    """Values designed to break a naive change decoder — quotes,
     doubled quotes, spaces, newlines, brackets, the literal words
-    'null' and 'old-key:', unicode, empty strings, arrays — round-trip
-    decode -> envelope == live table state."""
+    'null' and 'old-key:', unicode, empty strings, arrays, and a real
+    SQL NULL next to the string 'null' — round-trip live pgoutput
+    capture -> envelope == live table state."""
     nasty = [
         "it's",
         "double''quoted",
@@ -528,51 +573,24 @@ def test_decoder_adversarial_values(spark, pg):
     ]
     with pg.connect() as c:
         c.query("create table adv_t(id int primary key, v text, arr int[])")
-        pgl.create_slot(pg, "adv_slot")
+    _slot(pg, "adv_t", "adv_slot", "adv_pub")
+    with pg.connect() as c:
         for i, v in enumerate(nasty):
             esc = v.replace("'", "''")
             c.query(
                 f"insert into adv_t values ({i}, '{esc}', ARRAY[{i}, {i + 1}])"
             )
+        c.query(f"insert into adv_t values ({len(nasty)}, null, null)")
         live = {r[0]: r[1] for r in c.query("select id, v from adv_t")[0].rows}
-    df, _ = pgl.pull_changes(spark, pg, "adv_slot", key_cols={"adv_t": ["id"]})
-    rows = df.collect()
-    assert len(rows) == len(nasty)
+    df, _ = _envelope(spark, pg, "adv_slot", "adv_pub")
+    rows = df.orderBy("seq").collect()
+    assert len(rows) == len(nasty) + 1
     got = {int(r.after["id"]): r.after["v"] for r in rows}
-    assert got == live == dict(enumerate(nasty))
-    # arrays pass through as their text rendering
+    assert got == live == {**dict(enumerate(nasty)), len(nasty): None}
+    # arrays pass through as their text rendering; SQL NULL stays NULL
     assert rows[0].after["arr"] == "{0,1}"
+    assert rows[-1].after["arr"] is None and rows[5].after["v"] == "null"
     pgl.drop_slot(pg, "adv_slot")
-
-
-def test_parse_tuple_property():
-    """Pure-parser property test: random column values rendered the
-    way test_decoding renders them parse back exactly."""
-    import random
-    import string
-
-    rng = random.Random(20260816)
-    alphabet = string.ascii_letters + string.digits + " '\"[]{}:,.\n\té"
-    for _ in range(300):
-        cols = {}
-        rendered = []
-        for ci in range(rng.randint(1, 6)):
-            name = f"c{ci}"
-            if rng.random() < 0.15:
-                cols[name] = None
-                rendered.append(f"{name}[integer]:null")
-            elif rng.random() < 0.4:
-                v = str(rng.randint(-10**9, 10**9))
-                cols[name] = v
-                rendered.append(f"{name}[bigint]:{v}")
-            else:
-                v = "".join(
-                    rng.choice(alphabet) for _ in range(rng.randint(0, 12))
-                )
-                cols[name] = v
-                rendered.append(f"{name}[text]:'" + v.replace("'", "''") + "'")
-        parsed, _ = pgl._parse_tuple(" ".join(rendered), 0)
-        assert parsed == cols, (rendered, parsed, cols)
 
 
 def test_buffered_sock_chunk_boundaries():
@@ -735,16 +753,16 @@ def test_lsn_roundtrip():
 
 
 # ---------------------------------------------------------------------------
-# binary pgoutput decoding — LIVE twins of the test_decoding tests
+# binary pgoutput decoding, live
 # ---------------------------------------------------------------------------
 
 
 def test_pgoutput_capture_envelope(spark, pg):
-    """Twin of test_logical_capture_envelope on the pgoutput plugin:
-    same workload, same envelope — keys now come from the Relation
-    message's replica-identity flags (no caller key_cols), so after
-    REPLICA IDENTITY FULL the key widens to all columns (the identity
-    IS the key in pgoutput semantics)."""
+    """Live capture into the CHANGE_SCHEMA envelope: keys come from the
+    Relation message's replica-identity flags, so after REPLICA
+    IDENTITY FULL the key widens to all columns (the identity IS the
+    key in pgoutput semantics) and DELETE ships the full before-image;
+    commit timestamps stamp every change and seq is dense."""
     from pgshovel_spark.sources import pgoutput as po
 
     with pg.connect() as c:
@@ -758,7 +776,7 @@ def test_pgoutput_capture_envelope(spark, pg):
         c.query("update pocap_t set bal = 15.50 where id = 1")
         c.query("alter table pocap_t replica identity full")
         c.query("delete from pocap_t where id = 2")
-    df, max_lsn = po.pull_changes_pgoutput(spark, pg, "pocap_slot", "pocap_pub")
+    df, max_lsn = _envelope(spark, pg, "pocap_slot", "pocap_pub")
     rows = df.orderBy("seq").collect()
     assert [r.op for r in rows] == ["INSERT", "INSERT", "UPDATE", "DELETE"]
     assert rows[0].after == {"id": "1", "name": "ann", "bal": "10.00"}
@@ -782,47 +800,17 @@ def test_pgoutput_peek_advance_watermark(spark, pg):
     po.create_slot_pgoutput(pg, "powm_slot")
     with pg.connect() as c:
         c.query("insert into powm_t values (1, 100)")
-    d1, lsn1 = po.pull_changes_pgoutput(spark, pg, "powm_slot", "powm_pub")
-    d2, lsn2 = po.pull_changes_pgoutput(spark, pg, "powm_slot", "powm_pub")
+    d1, lsn1 = _envelope(spark, pg, "powm_slot", "powm_pub")
+    d2, lsn2 = _envelope(spark, pg, "powm_slot", "powm_pub")
     assert d1.count() == d2.count() == 1 and lsn1 == lsn2
     pgl.advance(pg, "powm_slot", lsn1)
-    d3, lsn3 = po.pull_changes_pgoutput(spark, pg, "powm_slot", "powm_pub")
+    d3, lsn3 = _envelope(spark, pg, "powm_slot", "powm_pub")
     assert d3.count() == 0 and lsn3 is None
     with pg.connect() as c:
         c.query("insert into powm_t values (2, 200)")
-    d4, _ = po.pull_changes_pgoutput(spark, pg, "powm_slot", "powm_pub")
+    d4, _ = _envelope(spark, pg, "powm_slot", "powm_pub")
     assert [r.after["id"] for r in d4.collect()] == ["2"]
     pgl.drop_slot(pg, "powm_slot")
-
-
-def test_pgoutput_matches_test_decoding(spark, pg):
-    """BOTH plugins over one workload produce the same envelope
-    (op/table/before/after sequences identical; pgoutput's key comes
-    from replica identity where test_decoding's comes from the
-    caller's key_cols — same values for a pkey table)."""
-    from pgshovel_spark.sources import pgoutput as po
-
-    with pg.connect() as c:
-        c.query("create table potwin_t(id int primary key, v text)")
-    po.create_publication(pg, "potwin_pub", ["potwin_t"])
-    pgl.create_slot(pg, "potwin_td")
-    po.create_slot_pgoutput(pg, "potwin_po")
-    with pg.connect() as c:
-        c.query(
-            "insert into potwin_t select g, 'v' || g from generate_series(1, 25) g"
-        )
-        c.query("update potwin_t set v = 'patched' where id % 5 = 0")
-        c.query("delete from potwin_t where id % 7 = 0")
-    td, _ = pgl.pull_changes(
-        spark, pg, "potwin_td", key_cols={"public.potwin_t": ["id"]}
-    )
-    pod, _ = po.pull_changes_pgoutput(spark, pg, "potwin_po", "potwin_pub")
-    cols = ["op", "table", "key", "before", "after"]
-    a = [tuple(str(r[c]) for c in cols) for r in td.orderBy("seq").collect()]
-    b = [tuple(str(r[c]) for c in cols) for r in pod.orderBy("seq").collect()]
-    assert a == b and len(a) == 33
-    pgl.drop_slot(pg, "potwin_td")
-    pgl.drop_slot(pg, "potwin_po")
 
 
 def test_pgoutput_schema_drift_mid_stream(spark, pg):
@@ -839,7 +827,7 @@ def test_pgoutput_schema_drift_mid_stream(spark, pg):
         c.query("insert into podrift_t values (1, 'before')")
         c.query("alter table podrift_t add column extra int default 5")
         c.query("insert into podrift_t values (2, 'after', 9)")
-    df, _ = po.pull_changes_pgoutput(spark, pg, "podrift_slot", "podrift_pub")
+    df, _ = _envelope(spark, pg, "podrift_slot", "podrift_pub")
     rows = df.orderBy("seq").collect()
     assert rows[0].after == {"id": "1", "v": "before"}
     assert rows[1].after == {"id": "2", "v": "after", "extra": "9"}
@@ -1120,7 +1108,7 @@ def test_kafka_envelope_byte_parity_with_live_capture(spark, pg, tmp_path):
         )
         c.query("update kseam_t set v = 'patched' where id % 4 = 0")
         c.query("delete from kseam_t where id % 9 = 0")
-    env, _ = po.pull_changes_pgoutput(spark, pg, "kseam_slot", "kseam_pub")
+    env, _ = _envelope(spark, pg, "kseam_slot", "kseam_pub")
     env = env.cache()
 
     # producer half: record layout == the kafka source's column set
@@ -1171,33 +1159,6 @@ def test_kafka_envelope_byte_parity_with_live_capture(spark, pg, tmp_path):
     assert parsed_bad.filter(F.col("key").isNotNull()).count() == 0
     env.unpersist()
     pgl.drop_slot(pg, "kseam_slot")
-
-
-def test_pgoutput_change_batches_deferred_commit(spark, pg):
-    """change_batches_pgoutput twins pglogical.change_batches: each
-    batch is peeked, the watermark advances only on the NEXT pull, and
-    exhausting the allowance leaves the last batch unacknowledged."""
-    from pgshovel_spark.sources import pgoutput as po
-
-    with pg.connect() as c:
-        c.query("create table pocb_t(id int primary key, v int)")
-    po.create_publication(pg, "pocb_pub", ["pocb_t"])
-    po.create_slot_pgoutput(pg, "pocb_slot")
-    with pg.connect() as c:
-        c.query("insert into pocb_t values (1, 10)")
-    gen = po.change_batches_pgoutput(spark, pg, "pocb_slot", "pocb_pub", max_pulls=2)
-    b1 = next(gen)
-    assert [r.after["id"] for r in b1.collect()] == ["1"]
-    with pg.connect() as c:
-        c.query("insert into pocb_t values (2, 20)")
-    b2 = next(gen)  # asking for batch 2 commits batch 1's watermark
-    ids = [r.after["id"] for r in b2.collect()]
-    assert ids == ["2"]  # batch 1 acked, not replayed
-    assert list(gen) == []  # allowance exhausted
-    # batch 2 was never acked: a fresh consumer replays it
-    d, _ = po.pull_changes_pgoutput(spark, pg, "pocb_slot", "pocb_pub")
-    assert [r.after["id"] for r in d.collect()] == ["2"]
-    pgl.drop_slot(pg, "pocb_slot")
 
 
 # ---------------------------------------------------------------------------
@@ -1273,8 +1234,8 @@ def test_pgoutput_v2_streamed_equals_unstreamed(spark, pg):
             "insert into pov2_t select g, 'p' || g from generate_series(1, 30000) g"
         )
         c.query("update pov2_t set v = 'x' where id = 7")
-    plain, lsn1 = po.pull_changes_pgoutput(spark, pg, "pov2_slot", "pov2_pub")
-    streamed, lsn2 = po.pull_changes_pgoutput(
+    plain, lsn1 = _envelope(spark, pg, "pov2_slot", "pov2_pub")
+    streamed, lsn2 = _envelope(
         spark, pg, "pov2_slot", "pov2_pub",
         proto_version=2, streaming=True, work_mem="64kB",
     )
@@ -1321,108 +1282,8 @@ def test_pgoutput_v2_walsender_streamed(pg):
 
 
 # ---------------------------------------------------------------------------
-# landing bridge: live capture -> Structured Streaming (round 10)
+# transaction framing, live
 # ---------------------------------------------------------------------------
-
-
-def test_landing_capture_to_stream(spark, pg, tmp_path):
-    """The production join between the serial capture loop and a
-    checkpointable streaming source: LandingCapture lands pgoutput
-    batches with globally rebased seq (persisted across instances),
-    landing_stream replays them in order, and the decoded rows equal
-    the slot's envelope exactly."""
-    from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pglanding import LandingCapture, landing_stream
-
-    with pg.connect() as c:
-        c.query("create table land_t(id int primary key, v text)")
-    po.create_publication(pg, "land_pub", ["land_t"])
-    po.create_slot_pgoutput(pg, "land_slot")
-    landing = str(tmp_path / "landing")
-    cap = LandingCapture(spark, pg, "land_slot", landing, publication="land_pub")
-
-    with pg.connect() as c:
-        c.query("insert into land_t select g, 'a' || g from generate_series(1, 30) g")
-    assert cap.pull_once() == 30
-    with pg.connect() as c:
-        c.query("update land_t set v = 'u' where id <= 5")
-        c.query("delete from land_t where id = 9")
-    assert cap.pull_once() == 6
-    assert cap.pull_once() == 0  # idle slot
-    assert cap.seq_base == 36 and cap.batches == 2
-
-    # a NEW capture instance resumes the persisted seq base (crash-
-    # restart shape) and keeps the total order monotone
-    cap2 = LandingCapture(spark, pg, "land_slot", landing, publication="land_pub")
-    assert cap2.seq_base == 36
-    with pg.connect() as c:
-        c.query("insert into land_t values (99, 'late')")
-    assert cap2.drain() == 1
-
-    got: list = []
-    q = (
-        landing_stream(spark, landing)
-        .writeStream.foreachBatch(lambda b, _i: got.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    assert len(got) == 37
-    seqs = sorted(r.seq for r in got)
-    assert seqs == list(range(37))  # dense global order across batches
-    ops = {r.op for r in got}
-    assert ops == {"INSERT", "UPDATE", "DELETE"}
-    pgl.drop_slot(pg, "land_slot")
-
-
-def test_landing_capture_walsender_transport(spark, pg, tmp_path):
-    """LandingCapture over the persistent walsender session: same
-    landing layout and seq contract as the SQL transport, watermark
-    confirmed via Standby Status Update — a restart sees nothing
-    already confirmed, and unconfirmed work replays."""
-    from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pglanding import LandingCapture, landing_stream
-
-    with pg.connect() as c:
-        c.query("create table lws_t(id int primary key, v text)")
-    po.create_publication(pg, "lws_pub", ["lws_t"])
-    po.create_slot_pgoutput(pg, "lws_slot")
-    landing = str(tmp_path / "landing")
-    cap = LandingCapture(
-        spark, pg, "lws_slot", landing,
-        publication="lws_pub", transport="walsender",
-    )
-    try:
-        with pg.connect() as c:
-            c.query("insert into lws_t select g, 'a' || g from generate_series(1, 40) g")
-            c.query("update lws_t set v = 'u' where id <= 4")
-        n = cap.pull_once(max_seconds=8.0)
-        assert n == 44
-        assert cap.pull_once(max_seconds=1.0) == 0  # idle
-        # the status update moved the durable watermark
-        with pg.connect() as c:
-            flushed = c.one(
-                "select confirmed_flush_lsn::text from pg_replication_slots"
-                " where slot_name = 'lws_slot'"
-            )
-        assert po.lsn_to_int(flushed) > 0
-    finally:
-        cap.close()
-
-    got: list = []
-    q = (
-        landing_stream(spark, landing)
-        .writeStream.foreachBatch(lambda b, _i: got.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    assert len(got) == 44
-    assert sorted(r.seq for r in got) == list(range(44))
-    assert all(r.ts is not None for r in got)
-    pgl.drop_slot(pg, "lws_slot")
 
 
 def test_pgoutput_multi_table_transaction_atomicity(spark, pg):
@@ -1452,7 +1313,7 @@ def test_pgoutput_multi_table_transaction_atomicity(spark, pg):
         )
         # txn 3: single table
         c.query("insert into mta_b values (2, 'b2')")
-    df, _ = po.pull_changes_pgoutput(spark, pg, "mta_slot", "mta_pub")
+    df, _ = _envelope(spark, pg, "mta_slot", "mta_pub")
     rows = df.orderBy("seq").collect()
     assert [(r.table, r.after["id"]) for r in rows] == [
         ("public.mta_a", "1"), ("public.mta_b", "1"),
@@ -1526,21 +1387,28 @@ def test_pgoutput_tuple_roundtrip_property():
 # ---------------------------------------------------------------------------
 
 
-def test_test_decoding_truncate_decodes(spark, pg):
-    """TRUNCATE must decode on the test_decoding path (parity with
-    pgoutput 'T') — the strict unparseable-line rule would otherwise
-    wedge the capture loop forever on the first truncation."""
+def test_pgoutput_truncate_decodes_live(spark, pg):
+    """A live multi-table TRUNCATE decodes to one TRUNCATE change per
+    truncated relation, in commit order between the surrounding
+    inserts (the decoder's 'T' frame, beyond its unit tests)."""
+    from pgshovel_spark.sources import pgoutput as po
+
     with pg.connect() as c:
         c.query("create table tdtr_a(id int primary key)")
         c.query("create table tdtr_b(id int primary key)")
-        pgl.create_slot(pg, "tdtr_slot")
+    po.create_publication(pg, "tdtr_pub", ["tdtr_a", "tdtr_b"])
+    po.create_slot_pgoutput(pg, "tdtr_slot")
+    with pg.connect() as c:
         c.query("insert into tdtr_a values (1)")
         c.query("truncate tdtr_a, tdtr_b")
         c.query("insert into tdtr_a values (2)")
-    df, lsn = pgl.pull_changes(spark, pg, "tdtr_slot")
+    df, lsn = _envelope(spark, pg, "tdtr_slot", "tdtr_pub")
     rows = df.orderBy("seq").collect()
     assert [r.op for r in rows] == ["INSERT", "TRUNCATE", "TRUNCATE", "INSERT"]
     assert {rows[1].table, rows[2].table} == {"public.tdtr_a", "public.tdtr_b"}
+    # both truncations belong to ONE transaction with its commit ts
+    assert rows[1].txid == rows[2].txid and rows[1].ts == rows[2].ts
+    assert rows[1].key is None and rows[1].after is None and lsn is not None
     pgl.drop_slot(pg, "tdtr_slot")
 
 
@@ -1660,104 +1528,64 @@ def test_buffered_sock_timeout_preserves_partial_bytes():
     assert rd.read_exact(2) == b"ef"
 
 
-def test_landing_replay_superset_replaces_existing_batch_dir(spark, pg, tmp_path):
-    """The REAL crash window: parquet dir renamed, seq base not yet
-    persisted, slot not yet advanced.  The restarted capture's replay
-    pull is UNBOUNDED — it returns the original batch PLUS anything
-    committed since — so the replay must REPLACE the existing
-    directory (skipping it would confirm the new rows without landing
-    them), must not raise path-exists, and the landed stream must
-    carry every committed row exactly once at dense seqs."""
-    from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pglanding import LandingCapture, landing_stream
-
-    with pg.connect() as c:
-        c.query("create table lrp_t(id int primary key)")
-    po.create_publication(pg, "lrp_pub", ["lrp_t"])
-    po.create_slot_pgoutput(pg, "lrp_slot")
-    landing = str(tmp_path / "landing")
-    cap = LandingCapture(spark, pg, "lrp_slot", landing, publication="lrp_pub")
-    with pg.connect() as c:
-        c.query("insert into lrp_t values (1), (2), (3)")
-    # crash window: land WITHOUT advancing the slot or (then) the seq
-    df, _lsn = po.pull_changes_pgoutput(spark, pg, "lrp_slot", "lrp_pub")
-    cap._land(df, 3)
-    with open(f"{landing}/_seq_base", "w") as f:
-        f.write("0")  # seq persist "lost" in the crash
-    # more commits happen before the restart
-    with pg.connect() as c:
-        c.query("insert into lrp_t values (4), (5), (6)")
-    cap2 = LandingCapture(spark, pg, "lrp_slot", landing, publication="lrp_pub")
-    assert cap2.seq_base == 0
-    assert cap2.pull_once() == 6  # superset replay over the old b_0
-    assert cap2.seq_base == 6 and cap2.pull_once() == 0
-
-    got: list = []
-    q = (
-        landing_stream(spark, landing)
-        .writeStream.foreachBatch(lambda b, _i: got.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    assert sorted(int(r.after["id"]) for r in got) == [1, 2, 3, 4, 5, 6]
-    assert sorted(r.seq for r in got) == list(range(6))
-    pgl.drop_slot(pg, "lrp_slot")
-
-
-def test_landing_walsender_survives_backend_kill(spark, pg, tmp_path):
-    """Failover resilience: pg_terminate_backend on the walsender mid-
-    capture must not lose or duplicate landed data — the capture loop
-    reconnects, the slot replays everything past confirmed_flush_lsn,
-    and the landed union equals the committed workload exactly."""
-    from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pglanding import LandingCapture, landing_stream
+def test_pgdatasource_walsender_survives_backend_kill(pg):
+    """Failover resilience of the native reader on the walsender
+    transport: pg_terminate_backend on its push session between reads
+    must not lose or duplicate a change — the reader reconnects, the
+    slot replays everything past confirmed_flush_lsn, and the
+    position filter drops what was already delivered."""
+    from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
 
     with pg.connect() as c:
         c.query("create table fok_t(id int primary key, v text)")
-    po.create_publication(pg, "fok_pub", ["fok_t"])
-    po.create_slot_pgoutput(pg, "fok_slot")
-    landing = str(tmp_path / "landing")
-    cap = LandingCapture(
-        spark, pg, "fok_slot", landing,
-        publication="fok_pub", transport="walsender",
+    _slot(pg, "fok_t", "fok_slot", "fok_pub")
+    rdr = PgShovelSimpleStreamReader(
+        {
+            "sockdir": pg.sockdir,
+            "slot": "fok_slot",
+            "publication": "fok_pub",
+            "transport": "walsender",
+            "poll_seconds": "2.0",
+        }
     )
+    got: list = []
+    cur = rdr.initialOffset()
+
+    def drain(n_rows):
+        nonlocal cur
+        for _ in range(20):
+            if len(got) >= n_rows:
+                return
+            it, end = rdr.read(cur)
+            got.extend(r for b in it for r in b.to_pylist())
+            if end != cur:
+                rdr.commit(end)
+                cur = end
+
     try:
         with pg.connect() as c:
             c.query("insert into fok_t select g, 'a' || g from generate_series(1, 20) g")
-        assert cap.pull_once(max_seconds=8.0) == 20
-
-        # kill the walsender backend under the live session
+        drain(20)  # the first read peeks; its commit hands over to push
         with pg.connect() as c:
+            c.query("insert into fok_t select g, 'b' || g from generate_series(21, 25) g")
+        drain(25)
+        assert rdr._ws is not None  # steady state rides the push session
+        with pg.connect() as c:  # kill the walsender under the reader
             killed = c.query(
                 "select pg_terminate_backend(active_pid)"
                 " from pg_replication_slots where slot_name = 'fok_slot'"
             )[0].rows[0][0]
         assert killed is True
         with pg.connect() as c:
-            c.query("insert into fok_t select g, 'b' || g from generate_series(21, 35) g")
-        # first pull hits the dead socket, reconnects, and captures
-        got = 0
-        for _ in range(5):
-            got += cap.pull_once(max_seconds=8.0)
-            if got >= 15:
-                break
-        assert got == 15
+            c.query("insert into fok_t select g, 'c' || g from generate_series(26, 35) g")
+        drain(35)
     finally:
-        cap.close()
-
-    rows: list = []
-    q = (
-        landing_stream(spark, landing)
-        .writeStream.foreachBatch(lambda b, _i: rows.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    ids = sorted(int(r.after["id"]) for r in rows)
+        rdr._close_ws()
+    ids = sorted(int(dict(r["after"])["id"]) for r in got)
     assert ids == list(range(1, 36))  # nothing lost, nothing duplicated
+    assert [r["seq"] for r in got] == list(range(35))
+    assert all(r["ts"] is not None for r in got)
+    assert _wait_for(lambda: not _slot_active(pg, "fok_slot"), timeout=30)
     pgl.drop_slot(pg, "fok_slot")
 
 
@@ -1826,7 +1654,7 @@ def test_pgdatasource_offset_algebra_unit():
     from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
 
     rdr = PgShovelSimpleStreamReader(
-        {"sockdir": "/nonexistent", "slot": "s", "plugin": "test_decoding"}
+        {"sockdir": "/nonexistent", "slot": "s", "publication": "p"}
     )
 
     def ch(op, commit_lsn, change_lsn, key):
@@ -1856,7 +1684,7 @@ def test_pgdatasource_offset_algebra_unit():
 
     short = b1  # txn A's rows vanished
     with _p.raises(RuntimeError, match="cannot replay"):
-        rdr._peek_parse = lambda: short
+        rdr._peek_parse = lambda limit: (short, len(short))
         list(rdr.readBetweenOffsets(end1, end2))
 
 
@@ -1988,43 +1816,6 @@ def test_pgdatasource_checkpoint_restart_exactly_once(spark, pg, tmp_path):
         q.stop()
         q.awaitTermination(30)
     pgl.drop_slot(pg, "ndr_slot")
-
-
-def test_pgdatasource_test_decoding_plugin(spark, pg, tmp_path):
-    """The same source over the SQL-reachable test_decoding plugin
-    with caller-supplied key columns — plugin choice is an option, not
-    a code path consumers can see."""
-    from pgshovel_spark.sources.pgdatasource import register_pgshovel
-
-    with pg.connect() as c:
-        c.query("create table ntd_t(id int primary key, v text)")
-    pgl.create_slot(pg, "ntd_slot")
-    with pg.connect() as c:
-        c.query("insert into ntd_t values (1, 'a'), (2, 'b')")
-        c.query("delete from ntd_t where id = 1")
-
-    register_pgshovel(spark)
-    got: list = []
-    q = (
-        spark.readStream.format("pgshovel")
-        .option("sockdir", pg.sockdir)
-        .option("slot", "ntd_slot")
-        .option("plugin", "test_decoding")
-        .option("key_cols", '{"ntd_t": ["id"]}')
-        .load()
-        .writeStream.foreachBatch(lambda b, _i: got.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        assert _wait_for(lambda: len(got) == 3), f"got {len(got)}"
-        assert sorted(r.seq for r in got) == [0, 1, 2]
-        d = [r for r in got if r.op == "DELETE"][0]
-        assert d.key == {"id": "1"} and d.ts is not None
-    finally:
-        q.stop()
-    pgl.drop_slot(pg, "ntd_slot")
 
 
 def test_pgoutput_decoder_malformed_metadata():
@@ -2214,12 +2005,10 @@ def test_pgoutput_origin_filter_live(spark, pg):
     with pg.connect() as c:
         c.query("insert into orig_t values (3, 'local2')")
 
-    df_all, _ = po.pull_changes_pgoutput(
-        spark, pg, "orig_slot", "orig_pub", origin="any"
-    )
+    df_all, _ = _envelope(spark, pg, "orig_slot", "orig_pub", origin="any")
     ids_all = sorted(r.after["id"] for r in df_all.collect())
     assert ids_all == ["1", "2", "3"]
-    df_local, _ = po.pull_changes_pgoutput(
+    df_local, _ = _envelope(
         spark, pg, "orig_slot", "orig_pub", origin="none"
     )
     ids_local = sorted(r.after["id"] for r in df_local.collect())
@@ -4499,6 +4288,9 @@ def test_sharded_bounded_multi_commit_stream_drain(spark, pg, tmp_path):
     assert spans[0][0] == 0 and spans[-1][1] == 59_999
     for (_a0, a1), (b0, _b1) in zip(spans, spans[1:]):
         assert b0 == a1 + 1
+    # a peek the stopped query's python worker started still holds the
+    # slot for a moment after awaitTermination returns
+    assert _wait_for(lambda: not _slot_active(pp, "shr_slot_mc"), timeout=30)
     pgl.drop_slot(pp, "shr_slot_mc")
 
 
@@ -4851,80 +4643,159 @@ def test_rebootstrap_self_heal_end_exact(spark, tmp_path):
         server.stop()
 
 
-def test_simple_reader_max_changes_caps_batches(pg):
-    """The single-slot reader's ``max_changes`` is now a real BATCH
-    bound, not just a peek-window hint: a 100-row transaction under
-    max_changes=30 drains as [30, 30, 30, 10], commits mid-commit
-    advance the slot only to the last complete boundary ('adv' — here
-    none exists, so the watermark holds), seq stays dense and the
-    uncommitted-range replay contract still holds."""
-    import dataclasses
-
-    from pgshovel_spark.sources import pgoutput as po
+def _capped_reader(pp, name: str, rows_sql: list[str], max_changes: int):
+    """A fresh table/publication/slot ``<name>_t/_pub/_slot`` in the
+    ``pp`` database, the workload committed (one transaction per
+    statement), and a simple reader capped at ``max_changes``."""
     from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
 
-    with pg.connect() as c:
-        c.query("create database smp_cap")
-    pp = dataclasses.replace(pg, database="smp_cap")
     with pp.connect() as c:
-        c.query("create table cap_t(id bigint primary key, v text)")
-    po.create_publication(pp, "cap_pub", ["cap_t"])
-    po.create_slot_pgoutput(pp, "cap_slot")
+        c.query(f"create table {name}_t(id bigint primary key, v text)")
+    _slot(pp, f"{name}_t", f"{name}_slot", f"{name}_pub")
     with pp.connect() as c:
-        pre_flush = c.one(
-            "select confirmed_flush_lsn::text from pg_replication_slots"
-            " where slot_name = 'cap_slot'"
-        )
-        c.query(
-            "insert into cap_t select g, 'v' || g"
-            " from generate_series(1, 100) g"
-        )
-    rdr = PgShovelSimpleStreamReader(
+        for q in rows_sql:
+            c.query(q.format(t=f"{name}_t"))
+    return PgShovelSimpleStreamReader(
         {
             "sockdir": pp.sockdir,
-            "database": "smp_cap",
-            "slot": "cap_slot",
-            "publication": "cap_pub",
-            "max_changes": "30",
+            "database": pp.database,
+            "slot": f"{name}_slot",
+            "publication": f"{name}_pub",
+            "max_changes": str(max_changes),
         }
     )
-    cur = rdr.initialOffset()
+
+
+def _engine_order_drain(rdr) -> tuple[list, list]:
+    """Drive a simple reader in the engine's order: batch N+1 is
+    planned (``read``) BEFORE ``commit(N)`` runs, and an idle read
+    commits nothing — so the LAST batch stays uncommitted, exactly as
+    in a running query until new data arrives.  Returns the batch
+    sizes and end offsets."""
+    cur, prev = rdr.initialOffset(), None
     sizes, ends = [], []
-    for _ in range(10):
+    for _ in range(60):
         it, end = rdr.read(cur)
         n = sum(b.num_rows for b in it)
         if n == 0:
             assert end == cur  # idle reproduces the start EXACTLY
             break
+        if prev is not None:
+            rdr.commit(prev)
         sizes.append(n)
         ends.append(end)
-        if len(ends) == 2:
-            # replay contract for a capped, NOT-yet-committed range:
-            # batch 2 re-produces exactly (the restart path)
-            replay = list(rdr.readBetweenOffsets(ends[0], ends[1]))
-            assert sum(b.num_rows for b in replay) == 30
-        rdr.commit(end)
-        cur = end
+        prev = cur = end
+    return sizes, ends
+
+
+def _confirmed_flush(pp, slot: str) -> int:
+    from pgshovel_spark.sources.pgoutput import lsn_to_int
+
+    with pp.connect() as c:
+        return lsn_to_int(
+            c.one(
+                "select confirmed_flush_lsn::text from pg_replication_slots"
+                f" where slot_name = '{slot}'"
+            )
+        )
+
+
+@pytest.fixture(scope="module")
+def cap_db(pg):
+    import dataclasses
+
+    with pg.connect() as c:
+        c.query("create database smp_cap")
+    return dataclasses.replace(pg, database="smp_cap")
+
+
+def test_simple_reader_max_changes_caps_batches(cap_db):
+    """The single-slot reader's ``max_changes`` is a real BATCH bound:
+    a 100-row transaction under max_changes=30 drains as
+    [30, 30, 30, 10] in engine order, mid-commit ends advance the slot
+    only to the last complete boundary ('adv' — here none exists, so
+    the watermark holds), seq stays dense and the pending batch
+    replays exactly (the restart path)."""
+    pp = cap_db
+    rdr = _capped_reader(
+        pp, "cap",
+        ["insert into {t} select g, 'v' || g from generate_series(1, 100) g"],
+        30,
+    )
+    pre_flush = _confirmed_flush(pp, "cap_slot")
+    sizes, ends = _engine_order_drain(rdr)
     assert sizes == [30, 30, 30, 10], sizes
+    assert [e["seq"] for e in ends] == [30, 60, 90, 100]
     # the three mid-commit ends carry a safe advance boundary; with no
     # complete earlier transaction it is 0 and the watermark held
     assert all("adv" in e for e in ends[:3]) and "adv" not in ends[3]
     assert all(e["adv"] == 0 for e in ends[:3])
-    with pp.connect() as c:
-        mid_flush = c.one(
-            "select confirmed_flush_lsn::text from pg_replication_slots"
-            " where slot_name = 'cap_slot'"
-        )
-    from pgshovel_spark.sources.pgoutput import lsn_to_int
-    # final (uncapped) batch ended at the commit boundary: advanced
-    assert lsn_to_int(mid_flush) == ends[3]["lsn"] > lsn_to_int(pre_flush)
+    assert _confirmed_flush(pp, "cap_slot") == pre_flush
+    # replay contract for the capped, NOT-yet-committed last batch
+    replay = list(rdr.readBetweenOffsets(ends[2], ends[3]))
+    assert sum(b.num_rows for b in replay) == 10
+    # its commit ends at the transaction boundary: advanced
+    rdr.commit(ends[3])
+    assert _confirmed_flush(pp, "cap_slot") == ends[3]["lsn"] > pre_flush
     # a second small transaction flows normally after the episode
     with pp.connect() as c:
         c.query("insert into cap_t values (101, 'tail')")
-    it, end = rdr.read(cur)
+    it, end = rdr.read(ends[3])
     assert sum(b.num_rows for b in it) == 1 and "adv" not in end
     rdr.commit(end)
     pgl.drop_slot(pp, "cap_slot")
+
+
+def test_simple_reader_max_changes_many_small_txns(cap_db):
+    """100 one-row transactions under max_changes=30, in engine order.
+    The peek bound counts raw frames (Begin/Relation/Commit too) from
+    confirmed_flush_lsn, and that prefix still holds the previous,
+    not-yet-committed batch: a window the prefix fills must widen,
+    not report idle — an idle read plans no batch, so commit(N) would
+    never run and the stream would stall after 10 rows."""
+    pp = cap_db
+    rdr = _capped_reader(
+        pp, "cst",
+        [f"insert into {{t}} values ({i}, 'v{i}')" for i in range(1, 101)],
+        30,
+    )
+    sizes, ends = _engine_order_drain(rdr)
+    assert sizes == [30, 30, 30, 10], sizes
+    assert [e["seq"] for e in ends] == [30, 60, 90, 100]
+    # every cap lands on a one-row transaction's boundary
+    assert not any("adv" in e for e in ends)
+    # the pending batch replays past a commit-advanced slot
+    assert _confirmed_flush(pp, "cst_slot") == ends[2]["lsn"]
+    replay = list(rdr.readBetweenOffsets(ends[2], ends[3]))
+    assert sum(b.num_rows for b in replay) == 10
+    rdr.commit(ends[3])
+    assert _confirmed_flush(pp, "cst_slot") == ends[3]["lsn"]
+    pgl.drop_slot(pp, "cst_slot")
+
+
+def test_simple_reader_max_changes_cap_on_txn_boundary(cap_db):
+    """Ten 3-row transactions under max_changes=6: every cap lands
+    exactly on a transaction boundary, so no end carries 'adv' and
+    each commit advances the slot to its batch's last commit."""
+    pp = cap_db
+    rdr = _capped_reader(
+        pp, "cbd",
+        [
+            f"insert into {{t}} select g, 'v' || g"
+            f" from generate_series({3 * k + 1}, {3 * k + 3}) g"
+            for k in range(10)
+        ],
+        6,
+    )
+    sizes, ends = _engine_order_drain(rdr)
+    assert sizes == [6, 6, 6, 6, 6], sizes
+    assert [e["seq"] for e in ends] == [6, 12, 18, 24, 30]
+    assert not any("adv" in e for e in ends)
+    assert len({e["lsn"] for e in ends}) == 5
+    assert _confirmed_flush(pp, "cbd_slot") == ends[3]["lsn"]
+    rdr.commit(ends[4])
+    assert _confirmed_flush(pp, "cbd_slot") == ends[4]["lsn"]
+    pgl.drop_slot(pp, "cbd_slot")
 
 
 def test_sharded_schema_drift_mid_stream(spark, pg, tmp_path):

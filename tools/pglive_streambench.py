@@ -5,9 +5,12 @@ WHOLE pipeline continuously under load — the architecture a production
 deployment of the pgoutput path runs:
 
   concurrent writers -> live PostgreSQL (pgoutput slot + publication)
-    -> capture loop (peek -> landing parquet -> advance, the two-phase
-       watermark) -> Structured Streaming file source over the landing
-    -> foreachBatch executed ANSI MERGE into live embedded Derby
+    -> the native readStream.format("pgshovel") source (Spark's
+       checkpoint is the only ledger; the slot advances on Spark's
+       batch commit)
+    -> foreachBatch executed ANSI MERGE into live embedded Derby, or
+       (--sink pg2pc) the native two-phase-commit upsert back into
+       live Postgres
 
 and reports STEADY-STATE numbers: writer commit rate, capture rate,
 merge-pipeline processedRowsPerSecond, p95 micro-batch latency from
@@ -16,10 +19,9 @@ part a throughput number can't fake — an exactly-once verification
 that the Derby state equals the live Postgres state row-for-row when
 the dust settles.
 
-Envelope ``seq`` restarts per pull, so the capture loop rebases it
-onto a global monotone offset before landing — the cross-batch total
-order the MERGE newer-guard requires (a real bus gives this via
-per-partition offsets; the landing files stand in for the bus).
+The source's ``seq`` is dense across micro-batches and restarts (it
+rides in the checkpointed offset) — the cross-batch total order the
+MERGE newer-guard requires.
 
 Usage: python tools/pglive_streambench.py [--run-secs 30]
 Prints a markdown table and one JSON line; merge results into
@@ -92,20 +94,20 @@ def main() -> None:
         "--max-changes",
         type=int,
         default=40_000,
-        help="datasource transport only: upto_nchanges bound per peek",
+        help="the source's max_changes: rows per micro-batch",
     )
     ap.add_argument(
         "--poll-seconds",
         type=float,
         default=1.0,
-        help="datasource+walsender only: per-trigger push poll window",
+        help="--ds-transport walsender only: per-trigger push poll window",
     )
     ap.add_argument(
         "--ds-transport",
         choices=("sql", "walsender"),
         default="sql",
-        help="datasource mode only: the native source's own transport "
-        "(walsender = persistent push session, SQL peek for replay)",
+        help="the native source's own transport (walsender = "
+        "persistent push session, SQL peek for replay)",
     )
     ap.add_argument(
         "--sink",
@@ -113,21 +115,17 @@ def main() -> None:
         default="derby",
         help="derby = foreachBatch executed ANSI MERGE into embedded "
         "Derby; pg2pc = the round-11 native writeStream.format('pgshovel') "
-        "two-phase-commit upsert back into live Postgres (requires "
-        "--transport datasource: the FULL native relay, one Spark query)",
+        "two-phase-commit upsert back into live Postgres (the FULL "
+        "native relay, one Spark query)",
     )
     ap.add_argument(
         "--transport",
-        choices=("sql", "walsender", "datasource"),
-        default="sql",
-        help="sql/walsender = LandingCapture + file stream over the "
-        "landing; datasource = the round-11 native source "
-        "(readStream.format('pgshovel') straight into the MERGE sink, "
-        "no landing directory, Spark's checkpoint as the only ledger)",
+        choices=("datasource",),
+        default="datasource",
+        help="datasource = the native source (readStream.format("
+        "'pgshovel') straight into the sink); the only capture path",
     )
     args = ap.parse_args()
-    if args.sink == "pg2pc" and args.transport != "datasource":
-        ap.error("--sink pg2pc requires --transport datasource")
     spark = get_session("pglive_streambench")
     jvm = spark._jvm
     jvm.java.lang.Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
@@ -138,7 +136,6 @@ def main() -> None:
         "CREATE TABLE STATE (ID BIGINT PRIMARY KEY, V VARCHAR(64),"
         " SCORE DOUBLE, SEQ BIGINT)"
     )
-    landing = tempfile.mkdtemp(prefix="pgls_landing_")
     ckpt = tempfile.mkdtemp(prefix="pgls_ckpt_")
 
     from pgshovel_spark.streaming.sinks import JdbcMergeSink
@@ -179,84 +176,60 @@ def main() -> None:
         po.create_publication(p, "pgls_pub", ["pgstream_t"])
         po.create_slot_pgoutput(p, "pgls_slot")
 
-        if args.transport == "datasource":
-            from pgshovel_spark.sources.pgdatasource import register_pgshovel
+        from pgshovel_spark.sources.pgdatasource import register_pgshovel
 
-            register_pgshovel(spark)
-            # warm the Spark/Arrow/JDBC path outside the timed window
+        register_pgshovel(spark)
+        # warm the Spark/Arrow/JDBC path outside the timed window
+        with p.connect() as c:
+            c.query("insert into pgstream_t values (-1, 'warm', 0.0)")
+        src = (
+            spark.readStream.format("pgshovel")
+            .option("sockdir", p.sockdir)
+            .option("slot", "pgls_slot")
+            .option("publication", "pgls_pub")
+            # bound the per-trigger decode window: an unbounded
+            # peek re-decodes the whole backlog each cycle, so a
+            # slow batch snowballs (measured p95 11 s unbounded vs
+            # ~2 s bounded at the same 15k rows/s offered load)
+            .option("max_changes", str(args.max_changes))
+            .option("transport", args.ds_transport)
+            .option("poll_seconds", str(args.poll_seconds))
+            .load()
+        )
+        if args.sink == "pg2pc":
+            # the FULL native relay: pg -> source -> flatten ->
+            # native 2PC upsert back into pg, one Spark query
             with p.connect() as c:
-                c.query("insert into pgstream_t values (-1, 'warm', 0.0)")
-            src = (
-                spark.readStream.format("pgshovel")
-                .option("sockdir", p.sockdir)
-                .option("slot", "pgls_slot")
-                .option("publication", "pgls_pub")
-                # bound the per-trigger decode window: an unbounded
-                # peek re-decodes the whole backlog each cycle, so a
-                # slow batch snowballs (measured p95 11 s unbounded vs
-                # ~2 s bounded at the same 15k rows/s offered load)
-                .option("max_changes", str(args.max_changes))
-                .option("transport", args.ds_transport)
-                .option("poll_seconds", str(args.poll_seconds))
-                .load()
-            )
-            if args.sink == "pg2pc":
-                # the FULL native relay: pg -> source -> flatten ->
-                # native 2PC upsert back into pg, one Spark query
-                with p.connect() as c:
-                    c.query(
-                        "create table pgstate_t(id bigint primary key,"
-                        " v text, score float8, seq bigint)"
-                    )
-                flat = (
-                    src.filter(F.col("op") != "DELETE")
-                    .select(
-                        F.col("after")["id"].cast("long").alias("id"),
-                        F.col("after")["v"].alias("v"),
-                        F.col("after")["score"].cast("double").alias("score"),
-                        F.col("seq"),
-                    )
-                    .filter(F.col("id").isNotNull())
-                    .repartition(8, "id")  # 2PC: key-disjoint partitions
+                c.query(
+                    "create table pgstate_t(id bigint primary key,"
+                    " v text, score float8, seq bigint)"
                 )
-                q = (
-                    flat.writeStream.format("pgshovel")
-                    .option("sockdir", p.sockdir)
-                    .option("table", "pgstate_t")
-                    .option("keys", "id")
-                    .option("order_cols", "seq")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(processingTime="250 milliseconds")
-                    .start()
+            flat = (
+                src.filter(F.col("op") != "DELETE")
+                .select(
+                    F.col("after")["id"].cast("long").alias("id"),
+                    F.col("after")["v"].alias("v"),
+                    F.col("after")["score"].cast("double").alias("score"),
+                    F.col("seq"),
                 )
-            else:
-                q = (
-                    src.writeStream.foreachBatch(apply_batch)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(processingTime="250 milliseconds")
-                    .start()
-                )
-            cap = None
-        else:
-            from pgshovel_spark.sources.pglanding import (
-                LandingCapture,
-                landing_stream,
+                .filter(F.col("id").isNotNull())
+                .repartition(8, "id")  # 2PC: key-disjoint partitions
             )
-
-            cap = LandingCapture(
-                spark, p, "pgls_slot", landing,
-                publication="pgls_pub", transport=args.transport,
-            )
-
-            # warm the Spark/Arrow/JDBC path outside the timed window
-            with p.connect() as c:
-                c.query("insert into pgstream_t values (-1, 'warm', 0.0)")
-            cap.pull_once()
-
             q = (
-                landing_stream(spark, landing)
-                .writeStream.foreachBatch(apply_batch)
+                flat.writeStream.format("pgshovel")
+                .option("sockdir", p.sockdir)
+                .option("table", "pgstate_t")
+                .option("keys", "id")
+                .option("order_cols", "seq")
                 .option("checkpointLocation", ckpt)
+                .trigger(processingTime="250 milliseconds")
+                .start()
+            )
+        else:
+            q = (
+                src.writeStream.foreachBatch(apply_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="250 milliseconds")
                 .start()
             )
 
@@ -267,35 +240,16 @@ def main() -> None:
         )
         t_start = time.time()
         wt.start()
-
-        captured = 0
-        pulls = []
-        if cap is None:
-            # the native source IS the capture loop — just let it run
-            while time.time() - t_start < args.run_secs:
-                time.sleep(0.25)
-        else:
-            while time.time() - t_start < args.run_secs:
-                t0 = time.time()
-                n = cap.pull_once()
-                captured += n
-                if n:
-                    pulls.append((n, time.time() - t0))
-                time.sleep(max(0.0, 0.25 - (time.time() - t0)))  # rate limit
+        # the native source IS the capture loop — just let it run
+        while time.time() - t_start < args.run_secs:
+            time.sleep(0.25)
         stop.set()
         wt.join()
         write_wall = time.time() - t_start
 
-        # drain: capture everything committed, then let the stream
-        # catch up to the landed total
+        # drain: let the stream catch up to everything committed
         t_drain = time.time()
-        if cap is None:
-            capture_drain_s = 0.0
-            landed_total = wstats["committed_rows"] + 1  # + warm row
-        else:
-            captured += cap.drain()
-            capture_drain_s = time.time() - t_drain
-            landed_total = cap.seq_base  # includes the warm-up row
+        committed_total = wstats["committed_rows"] + 1  # + warm row
         deadline = time.time() + 180
         if args.sink == "pg2pc":
             # the sink table's dense max(seq) is the processed ledger
@@ -304,15 +258,14 @@ def main() -> None:
                     m = c.one("select coalesce(max(seq), -1) from pgstate_t")
                 return m + 1
 
-            while _done_rows() < landed_total and time.time() < deadline:
+            while _done_rows() < committed_total and time.time() < deadline:
                 time.sleep(0.5)
             captured = _done_rows()
         else:
-            while merged[0] < landed_total and time.time() < deadline:
+            while merged[0] < committed_total and time.time() < deadline:
                 time.sleep(0.5)
-            if cap is None:
-                captured = merged[0]
-        merge_drain_s = time.time() - t_drain - capture_drain_s
+            captured = merged[0]
+        merge_drain_s = time.time() - t_drain
 
         progress = [
             pr for pr in (q.recentProgress or []) if pr["numInputRows"] > 0
@@ -361,22 +314,18 @@ def main() -> None:
             "writer_rows_per_sec": int(wstats["committed_rows"] / write_wall),
             "captured_rows": captured,
             "capture_rows_per_sec": int(captured / write_wall),
-            "capture_pulls": len(pulls),
             "merge_batches": len(progress),
             "merge_rows_per_sec_mean": int(
                 sum(pr["processedRowsPerSecond"] for pr in progress)
                 / max(len(progress), 1)
             ),
             "batch_latency_ms_p95": p95,
-            "capture_drain_sec": round(capture_drain_s, 2),
             "merge_drain_sec": round(merge_drain_s, 2),
             "exactly_once_state_match": bool(exact),
             "transport": args.transport,
             "ds_transport": args.ds_transport,
             "sink": args.sink,
         }
-        if cap is not None:
-            cap.close()
         pgl.drop_slot(p, "pgls_slot")
     con.close()
 
@@ -385,7 +334,7 @@ def main() -> None:
     for k, v in results.items():
         print(f"| {k} | {v} |")
     s_key = f"pglive_stream_{args.transport}" + (
-        "_ws" if args.transport == "datasource" and args.ds_transport == "walsender" else ""
+        "_ws" if args.ds_transport == "walsender" else ""
     ) + (
         "_pg2pc" if args.sink == "pg2pc" else ""
     )

@@ -1,17 +1,20 @@
 """Live-Postgres relay throughput — how fast the capture path moves
-committed mutations from a real server into the envelope DataFrame.
+committed mutations from a real server into parsed change records.
 
 The reference relay's published operating class is 10^3-10^4 events/s
 per shard (BASELINE.md).  This bench commits N single-row mutations
-(plus a bulk wave) to a scratch PostgreSQL, then times the full
-capture hop: ``pg_logical_slot_peek_changes`` over the wire client +
-test_decoding parse + envelope DataFrame materialization + advance.
+(plus a bulk wave) to a scratch PostgreSQL, then times the capture
+hop of the one capture plugin, ``pgoutput``: the binary slot peek
+(``raw_slot_changes_pgoutput``) over the wire client + the pure-Python
+``parse_pgoutput`` decode + advance, and the same decode over the
+walsender (START_REPLICATION) transport.
 
 What it measures (and what it deliberately doesn't): the DECODE+PARSE
-path is a serial driver-side control-plane read — WAL is commit-
-ordered, so a slot cannot fan out; per-database sharding is the scale
-lever, same as the reference.  Executor fan-out starts after the
-parse, which this bench bills too (createDataFrame + count).
+path is a serial control-plane read — WAL is commit-ordered, so a slot
+cannot fan out; per-database sharding is the scale lever, same as the
+reference.  Arrow batch building and Spark micro-batching come after
+the parse and are timed end to end by the cdc_relay benchmark
+workload instead.
 
 Usage: python tools/pgrelay_bench.py [n_rows]
 Prints a markdown row set for EXPERIMENTS.md and one JSON line.
@@ -26,14 +29,24 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pgshovel_spark.session import get_session  # noqa: E402
 from pgshovel_spark.sources import pglogical as pgl  # noqa: E402
+from pgshovel_spark.sources import pgoutput as po  # noqa: E402
 from pgshovel_spark.sources.pgwire import ScratchPostgres  # noqa: E402
+
+
+def _capture(p, slot: str, pub: str) -> tuple[int, float]:
+    """One peek + parse + advance of ``slot``: (changes, seconds)."""
+    t0 = time.time()
+    raw = po.raw_slot_changes_pgoutput(p, slot, pub)
+    changes = po.parse_pgoutput(raw)
+    secs = time.time() - t0
+    if raw:
+        pgl.advance(p, slot, raw[-1][0])
+    return len(changes), secs
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
-    spark = get_session("pgrelay_bench")
     results = {}
     with ScratchPostgres() as p:
         with p.connect() as c:
@@ -41,17 +54,8 @@ def main() -> None:
                 "create table relay_bench(id bigint primary key,"
                 " v text, score float8)"
             )
-            pgl.create_slot(p, "bench_slot")
-
-            # warm-up pull outside the timed waves: Spark session,
-            # Arrow path, and from_json codegen bill here (the same
-            # first-touch discipline bench.py applies)
-            c.query("insert into relay_bench values (0, 'warm', 0.0)")
-            df, lsn = pgl.pull_changes(
-                spark, p, "bench_slot", key_cols={"relay_bench": ["id"]}
-            )
-            df.count()
-            pgl.advance(p, "bench_slot", lsn)
+            po.create_publication(p, "bench_pub", ["relay_bench"])
+            po.create_slot_pgoutput(p, "bench_po")
 
             # wave 1: one bulk transaction of n rows (bootstrap-style)
             t0 = time.time()
@@ -60,16 +64,9 @@ def main() -> None:
                 f" from generate_series(1, {n}) g"
             )
             commit_s = time.time() - t0
-
-            t0 = time.time()
-            df, lsn = pgl.pull_changes(
-                spark, p, "bench_slot", key_cols={"relay_bench": ["id"]}
-            )
-            rows = df.count()
-            pull_s = time.time() - t0
-            pgl.advance(p, "bench_slot", lsn)
+            rows, pull_s = _capture(p, "bench_po", "bench_pub")
             assert rows == n, (rows, n)
-            results["bulk_txn"] = {
+            results["pgoutput_bulk_txn"] = {
                 "rows": n,
                 "commit_sec": round(commit_s, 2),
                 "capture_sec": round(pull_s, 2),
@@ -84,15 +81,9 @@ def main() -> None:
                 f" where id between 1 and {n}"
             )
             commit_s = time.time() - t0
-            t0 = time.time()
-            df, lsn = pgl.pull_changes(
-                spark, p, "bench_slot", key_cols={"relay_bench": ["id"]}
-            )
-            rows = df.count()
-            pull_s = time.time() - t0
-            pgl.advance(p, "bench_slot", lsn)
+            rows, pull_s = _capture(p, "bench_po", "bench_pub")
             assert rows == n, (rows, n)
-            results["update_full_images"] = {
+            results["pgoutput_update_full_images"] = {
                 "rows": n,
                 "commit_sec": round(commit_s, 2),
                 "capture_sec": round(pull_s, 2),
@@ -108,53 +99,18 @@ def main() -> None:
                     f" ({n + 1 + i}, 'oltp_{i}', {i}.5)"
                 )
             commit_s = time.time() - t0
-            t0 = time.time()
-            df, lsn = pgl.pull_changes(
-                spark, p, "bench_slot", key_cols={"relay_bench": ["id"]}
-            )
-            rows = df.count()
-            pull_s = time.time() - t0
-            pgl.advance(p, "bench_slot", lsn)
+            rows, pull_s = _capture(p, "bench_po", "bench_pub")
             assert rows == n_txn, (rows, n_txn)
-            results["small_txns"] = {
+            results["pgoutput_small_txns"] = {
                 "rows": n_txn,
                 "commit_sec": round(commit_s, 2),
                 "capture_sec": round(pull_s, 2),
                 "capture_rows_per_sec": int(n_txn / pull_s),
                 "txns_per_sec_committed": int(n_txn / commit_s),
             }
-            pgl.drop_slot(p, "bench_slot")
-
-            # wave 4: the SAME bulk-txn shape through binary pgoutput
-            # (SQL-function transport) — the production plugin's decode
-            # cost vs test_decoding's text parse
-            from pgshovel_spark.sources import pgoutput as po
-
-            po.create_publication(p, "bench_pub", ["relay_bench"])
-            po.create_slot_pgoutput(p, "bench_po")
-            t0 = time.time()
-            c.query(
-                f"insert into relay_bench select g + 10000000,"
-                f" 'pgout_' || g, g / 7.0 from generate_series(1, {n}) g"
-            )
-            commit_s = time.time() - t0
-            t0 = time.time()
-            df, lsn = po.pull_changes_pgoutput(
-                spark, p, "bench_po", "bench_pub"
-            )
-            rows = df.count()
-            pull_s = time.time() - t0
-            pgl.advance(p, "bench_po", lsn)
-            assert rows == n, (rows, n)
-            results["pgoutput_bulk_txn"] = {
-                "rows": n,
-                "commit_sec": round(commit_s, 2),
-                "capture_sec": round(pull_s, 2),
-                "capture_rows_per_sec": int(n / pull_s),
-            }
             pgl.drop_slot(p, "bench_po")
 
-            # wave 5: pgoutput over the REAL walsender transport
+            # wave 4: pgoutput over the REAL walsender transport
             # (START_REPLICATION CopyBoth stream + status update)
             po.create_slot_pgoutput(p, "bench_ws")
             rc = po.PgReplicationConnection(p)
