@@ -172,6 +172,7 @@ def main() -> None:
     # only adds cross-run ranking noise.
     from pgshovel_spark.sources.tables import dim_catalog, load_tables
 
+    sc.setJobGroup("setup", "setup")
     load_tables(spark, sf_dir)
     # the 30-row nation/region dim catalog too (one collect, memoized):
     # a metastore serves these rows in production, same as the schemas

@@ -452,7 +452,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source text, so the spread width sizes the EXPANDED stream to
     # advisory partitions (expansion=16) instead of one per core —
     # the plain core-count spread ran 33-36-task stages at local[32]
-    # on a sub-MB fixture where local[8] ran 9-12, and lost (jobprof:
+    # on a sub-MB fixture where local[8] ran 9-12, and lost (measured
     # 1.25-1.52 s vs 0.95-1.36 s, identical stage structure; the r13
     # scaling block's 0.62 low/high ratio).  At scale the scan
     # already yields >= the derived width and the spread is skipped.

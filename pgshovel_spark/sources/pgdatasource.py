@@ -1607,6 +1607,11 @@ def _pg_literal(v) -> str:
     return sql_literal(v, style="ansi")
 
 
+#: rows per INSERT ... ON CONFLICT statement in the upsert sink (bounds
+#: the rendered statement's size on a large batch)
+_UPSERT_ROWS_PER_STMT = 1000
+
+
 class _UpsertCommit(WriterCommitMessage):
     """Per-task commit message: the prepared-transaction gid (None
     under two_phase=false) and the task's upserted row count."""
@@ -1686,7 +1691,6 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
                 f"(all of {self.columns} are keys)"
             )
         self.two_phase = _opt(options, "two_phase", "true").lower() == "true"
-        self.rows_per_stmt = int(_opt(options, "rows_per_stmt", "1000"))
         self.lock_timeout_ms = int(_opt(options, "lock_timeout_ms", "10000"))
         self._gid_prefix = f"pgshovel2pc_{self.table}_"
         # FAULT-INJECTION SEAM (tests only): when ``chaos_file`` names
@@ -1815,8 +1819,8 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
         batch_id = int(batch_prop) if batch_prop else 0
         if not self.two_phase:
             with self.params.connect() as c:
-                for lo in range(0, len(rows), self.rows_per_stmt):
-                    c.query(self._upsert_sql(rows[lo : lo + self.rows_per_stmt]))
+                for lo in range(0, len(rows), _UPSERT_ROWS_PER_STMT):
+                    c.query(self._upsert_sql(rows[lo : lo + _UPSERT_ROWS_PER_STMT]))
             return _UpsertCommit(None, len(rows))
         # run token: StreamExecution sets the job group to the query's
         # runId, which CHANGES on restart — it distinguishes a prior
@@ -1833,9 +1837,9 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
             for attempt in (1, 2):
                 try:
                     c.query("begin")
-                    for lo in range(0, len(rows), self.rows_per_stmt):
+                    for lo in range(0, len(rows), _UPSERT_ROWS_PER_STMT):
                         c.query(
-                            self._upsert_sql(rows[lo : lo + self.rows_per_stmt])
+                            self._upsert_sql(rows[lo : lo + _UPSERT_ROWS_PER_STMT])
                         )
                     c.query(f"prepare transaction '{gid}'")
                     break

@@ -1,6 +1,7 @@
 """Sustained live-Postgres CDC pipeline bench (round 10).
 
-pgrelay_bench.py measures single-shot capture hops; this tool runs the
+perfbench's cdc_relay workload measures the capture hops
+(``--trace 1``: peek, decode, walsender); this tool runs the
 WHOLE pipeline continuously under load — the architecture a production
 deployment of the pgoutput path runs:
 
