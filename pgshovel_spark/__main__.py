@@ -260,10 +260,9 @@ def _cmd_cdc(args) -> int:
         # the RELAY DAEMON as one command (the reference's core
         # process): slot(s) -> native streaming source -> flatten ->
         # two-phase-commit upsert into the target table, checkpoint
-        # as the only ledger.  --shards runs the partition-parallel
-        # sharded reader (the flagship capture path: one slot per
-        # input partition, executor-side decode); without it the
-        # single-slot reader drives NAME's slot.  INSERT/UPDATE
+        # as the only ledger.  The partition-parallel reader (one
+        # slot per input partition, executor-side decode) reads the
+        # --shards list, or NAME's slot as a one-shard list.  INSERT/UPDATE
         # images are upserted; DELETEs are SKIPPED by design (the
         # upsert sink carries no tombstone semantics) —
         # deletes-needing consumers read the CHANGE envelope directly
@@ -451,8 +450,7 @@ def main(argv: list[str] | None = None) -> int:
     cdc.add_argument(
         "--shards",
         help="stream: JSON array of {slot, publication[, database]} —"
-        " run the partition-parallel sharded reader instead of NAME's"
-        " single slot",
+        " read these slots instead of NAME's single slot",
     )
     cdc.add_argument(
         "--epoch", type=int, default=0,

@@ -5,28 +5,32 @@ Python DataSource API (``pyspark.sql.datasource``).
 This is the one way changes leave a replication slot: a
 CHECKPOINT-NATIVE source whose only watermark is Spark's own offset
 log, decoding the binary ``pgoutput`` plugin (sources/pgoutput.py).
-The reader exposes the
-replication slot through ``SimpleDataSourceStreamReader`` — the API
-Spark provides precisely for driver-coordinated, inherently-serial
-sources (a slot decodes WAL in commit order; ordering IS the
-contract) — and the engine's two-phase peek/advance discipline maps
-1:1 onto the API's replay contract:
+ONE stream reader serves every shape: ``PgShovelStreamReader``, a full
+``DataSourceStreamReader`` with one input partition per replication
+slot.  ``option("shards", '[{"slot": ..., "publication": ...,
+"database": ...}, ...]')`` lists the slots; ``slot`` + ``publication``
+is shorthand for a one-element list.  The engine's two-phase
+peek/advance discipline maps onto the API's replay contract:
 
-- ``read(start)``     = non-destructive PEEK of the slot, filtered to
-                        positions after ``start`` (at-least-once pull);
-- ``commit(end)``     = ``pg_replication_slot_advance`` to the last
+- ``latestOffset()``  = one aggregated server-side probe per slot
+                        (changes after the slot's watermark, planned
+                        in whole commits within ``max_changes``) —
+                        no change bytes cross the wire on the driver;
+- ``read(partition)`` = non-destructive PEEK of the slot on an
+                        EXECUTOR, sliced to exactly (start, end] —
+                        the same call serves a first run and a
+                        restart's replay of an uncommitted batch;
+- ``commit(end)``     = persist the dense seq in
+                        ``pgshovel_shard_meta``, then
+                        ``pg_replication_slot_advance`` to the last
                         consumed COMMIT lsn — the slot watermark moves
                         only after Spark has durably committed the
-                        batch, so a crash anywhere replays losslessly;
-- ``readBetweenOffsets(start, end)``
-                      = deterministic re-peek of an uncommitted range
-                        after a query restart (the data is still in
-                        the slot because commit() never ran for it).
+                        batch, so a crash anywhere replays losslessly.
 
-Offsets are LSN-backed and JSON-serializable:
+Offsets are LSN-backed and JSON-serializable, one entry per slot:
 
-    ``{"lsn": <commit lsn as int>, "idx": <next change index within
-       that commit>, "seq": <dense global change sequence>}``
+    ``{slot: {"lsn": <commit lsn as int>, "idx": <next change index
+       within that commit>, "seq": <dense per-slot change sequence>}}``
 
 POSITION DESIGN (the subtle part): logical decoding emits WHOLE
 transactions in COMMIT order, so a change's own WAL record lsn is NOT
@@ -35,44 +39,21 @@ committed late arrives with change lsns LOWER than everything already
 delivered.  Offsets therefore key on the transaction's COMMIT-record
 lsn (stamped on every change by the parser as ``commit_lsn``) plus
 the change's index within its transaction — the same (commit_lsn,
-sequence) discipline production CDC connectors use.  A peeked batch
-always contains whole transactions (the parser buffers until COMMIT),
-so an uncapped batch never splits a transaction and ``commit(end)``
-can safely advance the slot to ``end.lsn`` (a ``max_changes`` cap
-may split one; the end offset then carries the last complete
-boundary as ``adv``).
+sequence) discipline production CDC connectors use.  Batch ends are
+commit boundaries, except inside one transaction larger than
+``max_changes``, which is chunked (see ``PgShovelStreamReader``).
 
-The ``seq`` component continues the envelope's dense per-publisher
+The ``seq`` component continues the envelope's dense per-slot
 sequence ACROSS batches and restarts (it rides in the checkpointed
-offset), so downstream (epoch, seq)-ordered MERGE sinks need no
+offset and in ``pgshovel_shard_meta``, so even a fresh checkpoint
+resumes it), so downstream (epoch, seq)-ordered MERGE sinks need no
 rebasing of their own.
 
-Scale posture: the slot pull is control-plane and serial BY PROTOCOL
-(one walsender/slot decodes in commit order); sharding happens per
-database with one slot+source each, and executor fan-out happens after
-the source hands rows to Spark (the runner converts them to Arrow
-batches).  Since round 12 the fan-out can happen BEFORE the hand-off
-too: ``option("shards", '[{"slot": ..., "publication": ...,
-"database": ...}, ...]')`` switches to the full
-``DataSourceStreamReader`` (PgShovelShardedStreamReader) — one input
-partition per slot, peek/decode/parse on EXECUTORS, offsets a per-slot
-(commit-lsn, idx, seq) vector — measured 80k rows/s offered sustained
-with 8 shards (92k effective at 120k offered) vs the ~15k
-single-slot ceiling (PGRELAY.json pglive_stream_sharded*).  The
-default SQL transport peeks ``pg_logical_slot_peek_binary_changes``
-(publication-filtered, protocol v1/v2 with streamed in-progress
-transactions).
-
-``transport=walsender`` is the HYBRID fast path:
-steady-state reads ride one persistent START_REPLICATION CopyBoth
-session held by the reader (the runner process is long-lived; the
-push decode path measures ~3-4x the peek transport), commits confirm
-via Standby Status Update (the held session keeps the slot active, so
-a SQL advance would fail), and ``readBetweenOffsets`` — which a live
-push stream cannot serve (frames arrive once) — stays on the SQL
-peek: restarts replay the pending batch BEFORE the new run opens a
-session, and the two transports agree on (commit_lsn, idx) positions
-(live-tested).
+Scale posture: one slot decodes serially BY PROTOCOL (one walsender
+per slot, commit order); the scale lever is slots in parallel, per
+database or per disjoint publication — measured 80k rows/s offered
+sustained with 8 shards (92k effective at 120k offered) vs the ~15k
+single-slot ceiling (PGRELAY.json pglive_stream_sharded*).
 
 Reference behavior (SURVEY.md §1.1/§2.A [recalled]): pgshovel's relay
 tails a capture queue and republishes mutation batches with dense
@@ -91,14 +72,13 @@ Usage::
 
 NOTE: the DataSource class is pickled BY REFERENCE into Spark's
 python runner process — ``pgshovel_spark`` must be importable there
-(run from the repo root or export PYTHONPATH=/root/repo, the same
-rule every mapInPandas stage already obeys).
+(run from the repo root or put the repo root on PYTHONPATH, the
+same rule every mapInPandas stage already obeys).
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -107,7 +87,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -120,11 +99,11 @@ def _opt(options, key: str, default=None):
     return default if v is None else v
 
 
-
 def _is_transient(e: BaseException) -> bool:
     """Server-outage error family (failover/crash 57P*, connection
     08*, slot-contention 55006, socket errors): safe to retry or to
-    report no-progress — shared by both stream readers."""
+    report no-progress — the stream reader's probe, read and commit
+    all ride through it."""
     from pgshovel_spark.sources.pgwire import PgError
 
     if isinstance(e, (ConnectionError, OSError)) and not isinstance(e, PgError):
@@ -159,8 +138,7 @@ def _params_from_options(options, database: str | None = None):
 
 
 # ---------------------------------------------------------------------------
-# position algebra + Arrow building, shared by the simple (single-slot)
-# and sharded (partition-parallel) stream readers
+# position algebra + Arrow building
 # ---------------------------------------------------------------------------
 
 
@@ -186,58 +164,27 @@ def _change_row(ch: dict, seq: int, publisher: str, epoch: int) -> tuple:
 
 
 def _slice_changes(
-    changes: list,
-    start: dict,
-    upto: dict | None,
-    publisher: str,
-    epoch: int,
-    max_rows: int | None = None,
-) -> tuple[list, dict, int]:
+    changes: list, start: dict, upto: dict, publisher: str, epoch: int
+) -> tuple[list, dict]:
     """Rows strictly inside (start, upto] by (commit_lsn, idx)
-    position, with dense seq continuation; returns ``(rows, end,
-    adv)`` where ``adv`` is the highest commit lsn whose transaction
-    is FULLY inside the returned rows-or-earlier — the safe slot-
-    advance target.  ``max_rows`` caps the slice (the simple reader's
-    batch bound): a cap landing MID-COMMIT leaves ``adv`` at the
-    previous boundary, because advancing the slot to a partially-
-    delivered commit's lsn would discard its undelivered tail (the
-    next peek replays the whole transaction and the position filter
-    skips the delivered prefix).  Uncapped slices always end at a
-    transaction boundary (the parser emits whole transactions), so there
-    ``adv == end['lsn']``."""
+    position, with dense seq continuation; returns ``(rows, end)``."""
     from pgshovel_spark.sources.pgoutput import lsn_to_int
 
     rows: list[tuple] = []
     lsn, idx, seq = start["lsn"], start["idx"], start["seq"]
-    adv = 0
     prev_c, j = None, 0
-    stopped = False
     for ch in changes:
         c_lsn = lsn_to_int(ch["commit_lsn"])
-        new_commit = c_lsn != prev_c
-        if new_commit and prev_c is not None:
-            adv = prev_c  # the previous commit's run is complete
-        j = j + 1 if not new_commit else 0
+        j = j + 1 if c_lsn == prev_c else 0
         prev_c = c_lsn
         if (c_lsn, j) < (start["lsn"], start["idx"]):
             continue  # already delivered in an earlier batch
-        if upto is not None and (c_lsn, j) >= (upto["lsn"], upto["idx"]):
-            stopped = True
-            break
-        if max_rows is not None and len(rows) >= max_rows:
-            # cap: adv already holds the last completed boundary (the
-            # loop-top run-change update covers the cap landing
-            # exactly on a boundary)
-            stopped = True
+        if (c_lsn, j) >= (upto["lsn"], upto["idx"]):
             break
         rows.append(_change_row(ch, seq, publisher, epoch))
         seq += 1
         lsn, idx = c_lsn, j + 1
-    if not stopped and prev_c is not None:
-        # list exhausted: the parser emits whole transactions, so the
-        # last commit seen is complete
-        adv = prev_c
-    return rows, {"lsn": lsn, "idx": idx, "seq": seq}, adv
+    return rows, {"lsn": lsn, "idx": idx, "seq": seq}
 
 
 #: rows per emitted Arrow RecordBatch (bounds IPC message size on an
@@ -270,317 +217,8 @@ def _changes_to_batches(rows: list) -> list:
     return out
 
 
-class PgShovelSimpleStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side slot reader implementing the peek/advance contract.
-
-    One fresh wire connection per pull (the simple-query protocol's
-    slot functions) — no long-lived session to fail over; a dead
-    server simply fails the trigger and the next one re-peeks from
-    ``confirmed_flush_lsn``.
-    """
-
-    def __init__(self, options):
-        self.params = _params_from_options(options)
-        self.slot = _opt(options, "slot")
-        if not self.slot:
-            raise ValueError("pgshovel source requires option 'slot'")
-        self.publication = _opt(options, "publication")
-        if not self.publication:
-            raise ValueError("pgshovel source requires option 'publication'")
-        self.proto_version = int(_opt(options, "proto_version", "1"))
-        self.streaming = _opt(options, "streaming", "false").lower() == "true"
-        # decoder-side replication-origin filter (parse_pgoutput):
-        # "none" drops foreign-origin transactions whole (loop
-        # prevention in bidirectional topologies)
-        self.origin = _opt(options, "origin", "any")
-        if self.origin not in ("any", "none"):
-            raise ValueError(f"origin must be 'any' or 'none', got {self.origin!r}")
-        self.publisher = _opt(options, "publisher", self.slot)
-        self.epoch = int(_opt(options, "epoch", "0"))
-        mc = _opt(options, "max_changes")
-        # rows per batch; the peek window (upto_nchanges, which counts
-        # raw frames) starts at the same size and widens on demand
-        # (see _peek_slice)
-        self.max_changes = int(mc) if mc else None
-        self._window = self.max_changes
-        # transport=walsender: steady-state reads come
-        # from ONE persistent START_REPLICATION CopyBoth session held
-        # by the reader (the runner process is long-lived) — the
-        # server PUSHES decoded transactions, ~3-4x the peek
-        # transport's decode rate.  The replay path (restart
-        # readBetweenOffsets) still uses the SQL peek: after a crash
-        # the old runner is gone, the slot is free, and a peek from
-        # confirmed_flush_lsn deterministically re-produces any
-        # uncommitted range — push for speed, pull for replay.
-        self.transport = _opt(options, "transport", "sql")
-        if self.transport not in ("sql", "walsender"):
-            raise ValueError(f"transport must be 'sql' or 'walsender', got {self.transport!r}")
-        #: per-trigger poll window on the walsender transport
-        self.poll_seconds = float(_opt(options, "poll_seconds", "1.0"))
-        self._ws = None  # (PgReplicationConnection, ReplicationStream)
-        # RESTART-RACE GUARD: after a (re)start the engine may call
-        # latestOffset -> read() BEFORE the replayed pending batch's
-        # executor readBetweenOffsets peek runs; a walsender session
-        # opened by that first read would hold the slot ACTIVE and
-        # fail the replay peek with 55006.  Reads therefore stay on
-        # the SQL peek until the FIRST commit() of this run — by then
-        # every pending batch is settled (commits are sequential) and
-        # the push session can safely take the slot.
-        self._saw_commit = False
-
-    # -- offset algebra ----------------------------------------------------
-
-    def initialOffset(self) -> dict:
-        # Position 0: everything decodable from the slot's
-        # confirmed_flush_lsn onward is new.  seq starts dense at 0.
-        return {"lsn": 0, "idx": 0, "seq": 0}
-
-    def _peek_parse(self, limit: int | None) -> tuple[list, int]:
-        """One SQL peek of the slot (``upto_nchanges = limit``) ->
-        ``(parsed changes, raw frame count)``.  The pull retries
-        briefly on 55006 ("slot is active"): two concurrent SQL peeks
-        (the runner's read racing an executor's restart replay)
-        contend transiently on the slot's active lock."""
-        import time
-
-        from pgshovel_spark.sources.pgoutput import (
-            parse_pgoutput,
-            raw_slot_changes_pgoutput,
-        )
-        from pgshovel_spark.sources.pgwire import PgError
-
-        for attempt in range(20):
-            try:
-                raw = raw_slot_changes_pgoutput(
-                    self.params,
-                    self.slot,
-                    self.publication,
-                    proto_version=self.proto_version,
-                    streaming=self.streaming,
-                    limit=limit,
-                )
-                break
-            except (PgError, ConnectionError, OSError) as e:
-                # 55006: concurrent peeks contending on the slot's
-                # active lock; the wider family: a crash-restarting
-                # server (57P*/08*/socket) — ride through a short
-                # outage instead of failing the trigger (outages past
-                # ~10 s still fail -> the supervisor-restart posture)
-                if attempt == 19 or not _is_transient(e):
-                    if isinstance(e, PgError) and e.sqlstate == "55000":
-                        # "can no longer get changes from slot": check
-                        # whether the server INVALIDATED it (WAL-
-                        # retention overrun) and surface that TYPED —
-                        # the unrecoverable case a retry loop or a
-                        # generic stack trace would bury
-                        from pgshovel_spark.sources.pglogical import (
-                            check_slot_live,
-                        )
-
-                        check_slot_live(self.params, self.slot)
-                    raise
-                time.sleep(0.5)
-        return parse_pgoutput(raw, origin=self.origin), len(raw)
-
-    def _peek_slice(
-        self, start: dict, upto: dict | None, cap: int | None
-    ) -> tuple[list, dict, int]:
-        """Peek and slice ``(start, upto]`` (at most ``cap`` rows).
-
-        Uncapped (``max_changes`` unset): one unbounded peek.  Capped:
-        the peek window counts raw frames from ``confirmed_flush_lsn``,
-        and that prefix still holds the previous batch — the engine
-        calls ``commit(N)`` only after it has planned batch N+1 from
-        ``read``.  A window the delivered prefix fills would plan no
-        new offset, so ``commit(N)`` would never run and the stream
-        would stall.  So a FULL window (as many frames as the bound)
-        that yields less than the slice needs is widened 4x and
-        re-peeked; every peek stays bounded, and the widened size is
-        kept for the next read."""
-        for _ in range(10):
-            changes, frames = self._peek_parse(self._window)
-            got = self._slice(changes, start, upto, max_rows=cap)
-            if self._window is None or frames < self._window:
-                break  # unbounded, or the window reached the slot's end
-            rows, end, _adv = got
-            if len(rows) >= cap if upto is None else end["seq"] >= upto["seq"]:
-                break  # the slice is whole
-            self._window *= 4
-        return got
-
-    def _slice(
-        self,
-        changes: list,
-        start: dict,
-        upto: dict | None,
-        max_rows: int | None = None,
-    ) -> tuple[list, dict, int]:
-        return _slice_changes(
-            changes, start, upto, self.publisher, self.epoch, max_rows
-        )
-
-    # -- SimpleDataSourceStreamReader contract ------------------------------
-
-    def _to_batches(self, rows: list) -> list:
-        return _changes_to_batches(rows)
-
-    # -- walsender steady-state session --------------------------------------
-
-    def _ensure_ws(self):
-        if self._ws is None:
-            from pgshovel_spark.sources.pgoutput import PgReplicationConnection
-
-            rc = PgReplicationConnection(self.params)
-            stream = rc.start_replication(
-                self.slot,
-                self.publication,
-                proto_version=self.proto_version,
-                streaming=self.streaming,
-            )
-            stream.origin = self.origin
-            self._ws = (rc, stream)
-        return self._ws
-
-    def _close_ws(self) -> None:
-        if self._ws is not None:
-            rc, stream, = self._ws[0], self._ws[1]
-            try:
-                stream.stop()
-            except Exception:
-                pass
-            try:
-                rc.close()
-            finally:
-                self._ws = None
-
-    def _walsender_parse(self) -> list:
-        """Collect committed transactions pushed within the poll
-        window.  A dead session (failover, pg_terminate_backend,
-        server crash) drops BOTH the connection and any un-sliced
-        parse: the slot replays everything past confirmed_flush on
-        reconnect, and keeping the partial batch would duplicate rows
-        WITHIN one read (the position filter only dedupes across
-        batches)."""
-        import time
-
-        from pgshovel_spark.sources.pgwire import PgError
-
-        parsed: list = []
-        deadline = time.time() + self.poll_seconds
-        while time.time() < deadline:
-            try:
-                _rc, stream = self._ensure_ws()
-                got = stream.read(
-                    max_seconds=max(0.1, deadline - time.time()),
-                    relations=stream.relations,
-                )
-            except (ConnectionError, OSError, PgError) as e:
-                # retryable: failover/kill (57P*), connection family
-                # (08*), and 55006 — the slot still held by a prior
-                # run's session that is in the middle of dying
-                if isinstance(e, PgError) and not (
-                    e.sqlstate.startswith("57P")
-                    or e.sqlstate.startswith("08")
-                    or e.sqlstate == "55006"
-                ):
-                    if e.sqlstate == "55000":
-                        # START_REPLICATION on an invalidated slot:
-                        # surface the typed unrecoverable error
-                        from pgshovel_spark.sources.pglogical import (
-                            check_slot_live,
-                        )
-
-                        check_slot_live(self.params, self.slot)
-                    raise
-                self._close_ws()
-                parsed = []
-                time.sleep(0.2)  # no hot spin while the server is down
-                continue
-            if not got:
-                break
-            parsed.extend(got)
-        return parsed
-
-    def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
-        if self.transport == "walsender" and self._saw_commit:
-            # push frames arrive ONCE: a capped tail would be lost
-            # (the position filter only dedupes re-peeked data), so
-            # max_changes bounds only the peek transport; walsender
-            # batches are bounded by the poll window instead
-            rows, end, adv = self._slice(self._walsender_parse(), start, None)
-        else:
-            rows, end, adv = self._peek_slice(start, None, self.max_changes)
-        if not rows:
-            # idle: reproduce the start offset EXACTLY (including any
-            # 'adv' key a capped predecessor batch left in it) — a
-            # fresh dict with different keys would make every trigger
-            # look like a new offset
-            return iter([]), dict(start)
-        if adv != end["lsn"]:
-            # capped MID-COMMIT: commit() must advance the slot only
-            # to the last complete transaction boundary — advancing
-            # to end.lsn would discard the commit's undelivered tail
-            end = dict(end)
-            end["adv"] = adv
-        # list iterator: the prefetch wrapper copy.copy()s it for the
-        # cache, which a generator would not survive
-        return iter(self._to_batches(rows)), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[Tuple]:
-        # ALWAYS the SQL peek, even on transport=walsender: replay
-        # runs on executors after a restart, when no walsender session
-        # exists yet (the engine replays the pending batch BEFORE the
-        # first latestOffset of the new run), and a peek from
-        # confirmed_flush deterministically re-produces any
-        # uncommitted range.
-        rows, got, _adv = self._peek_slice(start, end, None)
-        if got["seq"] != end["seq"]:
-            # The slot can no longer reproduce the planned range —
-            # only possible if something advanced it past data Spark
-            # never committed (operator error / external consumer).
-            # Surfacing loudly beats silently shipping a short batch.
-            raise RuntimeError(
-                f"slot {self.slot!r} cannot replay offsets "
-                f"{start} .. {end}: got seq {got['seq']}, "
-                f"expected {end['seq']} (slot advanced externally?)"
-            )
-        return iter(self._to_batches(rows))
-
-    def commit(self, end: dict) -> None:
-        # Move the slot watermark to the last consumed commit record.
-        # Batches hold whole transactions, so end.lsn is always a
-        # commit boundary; advance is monotone server-side (never
-        # moves backwards), so replayed commits after a restart are
-        # no-ops.
-        self._saw_commit = True  # pending replays settled: the push
-        # session may take the slot from the next read on
-        if not end.get("lsn"):
-            return
-        # a max_changes-capped batch that ended MID-COMMIT carries
-        # 'adv' = the last complete transaction boundary; advancing to
-        # end.lsn would discard the partially-delivered commit's tail
-        # (the next peek replays it and the position filter dedupes).
-        # adv == 0 (batch entirely inside one commit, no earlier
-        # boundary): nothing safe to advance — the slot watermark is
-        # garbage collection, not correctness.
-        target = end.get("adv", end["lsn"])
-        if not target:
-            return
-        if self.transport == "walsender" and self._ws is not None:
-            # the held session keeps the slot ACTIVE (a SQL advance
-            # would fail 55006): confirm via Standby Status Update,
-            # the wire-native watermark move
-            _rc, stream = self._ws
-            stream.send_status(target)
-            return
-        from pgshovel_spark.sources.pglogical import advance
-        from pgshovel_spark.sources.pgoutput import lsn_to_str
-
-        advance(self.params, self.slot, lsn_to_str(target))
-
-
 # ---------------------------------------------------------------------------
-# the SHARDED half: partition-parallel capture (full DataSourceStreamReader)
+# the STREAM half: partition-parallel capture (full DataSourceStreamReader)
 # ---------------------------------------------------------------------------
 
 
@@ -594,54 +232,63 @@ class _ShardPartition(InputPartition):
         self.end = end
 
 
-class PgShovelShardedStreamReader(DataSourceStreamReader):
+class PgShovelStreamReader(DataSourceStreamReader):
     """Partition-parallel native capture: N replication slots, one
-    Spark input partition each, decoded and parsed ON EXECUTORS — the
-    100x shape once one slot's decode rate is the ceiling (a slot is
-    serial BY PROTOCOL: one walsender decodes in commit order; the
-    scale lever is slots-in-parallel, per database or per disjoint
+    Spark input partition each, decoded and parsed ON EXECUTORS (a
+    slot is serial BY PROTOCOL: one walsender decodes in commit order;
+    the scale lever is slots-in-parallel, per database or per disjoint
     publication, exactly the reference relay's shard-per-set layout
     `[recalled: SURVEY.md §1.1 replication sets]`).
 
     Option ``shards`` = JSON array of ``{"slot": ..., "publication":
     ..., "database": ...}`` (database optional, defaults to the shared
-    option).  Shard publications MUST be disjoint (per-database shards
-    are by construction; same-database shards must publish disjoint
-    table sets) — overlapping publications would deliver a change once
-    per covering shard.
+    option); options ``slot`` + ``publication`` are shorthand for a
+    one-element array.  Shard publications MUST be disjoint (per-
+    database shards are by construction; same-database shards must
+    publish disjoint table sets) — overlapping publications would
+    deliver a change once per covering shard.
 
-    Offset = ``{slot: {"lsn", "idx", "seq"}}`` per shard, the same
-    (commit-lsn, idx) position algebra as the single-slot reader.
+    Offset = ``{slot: {"lsn", "idx", "seq"}}`` per shard.  A flat
+    ``{"lsn", "idx", "seq"}`` offset in a checkpoint came from the
+    removed driver-side single-slot reader and is rejected
+    (``_check_offset``).
 
     DRIVER/EXECUTOR split per microbatch:
 
     - ``latestOffset`` (driver) probes each shard with ONE aggregated
-      SQL pass (``backlog_stats_pgoutput``): count of backlog changes
-      in commits after the shard's advance watermark + last commit
-      lsn.  No change bytes cross the wire for the probe.
+      SQL pass (``backlog_plan_pgoutput``): the changes in the longest
+      run of whole commits after the shard's watermark that fits
+      ``max_changes``, and the commit lsn closing that run.  No change
+      bytes cross the wire for the probe.
     - ``read`` (executor) peeks its shard's slot on its own wire
       connection, parses, slices to exactly (start, end], and verifies
       the slice length against the offsets' seq delta — a slot moved
       by an external consumer fails loudly, never ships a short batch.
     - ``commit`` (driver) persists each shard's ``(end.lsn, end.seq)``
       in a one-row-per-slot metadata table on the shard's database
-      (``pgshovel_shard_meta`` — the Debezium-signal-table pattern:
-      the slot can carry an lsn watermark but not the dense seq, and
-      ``latestOffset`` on a RESTARTED driver must continue seq without
-      Spark handing it the checkpoint), then advances the slot.
-      Ordering matters: meta first, advance second — a crash between
-      them leaves confirmed_flush behind the meta watermark, and the
-      commit-lsn filter in the probe/slice skips the already-delivered
-      replay either way.
+      (``pgshovel_shard_meta``, created by the reader — the Debezium-
+      signal-table pattern: the slot can carry an lsn watermark but
+      not the dense seq, and ``latestOffset`` on a RESTARTED driver
+      must continue seq without Spark handing it the checkpoint), then
+      advances the slot.  Ordering matters: meta first, advance second
+      — a crash between them leaves confirmed_flush behind the meta
+      watermark, and the commit-lsn filter in the probe/slice skips
+      the already-delivered replay either way.
 
     SEQ SEMANTICS: dense PER SHARD (publisher = slot name), continuing
-    across batches and restarts — downstream (epoch, seq) MERGE sinks
-    order per publisher, the same contract as the single-slot reader.
+    across batches and restarts — and across a FRESH checkpoint, which
+    resumes from the meta row (``initialOffset``); downstream (epoch,
+    seq) MERGE sinks order per publisher.
 
-    Restrictions (enforced): protocol v1, no v2
-    streaming (stream segments interleave across the probe's
-    commit-grouping), origin='any' (a decoder-side origin drop would
-    desync the probe's server-side count).
+    ``max_changes`` bounds a batch in WHOLE commits; a first commit
+    alone larger than the budget is delivered in budget-sized chunks
+    over several batches (``_plan_chunk``).
+
+    Restrictions (enforced): protocol v1, no v2 streaming (stream
+    segments interleave across the probe's commit-grouping),
+    origin='any' (a decoder-side origin drop would desync the probe's
+    server-side count), and no publication covering the meta table
+    (``_check_pub_excludes_meta`` — FOR ALL TABLES is rejected).
     """
 
     #: idx sentinel in an end offset: "every change of every commit at
@@ -654,9 +301,18 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.base_params = _params_from_options(options)
         self.default_db = self.base_params.database
-        raw = json.loads(_opt(options, "shards") or "[]")
+        slot, shards = _opt(options, "slot"), _opt(options, "shards")
+        if slot and shards:
+            raise ValueError("options 'slot' and 'shards' are exclusive")
+        if slot:  # the single-slot shorthand: a one-shard list
+            raw = [{"slot": slot, "publication": _opt(options, "publication")}]
+        else:
+            raw = json.loads(shards or "[]")
         if not raw:
-            raise ValueError("option 'shards' must be a non-empty JSON array")
+            raise ValueError(
+                "pgshovel source requires option 'slot' + 'publication'"
+                " or a non-empty JSON array 'shards'"
+            )
         from pgshovel_spark.sources.pglogical import _check_slot
         from pgshovel_spark.sources.pgoutput import _check_publication
 
@@ -678,11 +334,11 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
                 "database": s.get("database", self.default_db),
             }
         if int(_opt(options, "proto_version", "1")) != 1:
-            raise ValueError("sharded mode requires proto_version=1")
+            raise ValueError("the pgshovel stream requires proto_version=1")
         if _opt(options, "streaming", "false").lower() == "true":
-            raise ValueError("sharded mode does not support v2 streaming")
+            raise ValueError("the pgshovel stream does not support v2 streaming")
         if _opt(options, "origin", "any") != "any":
-            raise ValueError("sharded mode requires origin='any'")
+            raise ValueError("the pgshovel stream requires origin='any'")
         mc = _opt(options, "max_changes")
         self.max_changes = int(mc) if mc else None
         self.epoch = int(_opt(options, "epoch", "0"))
@@ -793,27 +449,13 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
         meta row) with no recovery path.  A slot with no meta row
         starts at the origin as before; a slot parked MID-GIANT-COMMIT
         resumes at its chunk position."""
-        from pgshovel_spark.sources.pgoutput import lsn_to_int
-
         out = {}
         for slot in sorted(self.shards):
             shard = self.shards[slot]
             with self._params(shard).connect() as c:
-                m = self._read_meta(c, shard["database"], slot)
-            if m["part_idx"] > 0:
-                out[slot] = {
-                    "lsn": lsn_to_int(m["part_clsn"]),
-                    "idx": m["part_idx"],
-                    "seq": m["base_seq"],
-                    "rn": m["part_rn"],
-                }
-            else:
-                lsn_int = lsn_to_int(m["base_lsn"])
-                out[slot] = {
-                    "lsn": lsn_int,
-                    "idx": self._IDX_END if lsn_int else 0,
-                    "seq": m["base_seq"],
-                }
+                out[slot] = self._meta_position(
+                    self._read_meta(c, shard["database"], slot)
+                )
         return out
 
     def _check_pub_excludes_meta(self, c, shard: dict) -> None:
@@ -906,10 +548,11 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
         else:
             after_lsn = lsn_to_str(eff["lsn"]) if eff["lsn"] else "0/0"
             # window escalation: the peek's row bound counts frames
-            # from confirmed_flush, and the delivered-but-not-yet-
-            # advanced prefix (commit lags the reported frontier by
-            # one batch) can consume the whole window — a FULL window
-            # with no live commit means "look further", never "idle"
+            # (Begin/Relation/Commit too) from confirmed_flush, and the
+            # delivered-but-not-yet-advanced prefix (commit lags the
+            # reported frontier by one batch) can fill the window — a
+            # FULL window the budget did not cut means "look further",
+            # never "idle" or "that is all"
             bound = self.max_changes
             for _ in range(10):
                 plan = backlog_plan_pgoutput(
@@ -920,11 +563,7 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
                     limit=bound,
                     budget=self.max_changes,
                 )
-                if (
-                    bound is None
-                    or plan["first_clsn"] is not None
-                    or plan["frames"] < bound
-                ):
+                if bound is None or plan["frames"] < bound or plan["cut"]:
                     break
                 bound *= 4
             if plan["last_clsn"] is None and plan["first_clsn"] is None:
@@ -954,13 +593,17 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
     def _effective_start(self, slot: str, m: dict) -> dict:
         """The position the next batch must continue from: the last
         end reported to Spark THIS RUN when one exists (>= the meta
-        row by construction), else the meta row — boundary-shaped or,
-        mid-giant-commit, the chunk position."""
-        from pgshovel_spark.sources.pgoutput import lsn_to_int
-
+        row by construction), else the meta row's position."""
         rep = self._reported.get(slot)
         if rep is not None and rep["seq"] >= m["base_seq"]:
             return rep
+        return self._meta_position(m)
+
+    def _meta_position(self, m: dict) -> dict:
+        """The offset a meta row records: boundary-shaped or, mid-
+        giant-commit, the chunk position."""
+        from pgshovel_spark.sources.pgoutput import lsn_to_int
+
         if m["part_idx"] > 0:
             return {
                 "lsn": lsn_to_int(m["part_clsn"]),
@@ -1075,10 +718,6 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
     #: probe = 1.3 s/trigger serial, ~0.2 s pooled)
     _POOL = 8
 
-    @staticmethod
-    def _transient(e: BaseException) -> bool:
-        return _is_transient(e)
-
     def _raise_typed_if_invalidated(self, shard: dict, e: BaseException):
         """55000 from a slot read may mean the server INVALIDATED the
         slot (WAL-retention overrun) — surface that TYPED.  Covers the
@@ -1095,15 +734,13 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
         """A DOWN server (failover, crash-restart, network blip) must
         not kill the query: on a transient error the shard reports its
         last position (no progress this trigger) and the stream
-        resumes when the server returns — the full-reader analog of
-        the simple reader's walsender reconnect posture.  The fallback
-        is the idle-probe cache or, mid-drain (where only idle ends
+        resumes when the server returns.  The fallback is the idle-probe cache or, mid-drain (where only idle ends
         are cached), the last end REPORTED this run.  Cold start with
         neither re-raises: there is no safe position to report."""
         try:
             return self._probe_shard(slot)
         except Exception as e:
-            if self._transient(e):
+            if _is_transient(e):
                 cached = self._probe_cache.get(slot)
                 if cached is not None:
                     return cached[1]
@@ -1122,7 +759,25 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
             ends = list(ex.map(self._probe_resilient, slots))
         return dict(zip(slots, ends))
 
+    @staticmethod
+    def _check_offset(off: dict) -> None:
+        """A flat ``{"lsn", "idx", "seq"}`` offset was checkpointed by
+        the removed driver-side single-slot reader.  Read as a per-slot
+        offset it would restart ``seq`` at 0 at the same epoch, and
+        the sink's (epoch, seq) guard would silently drop those rows
+        as stale — so refuse it and name the fix."""
+        if "seq" in off and not isinstance(off["seq"], dict):
+            raise ValueError(
+                f"checkpointed offset {off!r} was written by the removed"
+                " single-slot reader (a flat lsn/idx/seq offset, not one"
+                " per slot): restart from a FRESH checkpointLocation and"
+                " bump the epoch (option 'epoch' / cdc stream --epoch)"
+                " so the sink accepts the restarted seq"
+            )
+
     def partitions(self, start: dict, end: dict):
+        self._check_offset(start)
+        self._check_offset(end)
         parts = []
         for slot in sorted(self.shards):
             s = start.get(slot, {"lsn": 0, "idx": 0, "seq": 0})
@@ -1166,13 +821,13 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
                     )
                     break
                 except Exception as e:
-                    if attempt == 29 or not self._transient(e):
+                    if attempt == 29 or not _is_transient(e):
                         self._raise_typed_if_invalidated(shard, e)
                         raise
                     time.sleep(1.0)
             changes = parse_pgoutput(raw)
             upto = {"lsn": end["lsn"], "idx": end["idx"]}
-            rows, got, _adv = _slice_changes(
+            rows, got = _slice_changes(
                 changes, start, upto, shard["slot"], self.epoch
             )
             if got["seq"] == end["seq"]:
@@ -1230,7 +885,7 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
                 )
                 break
             except Exception as e:
-                if attempt == 29 or not self._transient(e):
+                if attempt == 29 or not _is_transient(e):
                     self._raise_typed_if_invalidated(shard, e)
                     raise
                 time.sleep(1.0)
@@ -1328,10 +983,11 @@ class PgShovelShardedStreamReader(DataSourceStreamReader):
             self._commit_shard(slot, e)
         except Exception as exc:
             self._probe_cache.pop(slot, None)
-            if not self._transient(exc):
+            if not _is_transient(exc):
                 raise
 
     def commit(self, end: dict) -> None:
+        self._check_offset(end)
         # idle shards are skipped outright: re-committing an unchanged
         # end would rewrite the meta row, re-advance the slot and pop
         # the probe cache — defeating the idle-shard short-circuit
@@ -2062,14 +1718,11 @@ class PgShovelDataSource(DataSource):
     a first-class Spark streaming source emitting CHANGE_SCHEMA rows.
 
     Options: sockdir OR host (one required; host + password = the TCP
-    SCRAM transport), slot (required), database, user,
-    port, publication (required), proto_version, streaming ('true'
-    enables protocol v2 in-progress transaction streaming), origin
-    ('none' drops foreign-origin transactions whole — loop
-    prevention), publisher, epoch, max_changes (rows per batch),
-    transport ('sql' | 'walsender'), poll_seconds, shards (JSON array
-    of {slot, publication, database} — switches to the
-    partition-parallel sharded reader; see PgShovelShardedStreamReader).
+    SCRAM transport), database, user, port, epoch, max_changes (rows
+    per batch, planned in whole commits; a larger commit is chunked),
+    and the slots to read: shards (JSON array of {slot, publication,
+    database}) or slot + publication (a one-shard list).  See
+    PgShovelStreamReader.
     """
 
     @classmethod
@@ -2089,15 +1742,7 @@ class PgShovelDataSource(DataSource):
         return PgShovelBatchReader(self.options, schema)
 
     def streamReader(self, schema: StructType):
-        # full (partition-parallel) reader only in sharded mode; the
-        # base-class NotImplementedError otherwise makes the runner
-        # fall back to simpleStreamReader (pyspark's _streamReader)
-        if _opt(self.options, "shards"):
-            return PgShovelShardedStreamReader(self.options)
-        return super().streamReader(schema)
-
-    def simpleStreamReader(self, schema: StructType):
-        return PgShovelSimpleStreamReader(self.options)
+        return PgShovelStreamReader(self.options)
 
     def streamWriter(self, schema: StructType, overwrite: bool):
         return PgUpsertStreamWriter(self.options, schema)

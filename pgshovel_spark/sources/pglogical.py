@@ -46,7 +46,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from pgshovel_spark.sources.pgwire import PgParams
+from pgshovel_spark.sources.pgwire import PgError, PgParams
 
 __all__ = [
     "drop_slot",
@@ -73,8 +73,22 @@ def _check_slot(slot: str) -> str:
 
 
 def drop_slot(params: PgParams, slot: str) -> None:
-    with params.connect() as c:
-        c.query(f"select pg_drop_replication_slot('{_check_slot(slot)}')")
+    """Drop ``slot``, waiting up to 30 s for a busy one: a
+    consumer that just stopped can still hold the slot active (a peek
+    in flight, a walsender exiting), and the drop then fails with
+    55006 "replication slot is active" until it lets go."""
+    import time
+
+    deadline = time.monotonic() + 30.0
+    while True:
+        try:
+            with params.connect() as c:
+                c.query(f"select pg_drop_replication_slot('{_check_slot(slot)}')")
+            return
+        except PgError as e:
+            if e.sqlstate != "55006" or time.monotonic() >= deadline:
+                raise
+        time.sleep(0.25)
 
 
 def advance(params: PgParams, slot: str, upto_lsn: str) -> None:

@@ -20,8 +20,9 @@ implements that decoder and BOTH transports:
   walsender transport — a ``replication=database`` startup, ``START_
   REPLICATION SLOT ... LOGICAL`` into CopyBoth mode, XLogData /
   keepalive framing, and Standby Status Update feedback (the
-  flush-LSN confirmation a production consumer sends).  This is what
-  pointing the engine at an actual RDS/production instance exercises.
+  flush-LSN confirmation a production consumer sends).  It creates
+  slots with an exported snapshot (``exported_slot_snapshot``, the
+  bootstrap->stream handoff); the stream reader itself peeks.
 
 Decoder semantics:
 
@@ -35,8 +36,8 @@ Decoder semantics:
 
 Scale posture: a slot is SERIAL by design (WAL commit order IS the
 contract), so decode is a control-plane read; executor fan-out
-happens per slot (the sharded reader) or after the source hands rows
-to Spark.  Relation metadata is a tiny per-stream dict (pgoutput
+happens per slot (the stream reader's one input partition per slot)
+or after the source hands rows to Spark.  Relation metadata is a tiny per-stream dict (pgoutput
 re-sends a Relation message whenever the schema changes, which is
 also how live drift surfaces mid-stream).
 """
@@ -53,7 +54,6 @@ __all__ = [
     "create_slot_pgoutput",
     "exported_slot_snapshot",
     "create_publication",
-    "backlog_stats_pgoutput",
     "backlog_plan_pgoutput",
     "giant_commit_plan",
     "chunk_slot_changes_pgoutput",
@@ -638,71 +638,17 @@ def raw_slot_changes_pgoutput(
     return [(lsn, int(xid), data) for lsn, xid, data in res.rows]
 
 
-def backlog_stats_pgoutput(
-    params: PgParams,
-    slot: str,
-    publication: str,
-    after_lsn: str = "0/0",
-    limit: int | None = None,
-) -> tuple[int, str | None]:
-    """``(n_changes, last_commit_lsn)`` of the slot backlog in commits
-    strictly AFTER ``after_lsn`` — the sharded stream reader's
-    end-offset probe, computed in ONE server-side pass with no bytes
-    shipped (the peek is aggregated in SQL, not fetched).
-
-    Counting rule mirrors ``parse_pgoutput`` exactly: one change per
-    Insert/Update/Delete message, one per truncated relation in a
-    Truncate message (nrels, big-endian at bytes 1..4); Begin/Commit/
-    Relation/Origin/Type/Message frames are free.  Each change's
-    commit lsn is the lsn of its transaction's Commit frame — rows are
-    grouped to their closing commit via a running commit-frame count
-    (decoding emits whole transactions in commit order, so the group
-    of a change is closed by the next 'C' frame).  Protocol v1 only
-    (the sharded reader's restriction): v2 stream segments interleave
-    and would break the grouping."""
-    import re
-
-    from pgshovel_spark.sources.pglogical import _check_slot
-
-    _check_publication(publication)
-    if not re.match(r"[0-9A-Fa-f]+/[0-9A-Fa-f]+\Z", after_lsn):
-        raise ValueError(f"invalid LSN: {after_lsn!r}")
-    bound = "null" if limit is None else str(int(limit))
-    sql = f"""
-with raw as (
-  select t.lsn, get_byte(t.data, 0) as k, t.data, t.rn
-  from pg_logical_slot_peek_binary_changes('{_check_slot(slot)}', null,
-       {bound}, 'proto_version', '1', 'publication_names', '{publication}')
-       with ordinality as t(lsn, xid, data, rn)
-),
-cg as (
-  select raw.*, coalesce(sum(case when k = 67 then 1 else 0 end) over
-      (order by rn rows between unbounded preceding and 1 preceding), 0)
-      as grp
-  from raw
-),
-commits as (select grp, lsn as clsn from cg where k = 67)
-select
-  coalesce(sum(case
-    when cg.k in (73, 85, 68) then 1
-    when cg.k = 84 then (get_byte(cg.data, 1) << 24)
-      | (get_byte(cg.data, 2) << 16)
-      | (get_byte(cg.data, 3) << 8)
-      | get_byte(cg.data, 4)
-    else 0 end), 0)::bigint as nchanges,
-  max(commits.clsn)::text as last_clsn
-from cg join commits on cg.grp = commits.grp
-where commits.clsn > '{after_lsn}'::pg_lsn
-"""
-    with params.connect() as c:
-        row = c.query(sql)[0].rows[0]
-    return int(row[0]), row[1]
-
-
 #: the CTE scaffolding shared by the aggregated probes: peeked binary
 #: frames with ordinality -> per-frame commit-group index -> per-frame
-#: change count (parse_pgoutput counting parity: I/U/D = 1, Truncate =
-#: nrels big-endian at bytes 1..4, everything else 0)
+#: change count.  Counting mirrors ``parse_pgoutput`` exactly: one
+#: change per Insert/Update/Delete message, one per truncated relation
+#: in a Truncate message (nrels, big-endian at bytes 1..4); Begin/
+#: Commit/Relation/Origin/Type/Message frames are free.  A change's
+#: commit lsn is its transaction's Commit frame: rows are grouped to
+#: their closing commit via a running commit-frame count (decoding
+#: emits whole transactions in commit order, so the group of a change
+#: is closed by the next 'C' frame).  Protocol v1 only: v2 stream
+#: segments interleave and would break the grouping.
 _PROBE_CTES = """
 with raw as (
   select t.lsn, get_byte(t.data, 0) as k, t.data, t.rn
@@ -755,8 +701,7 @@ def backlog_plan_pgoutput(
     alone exceeding the budget yields ``n == 0`` with ``first_count >
     budget``: the caller's signal to switch to intra-commit chunking
     (:func:`giant_commit_plan`).  Counting parity with
-    ``parse_pgoutput`` as in :func:`backlog_stats_pgoutput`; protocol
-    v1 only."""
+    ``parse_pgoutput`` as in ``_PROBE_CTES``; protocol v1 only."""
     import re
 
     from pgshovel_spark.sources.pglogical import _check_slot
@@ -780,7 +725,8 @@ select
   coalesce((select gn from gc order by grp limit 1), 0)::bigint
     as first_count,
   (select clsn from gc order by grp limit 1)::text as first_clsn,
-  (select count(*) from raw)::bigint as frames
+  (select count(*) from raw)::bigint as frames,
+  exists(select 1 from gc where cum > {cap}) as cut
 """
     with params.connect() as c:
         row = c.query(sql)[0].rows[0]
@@ -795,6 +741,9 @@ select
         # advances on Spark's lagging commit) — the caller's signal
         # to widen the window, NOT an idle shard
         "frames": int(row[4]),
+        # a live commit in the window lies past the planned prefix:
+        # the budget, not the window, ended the plan
+        "cut": bool(row[5]),
     }
 
 
@@ -1019,9 +968,6 @@ class ReplicationStream:
         # but not yet StreamCommit'ed/aborted survive across read()
         # calls even when another transaction's commit triggers a parse
         self._streams: dict = {}
-        # decoder-side replication-origin filter (see parse_pgoutput):
-        # set to "none" to drop foreign-origin transactions whole
-        self.origin = "any"
 
     def read(self, max_seconds: float = 5.0, relations=None) -> list[dict]:
         """Read until a Commit message closes a transaction (returning
@@ -1049,9 +995,7 @@ class ReplicationStream:
                     batch.append((lsn_to_str(start), 0, payload[25:]))
                     # Commit (v1) or StreamCommit (v2) closes a txn
                     if payload[25:26] in (b"C", b"c"):
-                        return parse_pgoutput(
-                            batch, rels, self._streams, origin=self.origin
-                        )
+                        return parse_pgoutput(batch, rels, self._streams)
                 elif tag == b"k":  # keepalive: end, clock, reply?
                     end, _clock, reply = struct.unpack("!qqB", payload[1:18])
                     self.wal_end = max(self.wal_end, end)

@@ -322,9 +322,8 @@ def test_cli_cdc_stream_sharded_live(tmp_path, capsys, spark):
                 if c.one("select count(*) from sh_dst") == 50:
                     break
         with params.connect() as c:
-            # both pubs landed through ONE query: only the sharded
-            # reader can drive two slots (no 'slot' option was given,
-            # so a silent fall-back to the simple reader would fail)
+            # both pubs landed through ONE query: both slots of the
+            # shards list were read (no 'slot' option was given)
             assert c.one("select count(*) from sh_dst") == 50
             assert c.one("select v from sh_dst where id = 3") == "ua"
             assert c.one(

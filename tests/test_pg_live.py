@@ -69,6 +69,26 @@ def _slot(pg, table: str, slot: str, pub: str) -> None:
     po.create_slot_pgoutput(pg, slot)
 
 
+#: the stream's first position, and a slice bound past every position
+_ORIGIN = {"lsn": 0, "idx": 0, "seq": 0}
+_ALL = {"lsn": 1 << 64, "idx": 0}
+
+
+def _read_range(rdr, start: dict, end: dict) -> list:
+    """Arrow batches of the planned range (start, end]: ``read`` of
+    each of ``partitions(start, end)`` — what the executors read, and
+    what a restart re-reads for an uncommitted batch."""
+    return [b for p in rdr.partitions(start, end) for b in rdr.read(p)]
+
+
+def _read_batch(rdr, start: dict) -> tuple[list, dict]:
+    """One micro-batch the way the engine plans it, without Spark:
+    ``latestOffset``, then the range's reads; returns ``(Arrow
+    batches, end offset)``."""
+    end = rdr.latestOffset()
+    return _read_range(rdr, start, end), end
+
+
 def _envelope(spark, pg, slot: str, pub: str, origin: str = "any", **peek):
     """Peek ``slot`` through the one capture path (raw pgoutput frames
     -> ``parse_pgoutput`` -> the native source's ``_slice_changes`` and
@@ -85,9 +105,8 @@ def _envelope(spark, pg, slot: str, pub: str, origin: str = "any", **peek):
     from pgshovel_spark.streaming.change_stream import CHANGE_SCHEMA
 
     raw = po.raw_slot_changes_pgoutput(pg, slot, pub, **peek)
-    start = {"lsn": 0, "idx": 0, "seq": 0}
-    rows, _end, _adv = _slice_changes(
-        po.parse_pgoutput(raw, origin=origin), start, None, slot, 0
+    rows, _end = _slice_changes(
+        po.parse_pgoutput(raw, origin=origin), _ORIGIN, _ALL, slot, 0
     )
     batches = _changes_to_batches(rows)
     df = (
@@ -154,7 +173,7 @@ def test_logical_capture_envelope(pg):
     back CHANGE_SCHEMA Arrow batches — keys from replica identity, the
     full before-image of a DELETE under REPLICA IDENTITY FULL, commit
     timestamps on every change, dense seq, publisher = slot."""
-    from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
     from pgshovel_spark.streaming.change_stream import CHANGE_SCHEMA
 
     with pg.connect() as c:
@@ -167,11 +186,10 @@ def test_logical_capture_envelope(pg):
         c.query("update lce_t set bal = 15.50 where id = 1")
         c.query("alter table lce_t replica identity full")
         c.query("delete from lce_t where id = 2")
-    rdr = PgShovelSimpleStreamReader(
+    rdr = PgShovelStreamReader(
         {"sockdir": pg.sockdir, "slot": "lce_slot", "publication": "lce_pub"}
     )
-    it, end = rdr.read(rdr.initialOffset())
-    batches = list(it)
+    batches, end = _read_batch(rdr, rdr.initialOffset())
     assert [f.name for f in batches[0].schema] == CHANGE_SCHEMA.names
     rows = [r for b in batches for r in b.to_pylist()]
     for r in rows:
@@ -184,7 +202,7 @@ def test_logical_capture_envelope(pg):
     assert rows[3]["before"] == {"id": "2", "name": "bob", "bal": "20.00"}
     assert rows[3]["after"] is None and rows[3]["key"] == rows[3]["before"]
     assert all(r["ts"] is not None for r in rows)
-    assert [r["seq"] for r in rows] == [0, 1, 2, 3] and end["seq"] == 4
+    assert [r["seq"] for r in rows] == [0, 1, 2, 3] and end["lce_slot"]["seq"] == 4
     assert {r["publisher"] for r in rows} == {"lce_slot"}
     pgl.drop_slot(pg, "lce_slot")
 
@@ -194,33 +212,38 @@ def test_peek_advance_watermark_contract(pg):
     batch read twice, or re-read by a fresh reader after a crash
     before ``commit``, replays identically), and only ``commit``
     moves the slot — after it a fresh reader starts past the batch."""
-    from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
+    from pgshovel_spark.sources import pgoutput as po
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
 
     with pg.connect() as c:
         c.query("create table wm_t(id int primary key, v int)")
     _slot(pg, "wm_t", "wm_slot", "wm_pub")
     opts = {"sockdir": pg.sockdir, "slot": "wm_slot", "publication": "wm_pub"}
 
-    def ids(it):
-        return [dict(a)["id"] for b in it for a in b.column("after").to_pylist()]
+    def ids(batches):
+        return [dict(a)["id"] for b in batches for a in b.column("after").to_pylist()]
 
     with pg.connect() as c:
         c.query("insert into wm_t values (1, 100)")
-    rdr = PgShovelSimpleStreamReader(opts)
+    rdr = PgShovelStreamReader(opts)
     start = rdr.initialOffset()
-    it1, end1 = rdr.read(start)
-    it2, end2 = rdr.read(start)  # peek is non-destructive
-    assert ids(it1) == ids(it2) == ["1"] and end1 == end2
+    b1, end1 = _read_batch(rdr, start)
+    b2 = _read_range(rdr, start, end1)  # peek is non-destructive
+    assert ids(b1) == ids(b2) == ["1"]
     # crash before commit: a fresh reader replays the batch
-    it, _ = PgShovelSimpleStreamReader(opts).read(start)
-    assert ids(it) == ["1"]
+    assert ids(_read_range(PgShovelStreamReader(opts), start, end1)) == ["1"]
     rdr.commit(end1)  # downstream durable -> move the watermark
     with pg.connect() as c:
         c.query("insert into wm_t values (2, 200)")
-    it, end = PgShovelSimpleStreamReader(opts).read(start)
-    assert ids(it) == ["2"]  # the committed batch is gone from the slot
-    it, idle = rdr.read(end)
-    assert ids(it) == [] and idle == end
+    fresh = PgShovelStreamReader(opts)
+    assert fresh.initialOffset() == end1  # the watermark outlives the reader
+    batches, end = _read_batch(fresh, end1)
+    assert ids(batches) == ["2"]
+    # the committed batch is gone from the slot
+    left = po.parse_pgoutput(po.raw_slot_changes_pgoutput(pg, "wm_slot", "wm_pub"))
+    assert [ch["after"]["id"] for ch in left] == ["2"]
+    batches, idle = _read_batch(fresh, end)
+    assert ids(batches) == [] and idle == end
     pgl.drop_slot(pg, "wm_slot")
 
 
@@ -1528,67 +1551,6 @@ def test_buffered_sock_timeout_preserves_partial_bytes():
     assert rd.read_exact(2) == b"ef"
 
 
-def test_pgdatasource_walsender_survives_backend_kill(pg):
-    """Failover resilience of the native reader on the walsender
-    transport: pg_terminate_backend on its push session between reads
-    must not lose or duplicate a change — the reader reconnects, the
-    slot replays everything past confirmed_flush_lsn, and the
-    position filter drops what was already delivered."""
-    from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
-
-    with pg.connect() as c:
-        c.query("create table fok_t(id int primary key, v text)")
-    _slot(pg, "fok_t", "fok_slot", "fok_pub")
-    rdr = PgShovelSimpleStreamReader(
-        {
-            "sockdir": pg.sockdir,
-            "slot": "fok_slot",
-            "publication": "fok_pub",
-            "transport": "walsender",
-            "poll_seconds": "2.0",
-        }
-    )
-    got: list = []
-    cur = rdr.initialOffset()
-
-    def drain(n_rows):
-        nonlocal cur
-        for _ in range(20):
-            if len(got) >= n_rows:
-                return
-            it, end = rdr.read(cur)
-            got.extend(r for b in it for r in b.to_pylist())
-            if end != cur:
-                rdr.commit(end)
-                cur = end
-
-    try:
-        with pg.connect() as c:
-            c.query("insert into fok_t select g, 'a' || g from generate_series(1, 20) g")
-        drain(20)  # the first read peeks; its commit hands over to push
-        with pg.connect() as c:
-            c.query("insert into fok_t select g, 'b' || g from generate_series(21, 25) g")
-        drain(25)
-        assert rdr._ws is not None  # steady state rides the push session
-        with pg.connect() as c:  # kill the walsender under the reader
-            killed = c.query(
-                "select pg_terminate_backend(active_pid)"
-                " from pg_replication_slots where slot_name = 'fok_slot'"
-            )[0].rows[0][0]
-        assert killed is True
-        with pg.connect() as c:
-            c.query("insert into fok_t select g, 'c' || g from generate_series(26, 35) g")
-        drain(35)
-    finally:
-        rdr._close_ws()
-    ids = sorted(int(dict(r["after"])["id"]) for r in got)
-    assert ids == list(range(1, 36))  # nothing lost, nothing duplicated
-    assert [r["seq"] for r in got] == list(range(35))
-    assert all(r["ts"] is not None for r in got)
-    assert _wait_for(lambda: not _slot_active(pg, "fok_slot"), timeout=30)
-    pgl.drop_slot(pg, "fok_slot")
-
-
 def test_walsender_interleaved_stream_segments_survive_commit_parse():
     """v2 interleaving: a small transaction COMMITS between a large
     streamed transaction's segments.  The commit-triggered parse must
@@ -1646,15 +1608,16 @@ def _wait_for(cond, timeout=90.0):
     return cond()
 
 
-def test_pgdatasource_offset_algebra_unit():
+def test_pgdatasource_offset_algebra_unit(monkeypatch):
     """Offset slicing without a server: positions key on COMMIT lsn —
     a transaction that started early and committed late arrives with
     change lsns LOWER than already-delivered ones and must still be
     delivered (the interleaved-transaction ordering hazard)."""
-    from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
-
-    rdr = PgShovelSimpleStreamReader(
-        {"sockdir": "/nonexistent", "slot": "s", "publication": "p"}
+    from pgshovel_spark.sources import pgoutput as po
+    from pgshovel_spark.sources.pgdatasource import (
+        PgShovelStreamReader,
+        _ShardPartition,
+        _slice_changes,
     )
 
     def ch(op, commit_lsn, change_lsn, key):
@@ -1667,25 +1630,61 @@ def test_pgdatasource_offset_algebra_unit():
 
     # batch 1: txn B (commit 0/120) only — txn A still open
     b1 = [ch("INSERT", "0/120", "0/110", 1)]
-    rows1, end1, _adv = rdr._slice(b1, {"lsn": 0, "idx": 0, "seq": 0}, None)
+    rows1, end1 = _slice_changes(b1, _ORIGIN, _ALL, "s", 0)
     assert len(rows1) == 1 and rows1[0][9] == 0  # seq 0
     # batch 2 re-peeks batch 1 PLUS txn A (commit 0/130, change lsn
     # 0/100 — LOWER than everything already seen) with two changes
     b2 = b1 + [ch("INSERT", "0/130", "0/100", 2), ch("UPDATE", "0/130", "0/105", 2)]
-    rows2, end2, _adv = rdr._slice(b2, end1, None)
+    rows2, end2 = _slice_changes(b2, end1, _ALL, "s", 0)
     assert [r[0] for r in rows2] == ["INSERT", "UPDATE"]
     assert [r[9] for r in rows2] == [1, 2]  # dense seq continuation
     assert end2["seq"] == 3 and end2["lsn"] > end1["lsn"]
     # replay of the already-planned range is exact
-    rows_replay, got, _adv = rdr._slice(b2, end1, end2)
+    rows_replay, got = _slice_changes(b2, end1, end2, "s", 0)
     assert rows_replay == rows2 and got == end2
-    # a short replay (slot advanced externally) must raise, not ship
-    import pytest as _p
 
-    short = b1  # txn A's rows vanished
-    with _p.raises(RuntimeError, match="cannot replay"):
-        rdr._peek_parse = lambda limit: (short, len(short))
-        list(rdr.readBetweenOffsets(end1, end2))
+    # the executor read slices the same way: the peek is stubbed, the
+    # parse returns ``peeked``
+    rdr = PgShovelStreamReader(
+        {"sockdir": "/nonexistent", "slot": "s", "publication": "p"}
+    )
+    part = _ShardPartition(rdr.shards["s"], end1, end2)
+    peeked = b2
+    monkeypatch.setattr(po, "raw_slot_changes_pgoutput", lambda *a, **k: [])
+    monkeypatch.setattr(po, "parse_pgoutput", lambda raw: peeked)
+    out = [r for b in rdr.read(part) for r in b.to_pylist()]
+    assert [(r["op"], r["seq"]) for r in out] == [("INSERT", 1), ("UPDATE", 2)]
+    # a short replay (slot advanced externally) must raise, not ship
+    peeked = b1  # txn A's rows vanished
+    with pytest.raises(RuntimeError, match="cannot reproduce"):
+        list(rdr.read(part))
+
+
+def test_stream_rejects_single_slot_reader_checkpoint():
+    """A checkpoint written by the removed driver-side single-slot
+    reader holds a flat ``{lsn, idx, seq}`` offset.  Read as a per-slot
+    offset it would restart seq at 0 at the same epoch, which the
+    sink's (epoch, seq) guard silently drops as stale — the reader
+    must refuse it loudly and name the fix."""
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
+
+    rdr = PgShovelStreamReader(
+        {"sockdir": "/nonexistent", "slot": "s", "publication": "p"}
+    )
+    flat = {"lsn": 0x130, "idx": 2, "seq": 3}
+    per_slot = {"s": {"lsn": 0x140, "idx": 1 << 62, "seq": 5}}
+    for call in (
+        lambda: rdr.partitions(flat, per_slot),
+        lambda: rdr.partitions(flat, flat),
+        lambda: rdr.commit(flat),
+    ):
+        with pytest.raises(ValueError, match="FRESH checkpointLocation.*epoch"):
+            call()
+    # a slot that happens to be NAMED "seq" is still a per-slot offset
+    seq_rdr = PgShovelStreamReader(
+        {"sockdir": "/nonexistent", "slot": "seq", "publication": "p"}
+    )
+    assert seq_rdr.partitions({"seq": dict(_ORIGIN)}, {"seq": dict(_ORIGIN)}) == []
 
 
 def test_pgdatasource_stream_capture(spark, pg, tmp_path):
@@ -2373,9 +2372,10 @@ def test_pgbatch_pushdown_safety_rules():
 def test_pgdatasource_survives_server_crash_restart(spark, tmp_path):
     """Failover drill for the native source: the SERVER crash-stops
     (-m immediate: no shutdown checkpoint, WAL replay on start) while
-    a streaming query is live.  The short-lived SQL transport means a
-    trigger that lands in the outage window fails the query; the
-    production posture is a supervisor restart from the checkpoint —
+    a streaming query is live.  A trigger that lands in the outage
+    window either rides through (the probe reports no progress) or
+    fails the query; the production posture for the latter is a
+    supervisor restart from the checkpoint —
     either way the slot's confirmed_flush_lsn and Spark's offset log
     reconcile to exactly-once delivery across the crash."""
     from pgshovel_spark.sources import pgoutput as po
@@ -2447,58 +2447,6 @@ def test_pgdatasource_survives_server_crash_restart(spark, tmp_path):
         server.stop()
 
 
-def test_pgdatasource_walsender_transport(spark, pg, tmp_path):
-    """Native source on the PUSH transport: one persistent
-    START_REPLICATION CopyBoth session held by the reader, slot
-    watermark confirmed by Standby Status Update at Spark's own batch
-    commit, live tail through the running query."""
-    from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pgdatasource import register_pgshovel
-
-    with pg.connect() as c:
-        c.query("create table nws_t(id int primary key, v text)")
-    po.create_publication(pg, "nws_pub", ["nws_t"])
-    po.create_slot_pgoutput(pg, "nws_slot")
-    with pg.connect() as c:
-        c.query("insert into nws_t select g, 'a' || g from generate_series(1, 25) g")
-        c.query("update nws_t set v = 'u' where id <= 5")
-
-    register_pgshovel(spark)
-    got: list = []
-    q = (
-        spark.readStream.format("pgshovel")
-        .option("sockdir", pg.sockdir)
-        .option("slot", "nws_slot")
-        .option("publication", "nws_pub")
-        .option("transport", "walsender")
-        .load()
-        .writeStream.foreachBatch(lambda b, _i: got.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        assert _wait_for(lambda: len(got) == 30), f"got {len(got)}"
-        assert sorted(r.seq for r in got) == list(range(30))
-        # Standby Status Update moved the durable watermark
-        def _flushed():
-            with pg.connect() as c:
-                f = c.one(
-                    "select confirmed_flush_lsn::text from"
-                    " pg_replication_slots where slot_name = 'nws_slot'"
-                )
-            return po.lsn_to_int(f) > 0
-        assert _wait_for(_flushed)
-        with pg.connect() as c:
-            c.query("insert into nws_t values (99, 'late')")
-        assert _wait_for(lambda: len(got) == 31), f"got {len(got)}"
-    finally:
-        q.stop()
-    # the runner's walsender session must release the slot on stop
-    assert _wait_for(lambda: not _slot_active(pg, "nws_slot"), timeout=30)
-    pgl.drop_slot(pg, "nws_slot")
-
-
 def _slot_active(pg, slot):
     with pg.connect() as c:
         return bool(
@@ -2509,115 +2457,34 @@ def _slot_active(pg, slot):
         )
 
 
-def test_pgdatasource_walsender_restart_replays_via_peek(spark, pg, tmp_path):
-    """The hybrid transport contract: steady-state reads ride the
-    push stream, but a restart's uncommitted-range replay comes from
-    the SQL peek — the two transports must agree on (commit_lsn, idx)
-    positions or the replay raises loudly.  Stop mid-stream, write
-    while down, restart from the same checkpoint: exactly-once."""
+def test_drop_slot_waits_for_busy_slot(pg):
+    """A consumer that just stopped can still hold its slot active for
+    a moment (a peek in flight, a walsender exiting): ``drop_slot``
+    waits for the slot to be released instead of failing with 55006
+    "replication slot is active"."""
+    import time
+
     from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pgdatasource import register_pgshovel
 
     with pg.connect() as c:
-        c.query("create table nwr_t(id int primary key, v text)")
-    po.create_publication(pg, "nwr_pub", ["nwr_t"])
-    po.create_slot_pgoutput(pg, "nwr_slot")
-    register_pgshovel(spark)
-    ckpt = str(tmp_path / "ckpt")
-    batches: dict = {}
+        c.query("create table dsw_t(id int primary key)")
+    _slot(pg, "dsw_t", "dsw_slot", "dsw_pub")
+    rc = po.PgReplicationConnection(pg)
+    stream = rc.start_replication("dsw_slot", "dsw_pub")
+    assert _slot_active(pg, "dsw_slot")
 
-    def got():  # batchId-idempotent collector (replay-safe)
-        return [r for _b, rows in sorted(batches.items()) for r in rows]
+    def release():
+        time.sleep(1.0)
+        stream.stop()
+        rc.close()
 
-    def _start():
-        return (
-            spark.readStream.format("pgshovel")
-            .option("sockdir", pg.sockdir)
-            .option("slot", "nwr_slot")
-            .option("publication", "nwr_pub")
-            .option("transport", "walsender")
-            .load()
-            .writeStream.foreachBatch(
-                lambda b, i: batches.__setitem__(i, b.collect())
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-
-    with pg.connect() as c:
-        c.query("insert into nwr_t select g, 'x' || g from generate_series(1, 15) g")
-    q = _start()
+    t = threading.Thread(target=release)
+    t.start()
     try:
-        assert _wait_for(lambda: len(got()) == 15), f"got {len(got())}"
+        pgl.drop_slot(pg, "dsw_slot")
     finally:
-        q.stop()
-        q.awaitTermination(30)
-    # the stopped run's session must release the slot before the
-    # restart's peek replay can touch it
-    assert _wait_for(lambda: not _slot_active(pg, "nwr_slot"), timeout=30)
-
-    with pg.connect() as c:
-        c.query("insert into nwr_t select g, 'y' || g from generate_series(16, 22) g")
-        c.query("delete from nwr_t where id = 1")
-
-    q = _start()
-    try:
-        assert _wait_for(lambda: len(got()) == 23), f"got {len(got())}"
-        assert sorted(r.seq for r in got()) == list(range(23))
-        assert sum(1 for r in got() if r.op == "DELETE") == 1
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    # the stopping run's push session releases the slot asynchronously
-    assert _wait_for(lambda: not _slot_active(pg, "nwr_slot"), timeout=30)
-    pgl.drop_slot(pg, "nwr_slot")
-
-
-def test_pgdatasource_schema_drift_mid_stream(spark, pg, tmp_path):
-    """Live DDL under a running native-source query: pgoutput re-sends
-    the Relation message after ALTER TABLE, so rows decoded after the
-    drift carry the new column in their after-map — the envelope's
-    map<string,string> payload makes source schema drift a DATA-level
-    event, never a Spark schema break."""
-    from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pgdatasource import register_pgshovel
-
-    with pg.connect() as c:
-        c.query("create table drift_n(id int primary key, v text)")
-    po.create_publication(pg, "driftn_pub", ["drift_n"])
-    po.create_slot_pgoutput(pg, "driftn_slot")
-    register_pgshovel(spark)
-    got: list = []
-    q = (
-        spark.readStream.format("pgshovel")
-        .option("sockdir", pg.sockdir)
-        .option("slot", "driftn_slot")
-        .option("publication", "driftn_pub")
-        .load()
-        .writeStream.foreachBatch(lambda b, _i: got.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        with pg.connect() as c:
-            c.query("insert into drift_n values (1, 'before')")
-        assert _wait_for(lambda: len(got) == 1)
-        assert set(got[0].after.keys()) == {"id", "v"}
-
-        with pg.connect() as c:  # live DDL while the query runs
-            c.query("alter table drift_n add column extra bigint default 7")
-            c.query("insert into drift_n values (2, 'after', 42)")
-        assert _wait_for(lambda: len(got) == 2)
-        post = [r for r in got if r.key["id"] == "2"][0]
-        assert set(post.after.keys()) == {"id", "v", "extra"}
-        assert post.after["extra"] == "42"
-        # pre-drift rows keep their original shape — no retro-widening
-        assert set(got[0].after.keys()) == {"id", "v"}
-    finally:
-        q.stop()
-    pgl.drop_slot(pg, "driftn_slot")
+        t.join()
+    assert pgl.slot_wal_status(pg, "dsw_slot") is None
 
 
 # ---------------------------------------------------------------------------
@@ -3115,8 +2982,8 @@ def test_pgdatasource_sharded_two_slots_restart_exactly_once(spark, pg, tmp_path
 
 
 def test_backlog_stats_counts_match_parser(spark, pg):
-    """The sharded reader's end-offset probe (backlog_stats_pgoutput)
-    must count EXACTLY what parse_pgoutput emits — the probe and the
+    """The stream reader's end-offset probe (backlog_plan_pgoutput,
+    no budget) must count EXACTLY what parse_pgoutput emits — the probe and the
     executor slice otherwise desync and the reader's loud-failure
     guard trips.  Pinned on the tricky shapes: multi-statement
     transactions, TRUNCATE (one change per truncated relation),
@@ -3150,24 +3017,26 @@ def test_backlog_stats_counts_match_parser(spark, pg):
         )
     raw = po.raw_slot_changes_pgoutput(pg, "bs_slot", "bs_pub")
     parsed = po.parse_pgoutput(raw)
-    n, last = po.backlog_stats_pgoutput(pg, "bs_slot", "bs_pub")
+    def stats(after_lsn="0/0"):
+        plan = po.backlog_plan_pgoutput(
+            pg, "bs_slot", "bs_pub", after_lsn=after_lsn
+        )
+        return plan["n"], plan["last_clsn"]
+
+    n, last = stats()
     # 8 inserts + 1 update + 1 delete + 2 truncate-relations = 12
     assert len(parsed) == n == 12
     assert last == parsed[-1]["commit_lsn"]
 
     # after_lsn at the FIRST commit boundary: only later commits count
     first_commit = parsed[0]["commit_lsn"]
-    n_tail, last_tail = po.backlog_stats_pgoutput(
-        pg, "bs_slot", "bs_pub", after_lsn=first_commit
-    )
+    n_tail, last_tail = stats(after_lsn=first_commit)
     assert n_tail == sum(
         1 for ch in parsed if ch["commit_lsn"] != first_commit
     ) == 4
     assert last_tail == last
     # past the last commit: empty backlog
-    n_none, last_none = po.backlog_stats_pgoutput(
-        pg, "bs_slot", "bs_pub", after_lsn=last
-    )
+    n_none, last_none = stats(after_lsn=last)
     assert n_none == 0 and last_none is None
     pgl.drop_slot(pg, "bs_slot")
 
@@ -3252,7 +3121,7 @@ def test_sharded_reader_rejects_all_tables_publication(pg):
     import dataclasses
 
     from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pgdatasource import PgShovelShardedStreamReader
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
 
     with pg.connect() as c:
         c.query("create database shr_all")
@@ -3261,7 +3130,7 @@ def test_sharded_reader_rejects_all_tables_publication(pg):
         c.query("create table ev_all(id bigint primary key)")
         c.query("create publication shr_pub_all_tables for all tables")
     po.create_slot_pgoutput(pa_, "shr_slot_all")
-    rdr = PgShovelShardedStreamReader(
+    rdr = PgShovelStreamReader(
         {
             "sockdir": pg.sockdir,
             "shards": '[{"slot": "shr_slot_all", "publication":'
@@ -3285,7 +3154,7 @@ def test_sharded_commit_crash_window_is_absorbed(pg, monkeypatch):
 
     from pgshovel_spark.sources import pgoutput as po
     from pgshovel_spark.sources import pglogical as pgl_mod
-    from pgshovel_spark.sources.pgdatasource import PgShovelShardedStreamReader
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
 
     with pg.connect() as c:
         c.query("create database shr_cw")
@@ -3303,7 +3172,7 @@ def test_sharded_commit_crash_window_is_absorbed(pg, monkeypatch):
     def n_rows(it):
         return sum(b.num_rows for b in it)
 
-    rdr = PgShovelShardedStreamReader(opts)
+    rdr = PgShovelStreamReader(opts)
     start = rdr.initialOffset()
     with pc.connect() as c:
         c.query("insert into ev_cw select g, 'a' || g from generate_series(1, 10) g")
@@ -3326,7 +3195,7 @@ def test_sharded_commit_crash_window_is_absorbed(pg, monkeypatch):
 
     with pc.connect() as c:
         c.query("insert into ev_cw select g, 'b' || g from generate_series(11, 15) g")
-    rdr2 = PgShovelShardedStreamReader(opts)  # restarted driver
+    rdr2 = PgShovelStreamReader(opts)  # restarted driver
     end2 = rdr2.latestOffset()
     assert end2["shr_slot_cw"]["seq"] == 15  # dense, no double count
     (p2,) = rdr2.partitions(end1, end2)
@@ -3457,7 +3326,7 @@ def test_sharded_probe_short_circuit_and_chunked_drain(pg, monkeypatch):
     import dataclasses
 
     from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pgdatasource import PgShovelShardedStreamReader
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
 
     with pg.connect() as c:
         c.query("create database shr_pc")
@@ -3476,7 +3345,7 @@ def test_sharded_probe_short_circuit_and_chunked_drain(pg, monkeypatch):
 
     monkeypatch.setattr(po, "backlog_plan_pgoutput", counting)
 
-    rdr = PgShovelShardedStreamReader(
+    rdr = PgShovelStreamReader(
         {
             "sockdir": pg.sockdir,
             "max_changes": "50",
@@ -4070,7 +3939,7 @@ def test_sharded_giant_commit_chunked_direct(pg):
     import dataclasses
 
     from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pgdatasource import PgShovelShardedStreamReader
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
 
     with pg.connect() as c:
         c.query("create database shr_gc")
@@ -4094,7 +3963,7 @@ def test_sharded_giant_commit_chunked_direct(pg):
         "shards": '[{"slot": "shr_slot_gc", "publication": "shr_pub_gc",'
         ' "database": "shr_gc"}]',
     }
-    rdr = PgShovelShardedStreamReader(opts)
+    rdr = PgShovelStreamReader(opts)
     cur = rdr.initialOffset()
     sizes, seqs, ids = [], [], []
 
@@ -4137,7 +4006,7 @@ def test_sharded_giant_commit_chunked_direct(pg):
 
     # driver restart MID-COMMIT: a fresh instance's initialOffset
     # (what a FRESH checkpoint would start from) IS the chunk position
-    rdr = PgShovelShardedStreamReader(opts)
+    rdr = PgShovelStreamReader(opts)
     assert rdr.initialOffset() == {"shr_slot_gc": cur["shr_slot_gc"]}
     while True:
         nxt = drain_one(rdr, cur)
@@ -4174,7 +4043,7 @@ def test_sharded_chunk_truncate_frame_jump(pg):
     import dataclasses
 
     from pgshovel_spark.sources import pgoutput as po
-    from pgshovel_spark.sources.pgdatasource import PgShovelShardedStreamReader
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
 
     with pg.connect() as c:
         c.query("create database shr_tj")
@@ -4190,7 +4059,7 @@ def test_sharded_chunk_truncate_frame_jump(pg):
             " truncate tj_a, tj_b, tj_c;"
             " insert into tj_a values (2); commit"
         )
-    rdr = PgShovelShardedStreamReader(
+    rdr = PgShovelStreamReader(
         {
             "sockdir": pg.sockdir,
             "max_changes": "2",
@@ -4288,9 +4157,6 @@ def test_sharded_bounded_multi_commit_stream_drain(spark, pg, tmp_path):
     assert spans[0][0] == 0 and spans[-1][1] == 59_999
     for (_a0, a1), (b0, _b1) in zip(spans, spans[1:]):
         assert b0 == a1 + 1
-    # a peek the stopped query's python worker started still holds the
-    # slot for a moment after awaitTermination returns
-    assert _wait_for(lambda: not _slot_active(pp, "shr_slot_mc"), timeout=30)
     pgl.drop_slot(pp, "shr_slot_mc")
 
 
@@ -4425,13 +4291,13 @@ def _invalidate_slot(params, slot, table="ev_junk"):
 def test_slot_invalidation_typed_error():
     """A slot the server invalidated (WAL-retention overrun) surfaces
     as the TYPED SlotInvalidatedError naming the slot — from the
-    sharded probe AND the single-slot peek — instead of a generic
+    driver's probe AND the executor's read — instead of a generic
     55000 buried in a retry loop.  Runs on its own scratch instance:
     max_slot_wal_keep_size is server-global."""
     from pgshovel_spark.sources import pgoutput as po
     from pgshovel_spark.sources.pgdatasource import (
-        PgShovelShardedStreamReader,
-        PgShovelSimpleStreamReader,
+        PgShovelStreamReader,
+        _ShardPartition,
     )
     from pgshovel_spark.sources.pgwire import SlotInvalidatedError
 
@@ -4453,7 +4319,7 @@ def test_slot_invalidation_typed_error():
         )
         _invalidate_slot(params, "inv_slot")
 
-        rdr = PgShovelShardedStreamReader(
+        rdr = PgShovelStreamReader(
             {
                 "sockdir": params.sockdir,
                 "shards": '[{"slot": "inv_slot", "publication":'
@@ -4464,15 +4330,18 @@ def test_slot_invalidation_typed_error():
             rdr.latestOffset()
         assert ei.value.slot == "inv_slot"
 
-        srdr = PgShovelSimpleStreamReader(
+        # the executor path: a restarted query replays its pending
+        # batch through read() before any probe runs
+        srdr = PgShovelStreamReader(
             {
                 "sockdir": params.sockdir,
                 "slot": "inv_slot",
                 "publication": "inv_pub",
             }
         )
+        pending = {"lsn": 1 << 40, "idx": 1 << 62, "seq": 1}
         with pytest.raises(SlotInvalidatedError, match="inv_slot"):
-            srdr.read(srdr.initialOffset())
+            srdr.read(_ShardPartition(srdr.shards["inv_slot"], _ORIGIN, pending))
 
         # a healthy slot must NOT trip the check
         po.create_slot_pgoutput(params, "inv_ok")
@@ -4646,8 +4515,8 @@ def test_rebootstrap_self_heal_end_exact(spark, tmp_path):
 def _capped_reader(pp, name: str, rows_sql: list[str], max_changes: int):
     """A fresh table/publication/slot ``<name>_t/_pub/_slot`` in the
     ``pp`` database, the workload committed (one transaction per
-    statement), and a simple reader capped at ``max_changes``."""
-    from pgshovel_spark.sources.pgdatasource import PgShovelSimpleStreamReader
+    statement), and a one-slot reader capped at ``max_changes``."""
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
 
     with pp.connect() as c:
         c.query(f"create table {name}_t(id bigint primary key, v text)")
@@ -4655,7 +4524,7 @@ def _capped_reader(pp, name: str, rows_sql: list[str], max_changes: int):
     with pp.connect() as c:
         for q in rows_sql:
             c.query(q.format(t=f"{name}_t"))
-    return PgShovelSimpleStreamReader(
+    return PgShovelStreamReader(
         {
             "sockdir": pp.sockdir,
             "database": pp.database,
@@ -4667,25 +4536,32 @@ def _capped_reader(pp, name: str, rows_sql: list[str], max_changes: int):
 
 
 def _engine_order_drain(rdr) -> tuple[list, list]:
-    """Drive a simple reader in the engine's order: batch N+1 is
-    planned (``read``) BEFORE ``commit(N)`` runs, and an idle read
-    commits nothing — so the LAST batch stays uncommitted, exactly as
-    in a running query until new data arrives.  Returns the batch
-    sizes and end offsets."""
+    """Drive a reader in the engine's order: ``latestOffset`` plans
+    batch N+1, THEN ``commit(N)`` runs, then batch N+1 is read — and
+    an idle probe plans no batch and commits nothing, so the LAST
+    batch stays uncommitted, exactly as in a running query until new
+    data arrives.  Returns the batch sizes and the one slot's end
+    offsets."""
+    (slot,) = rdr.shards
     cur, prev = rdr.initialOffset(), None
     sizes, ends = [], []
     for _ in range(60):
-        it, end = rdr.read(cur)
-        n = sum(b.num_rows for b in it)
-        if n == 0:
-            assert end == cur  # idle reproduces the start EXACTLY
-            break
+        end = rdr.latestOffset()
+        if end == cur:
+            break  # idle reproduces the start EXACTLY
         if prev is not None:
             rdr.commit(prev)
-        sizes.append(n)
-        ends.append(end)
+        sizes.append(sum(b.num_rows for b in _read_range(rdr, cur, end)))
+        ends.append(end[slot])
         prev = cur = end
     return sizes, ends
+
+
+def _replay(rdr, start: dict, end: dict) -> int:
+    """Rows of the one slot's range (start, end] read again — the
+    restart replay of a planned but uncommitted batch."""
+    (slot,) = rdr.shards
+    return sum(b.num_rows for b in _read_range(rdr, {slot: start}, {slot: end}))
 
 
 def _confirmed_flush(pp, slot: str) -> int:
@@ -4710,12 +4586,13 @@ def cap_db(pg):
 
 
 def test_simple_reader_max_changes_caps_batches(cap_db):
-    """The single-slot reader's ``max_changes`` is a real BATCH bound:
+    """The single-slot stream's ``max_changes`` is a real BATCH bound:
     a 100-row transaction under max_changes=30 drains as
-    [30, 30, 30, 10] in engine order, mid-commit ends advance the slot
-    only to the last complete boundary ('adv' — here none exists, so
-    the watermark holds), seq stays dense and the pending batch
-    replays exactly (the restart path)."""
+    [30, 30, 30, 10] in engine order — chunks of one giant commit,
+    whose mid-commit ends (carrying the frame ordinal ``rn``) record
+    their position without advancing the slot, because an advance to
+    the commit would discard its undelivered tail — seq stays dense
+    and the pending batch replays exactly (the restart path)."""
     pp = cap_db
     rdr = _capped_reader(
         pp, "cap",
@@ -4726,22 +4603,18 @@ def test_simple_reader_max_changes_caps_batches(cap_db):
     sizes, ends = _engine_order_drain(rdr)
     assert sizes == [30, 30, 30, 10], sizes
     assert [e["seq"] for e in ends] == [30, 60, 90, 100]
-    # the three mid-commit ends carry a safe advance boundary; with no
-    # complete earlier transaction it is 0 and the watermark held
-    assert all("adv" in e for e in ends[:3]) and "adv" not in ends[3]
-    assert all(e["adv"] == 0 for e in ends[:3])
+    assert all("rn" in e for e in ends[:3]) and "rn" not in ends[3]
     assert _confirmed_flush(pp, "cap_slot") == pre_flush
     # replay contract for the capped, NOT-yet-committed last batch
-    replay = list(rdr.readBetweenOffsets(ends[2], ends[3]))
-    assert sum(b.num_rows for b in replay) == 10
+    assert _replay(rdr, ends[2], ends[3]) == 10
     # its commit ends at the transaction boundary: advanced
-    rdr.commit(ends[3])
+    rdr.commit({"cap_slot": ends[3]})
     assert _confirmed_flush(pp, "cap_slot") == ends[3]["lsn"] > pre_flush
     # a second small transaction flows normally after the episode
     with pp.connect() as c:
         c.query("insert into cap_t values (101, 'tail')")
-    it, end = rdr.read(ends[3])
-    assert sum(b.num_rows for b in it) == 1 and "adv" not in end
+    batches, end = _read_batch(rdr, {"cap_slot": ends[3]})
+    assert sum(b.num_rows for b in batches) == 1 and "rn" not in end["cap_slot"]
     rdr.commit(end)
     pgl.drop_slot(pp, "cap_slot")
 
@@ -4750,9 +4623,9 @@ def test_simple_reader_max_changes_many_small_txns(cap_db):
     """100 one-row transactions under max_changes=30, in engine order.
     The peek bound counts raw frames (Begin/Relation/Commit too) from
     confirmed_flush_lsn, and that prefix still holds the previous,
-    not-yet-committed batch: a window the prefix fills must widen,
-    not report idle — an idle read plans no batch, so commit(N) would
-    never run and the stream would stall after 10 rows."""
+    not-yet-committed batch: a window that ends before the budget is
+    reached must widen, not plan a short batch or report idle — an
+    idle probe plans no batch, so commit(N) would never run."""
     pp = cap_db
     rdr = _capped_reader(
         pp, "cst",
@@ -4762,21 +4635,20 @@ def test_simple_reader_max_changes_many_small_txns(cap_db):
     sizes, ends = _engine_order_drain(rdr)
     assert sizes == [30, 30, 30, 10], sizes
     assert [e["seq"] for e in ends] == [30, 60, 90, 100]
-    # every cap lands on a one-row transaction's boundary
-    assert not any("adv" in e for e in ends)
+    # every batch ends on a one-row transaction's boundary
+    assert not any("rn" in e for e in ends)
     # the pending batch replays past a commit-advanced slot
     assert _confirmed_flush(pp, "cst_slot") == ends[2]["lsn"]
-    replay = list(rdr.readBetweenOffsets(ends[2], ends[3]))
-    assert sum(b.num_rows for b in replay) == 10
-    rdr.commit(ends[3])
+    assert _replay(rdr, ends[2], ends[3]) == 10
+    rdr.commit({"cst_slot": ends[3]})
     assert _confirmed_flush(pp, "cst_slot") == ends[3]["lsn"]
     pgl.drop_slot(pp, "cst_slot")
 
 
 def test_simple_reader_max_changes_cap_on_txn_boundary(cap_db):
-    """Ten 3-row transactions under max_changes=6: every cap lands
-    exactly on a transaction boundary, so no end carries 'adv' and
-    each commit advances the slot to its batch's last commit."""
+    """Ten 3-row transactions under max_changes=6: every batch holds
+    exactly two whole transactions, so no end is mid-commit and each
+    commit advances the slot to its batch's last commit."""
     pp = cap_db
     rdr = _capped_reader(
         pp, "cbd",
@@ -4790,18 +4662,17 @@ def test_simple_reader_max_changes_cap_on_txn_boundary(cap_db):
     sizes, ends = _engine_order_drain(rdr)
     assert sizes == [6, 6, 6, 6, 6], sizes
     assert [e["seq"] for e in ends] == [6, 12, 18, 24, 30]
-    assert not any("adv" in e for e in ends)
+    assert not any("rn" in e for e in ends)
     assert len({e["lsn"] for e in ends}) == 5
     assert _confirmed_flush(pp, "cbd_slot") == ends[3]["lsn"]
-    rdr.commit(ends[4])
+    rdr.commit({"cbd_slot": ends[4]})
     assert _confirmed_flush(pp, "cbd_slot") == ends[4]["lsn"]
     pgl.drop_slot(pp, "cbd_slot")
 
 
 def test_sharded_schema_drift_mid_stream(spark, pg, tmp_path):
-    """Compose drill: mid-stream DDL under the SHARDED reader (the
-    single-reader twin is test_pgdatasource_schema_drift_mid_stream).
-    The executor peek decodes with a fresh Relation dict per batch, so
+    """Mid-stream DDL under the stream reader, on a shard in its own
+    database.  The executor peek decodes with a fresh Relation dict per batch, so
     post-ALTER rows must carry the new column — including when the
     drift lands BETWEEN two batches of the same shard — and the
     server-side probe's counting must not be disturbed by the extra
@@ -4870,8 +4741,8 @@ def test_sharded_schema_drift_mid_stream(spark, pg, tmp_path):
 
 
 def test_sharded_stream_over_tls(spark, tmp_path):
-    """Compose drill: the SHARDED reader over the verify-full TLS +
-    SCRAM transport (the single-reader twin is
+    """Compose drill: a two-shard stream over the verify-full TLS +
+    SCRAM transport (the one-slot twin is
     test_pgdatasource_stream_over_tls) — two slots, every probe /
     executor peek / meta write / slot advance on the encrypted
     authenticated channel, exactness held."""

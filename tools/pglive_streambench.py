@@ -98,19 +98,6 @@ def main() -> None:
         help="the source's max_changes: rows per micro-batch",
     )
     ap.add_argument(
-        "--poll-seconds",
-        type=float,
-        default=1.0,
-        help="--ds-transport walsender only: per-trigger push poll window",
-    )
-    ap.add_argument(
-        "--ds-transport",
-        choices=("sql", "walsender"),
-        default="sql",
-        help="the native source's own transport (walsender = "
-        "persistent push session, SQL peek for replay)",
-    )
-    ap.add_argument(
         "--sink",
         choices=("derby", "pg2pc"),
         default="derby",
@@ -118,13 +105,6 @@ def main() -> None:
         "Derby; pg2pc = the round-11 native writeStream.format('pgshovel') "
         "two-phase-commit upsert back into live Postgres (the FULL "
         "native relay, one Spark query)",
-    )
-    ap.add_argument(
-        "--transport",
-        choices=("datasource",),
-        default="datasource",
-        help="datasource = the native source (readStream.format("
-        "'pgshovel') straight into the sink); the only capture path",
     )
     args = ap.parse_args()
     spark = get_session("pglive_streambench")
@@ -193,8 +173,6 @@ def main() -> None:
             # slow batch snowballs (measured p95 11 s unbounded vs
             # ~2 s bounded at the same 15k rows/s offered load)
             .option("max_changes", str(args.max_changes))
-            .option("transport", args.ds_transport)
-            .option("poll_seconds", str(args.poll_seconds))
             .load()
         )
         if args.sink == "pg2pc":
@@ -323,8 +301,6 @@ def main() -> None:
             "batch_latency_ms_p95": p95,
             "merge_drain_sec": round(merge_drain_s, 2),
             "exactly_once_state_match": bool(exact),
-            "transport": args.transport,
-            "ds_transport": args.ds_transport,
             "sink": args.sink,
         }
         pgl.drop_slot(p, "pgls_slot")
@@ -334,9 +310,7 @@ def main() -> None:
     print("|---|---|")
     for k, v in results.items():
         print(f"| {k} | {v} |")
-    s_key = f"pglive_stream_{args.transport}" + (
-        "_ws" if args.ds_transport == "walsender" else ""
-    ) + (
+    s_key = "pglive_stream_datasource" + (
         "_pg2pc" if args.sink == "pg2pc" else ""
     )
     print(json.dumps({s_key: results}))
