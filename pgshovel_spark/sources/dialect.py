@@ -256,7 +256,8 @@ POSTGRES = Dialect(
             "the per-connection execution guarantee is proven live on "
             "Derby (test_parallel_bootstrap_session_init), and the "
             "snapshot adoption itself runs LIVE on Postgres via the "
-            "wire client (pglogical.snapshot_parallel_read; "
+            "wire client (the native spark.read.format(\"pgshovel\") "
+            "batch source with option snapshot; "
             "tests/test_pg_live.py MVCC bootstrap test)",
         ),
     ),

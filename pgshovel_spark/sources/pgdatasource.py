@@ -718,6 +718,29 @@ class PgShovelStreamReader(DataSourceStreamReader):
     #: probe = 1.3 s/trigger serial, ~0.2 s pooled)
     _POOL = 8
 
+    def _fan_out(self, fn, items: list) -> list:
+        """``fn`` over ``items`` on the driver's shard pool, in order."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max(1, min(self._POOL, len(items)))) as ex:
+            return list(ex.map(fn, items))
+
+    def _with_retry(self, shard: dict, fetch):
+        """``fetch()`` with a bounded retry on transient server errors
+        (30 attempts, 1 s apart): local mode has task maxFailures=1, so
+        a crash-restarting server mid-peek would otherwise fail the
+        query for a blip WAL replay covers."""
+        import time
+
+        for attempt in range(30):
+            try:
+                return fetch()
+            except Exception as e:
+                if attempt == 29 or not _is_transient(e):
+                    self._raise_typed_if_invalidated(shard, e)
+                    raise
+                time.sleep(1.0)
+
     def _raise_typed_if_invalidated(self, shard: dict, e: BaseException):
         """55000 from a slot read may mean the server INVALIDATED the
         slot (WAL-retention overrun) — surface that TYPED.  Covers the
@@ -751,13 +774,7 @@ class PgShovelStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         slots = sorted(self.shards)
-        if len(slots) == 1:
-            return {slots[0]: self._probe_resilient(slots[0])}
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(min(self._POOL, len(slots))) as ex:
-            ends = list(ex.map(self._probe_resilient, slots))
-        return dict(zip(slots, ends))
+        return dict(zip(slots, self._fan_out(self._probe_resilient, slots)))
 
     @staticmethod
     def _check_offset(off: dict) -> None:
@@ -788,8 +805,6 @@ class PgShovelStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition):
-        import time
-
         from pgshovel_spark.sources.pgoutput import (
             parse_pgoutput,
             raw_slot_changes_pgoutput,
@@ -800,31 +815,23 @@ class PgShovelStreamReader(DataSourceStreamReader):
             # intra-commit chunk of one giant transaction: windowed
             # frame fetch, not the whole-backlog peek + slice
             return self._read_chunk(shard, start, end)
-        # outer loop: WINDOW ESCALATION — the bounded peek counts
+        # WINDOW ESCALATION — the bounded peek counts
         # frames from confirmed_flush, and the delivered-but-not-yet-
         # advanced prefix (Spark's commit lags the reported frontier
         # by one batch) can consume the window before this batch's
         # range appears; a short slice from a FULL window widens and
-        # re-peeks.  inner loop: bounded retry on transient server
-        # errors (local mode has task maxFailures=1, so a crash-
-        # restarting server mid-peek would otherwise fail the query
-        # for a blip WAL replay covers).
+        # re-peeks.
         bound = self.max_changes
         for _esc in range(10):
-            for attempt in range(30):
-                try:
-                    raw = raw_slot_changes_pgoutput(
-                        self._params(shard),
-                        shard["slot"],
-                        shard["publication"],
-                        limit=bound,
-                    )
-                    break
-                except Exception as e:
-                    if attempt == 29 or not _is_transient(e):
-                        self._raise_typed_if_invalidated(shard, e)
-                        raise
-                    time.sleep(1.0)
+            raw = self._with_retry(
+                shard,
+                lambda: raw_slot_changes_pgoutput(
+                    self._params(shard),
+                    shard["slot"],
+                    shard["publication"],
+                    limit=bound,
+                ),
+            )
             changes = parse_pgoutput(raw)
             upto = {"lsn": end["lsn"], "idx": end["idx"]}
             rows, got = _slice_changes(
@@ -855,8 +862,6 @@ class PgShovelStreamReader(DataSourceStreamReader):
         ends exactly at the real Commit frame.  Exactness: the
         decoded change count must equal the offsets' seq delta —
         the same fail-loud contract as the boundary path."""
-        import time
-
         from pgshovel_spark.sources.pgoutput import (
             chunk_slot_changes_pgoutput,
             lsn_to_int,
@@ -873,22 +878,17 @@ class PgShovelStreamReader(DataSourceStreamReader):
         end_rn = end.get("rn", 1 << 62)
         bound = end.get("rn", start_rn + 1)
         expected = end["seq"] - start["seq"]
-        for attempt in range(30):
-            try:
-                raw = chunk_slot_changes_pgoutput(
-                    self._params(shard),
-                    shard["slot"],
-                    shard["publication"],
-                    start_rn,
-                    end_rn,
-                    bound=bound,
-                )
-                break
-            except Exception as e:
-                if attempt == 29 or not _is_transient(e):
-                    self._raise_typed_if_invalidated(shard, e)
-                    raise
-                time.sleep(1.0)
+        raw = self._with_retry(
+            shard,
+            lambda: chunk_slot_changes_pgoutput(
+                self._params(shard),
+                shard["slot"],
+                shard["publication"],
+                start_rn,
+                end_rn,
+                bound=bound,
+            ),
+        )
         # ALWAYS close with a 1-byte synthetic Commit: a mid-commit
         # window has no real one, and after a real one it merely
         # closes an empty transaction (harmless).  The FIRST chunk's
@@ -999,14 +999,7 @@ class PgShovelStreamReader(DataSourceStreamReader):
             if end.get(slot) and end[slot].get("lsn")
             and end[slot] != self._committed.get(slot)
         ]
-        if len(todo) <= 1:
-            for slot, e in todo:
-                self._commit_resilient(slot, e)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(min(self._POOL, len(todo))) as ex:
-                list(ex.map(lambda se: self._commit_resilient(*se), todo))
+        self._fan_out(lambda se: self._commit_resilient(*se), todo)
         for slot, e in todo:
             self._committed[slot] = e
 
@@ -1022,9 +1015,8 @@ class PgShovelBatchReader(DataSourceReader):
     (public ``DataSourceReader``): N key slices, each read by an
     EXECUTOR task on its own wire connection, all adopting ONE
     exported MVCC snapshot (``SET TRANSACTION SNAPSHOT``) so the
-    union is a point-in-time image even under concurrent writers —
-    the same discipline ``pglogical.snapshot_parallel_read`` proves
-    via mapInPandas, promoted to the native scan API.
+    union is a point-in-time image even under concurrent writers
+    (``pglogical.exported_snapshot`` holds the exporting transaction).
 
     Filter pushdown is REAL (``pushFilters``, Spark 4.1): supported
     conjuncts (comparisons / In / IsNull on plain columns) render
@@ -1032,7 +1024,8 @@ class PgShovelBatchReader(DataSourceReader):
     server prunes before a byte crosses the wire; unsupported filters
     are returned to Spark for post-scan evaluation.  Slices use the
     sign-safe ``mod(mod(key, N) + N, N)`` with NULL keys routed to
-    slice 0 (pglogical's union-is-the-whole-table construction).
+    slice 0, so the union of slices is the whole table by
+    construction, never a silent subset.
 
     Rows hand off as column-built Arrow RecordBatches; numeric decodes
     follow the bootstrap contract (numeric -> double, lossy by
@@ -1186,8 +1179,8 @@ class PgShovelBatchReader(DataSourceReader):
 
 
 def infer_pg_schema(options) -> StructType:
-    """LIMIT-0 probe -> StructType via the bootstrap OID map (same
-    lossy-numeric contract as snapshot_parallel_read); honors an
+    """LIMIT-0 probe -> StructType via the bootstrap OID map
+    (numeric -> double, lossy by declaration); honors an
     optional ``columns`` option for projection at the source."""
     from pyspark.sql import types as T
 
@@ -1270,7 +1263,7 @@ _UPSERT_ROWS_PER_STMT = 1000
 
 class _UpsertCommit(WriterCommitMessage):
     """Per-task commit message: the prepared-transaction gid (None
-    under two_phase=false) and the task's upserted row count."""
+    for an empty partition) and the task's upserted row count."""
 
     def __init__(self, gid=None, rows=0):
         self.gid = gid
@@ -1290,9 +1283,9 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
     with a task-unique gid and reports the gid as its commit message.
     The driver's ``commit()`` issues ``COMMIT PREPARED`` for every
     gid; ``abort()`` rolls them back — a failed batch leaves NO
-    partial state visible (needs ``max_prepared_transactions > 0``;
-    set ``two_phase=false`` to fall back to per-task autocommit,
-    where the newer-guard alone provides replay idempotence).
+    partial state visible.  The server needs
+    ``max_prepared_transactions > 0``; on a server with 0, Postgres'
+    own PREPARE TRANSACTION error names that setting.
 
     Crash recovery (LIFECYCLE NOTE: Spark instantiates this writer
     fresh for every task AND every commit/abort call, so NOTHING here
@@ -1315,8 +1308,8 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
       prepared row lock; A's COMMIT PREPARED waits on B finishing) —
       ``.repartition(n, *keys)`` upstream, which also co-locates each
       key's latest-per-key reduce;
-    - no speculative execution in two_phase mode (a duplicate running
-      attempt is indistinguishable from a dead one to the sweep);
+    - no speculative execution (a duplicate running attempt is
+      indistinguishable from a dead one to the sweep);
     - single writer per table (the reference relay's consumer-group-
       of-one discipline `[recalled: consumer groups]`): the sweep
       would roll back ANOTHER live writer's prepared batches;
@@ -1346,7 +1339,6 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
                 "pgshovel sink needs at least one non-key column "
                 f"(all of {self.columns} are keys)"
             )
-        self.two_phase = _opt(options, "two_phase", "true").lower() == "true"
         self.lock_timeout_ms = int(_opt(options, "lock_timeout_ms", "10000"))
         self._gid_prefix = f"pgshovel2pc_{self.table}_"
         # FAULT-INJECTION SEAM (tests only): when ``chaos_file`` names
@@ -1473,11 +1465,6 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
         tc = TaskContext.get()
         batch_prop = tc.getLocalProperty("streaming.sql.batchId") if tc else None
         batch_id = int(batch_prop) if batch_prop else 0
-        if not self.two_phase:
-            with self.params.connect() as c:
-                for lo in range(0, len(rows), _UPSERT_ROWS_PER_STMT):
-                    c.query(self._upsert_sql(rows[lo : lo + _UPSERT_ROWS_PER_STMT]))
-            return _UpsertCommit(None, len(rows))
         # run token: StreamExecution sets the job group to the query's
         # runId, which CHANGES on restart — it distinguishes a prior
         # crashed run's same-batch orphans from this run's live
@@ -1517,8 +1504,6 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
 
     def commit(self, messages, batchId) -> None:
         gids = [m.gid for m in messages if m is not None and getattr(m, "gid", None)]
-        if not gids and not self.two_phase:
-            return
         if (gids and self.chaos_point == "driver_before_commit"
                 and self._consume_chaos()):
             # every task prepared and reported; the driver dies before
@@ -1530,17 +1515,14 @@ class PgUpsertStreamWriter(DataSourceStreamWriter):
         with self.params.connect() as c:
             for gid in gids:
                 c.query(f"commit prepared '{gid}'")
-            if self.two_phase:
-                # dead attempts of this or earlier batches (reported
-                # gids are committed above, so anything left under the
-                # prefix at <= batchId is garbage)
-                self._sweep(c, batchId, set(gids), my_run=None)
+            # dead attempts of this or earlier batches (reported gids
+            # are committed above, so anything left under the prefix at
+            # <= batchId is garbage)
+            self._sweep(c, batchId, set(gids), my_run=None)
 
     def abort(self, messages, batchId) -> None:
         from pgshovel_spark.sources.pgwire import PgError
 
-        if not self.two_phase:
-            return
         gids = [m.gid for m in messages if m is not None and getattr(m, "gid", None)]
         with self.params.connect() as c:
             for gid in gids:

@@ -14,14 +14,14 @@ holds the plugin-independent parts around it:
   the peek/advance contract), ``slot_wal_status`` /
   ``check_slot_live`` (the WAL-retention invalidation probe), and
   ``pg_observed_schema`` (the drift monitor's live schema probe).
-- ``exported_snapshot`` + ``snapshot_parallel_read``: consistent
-  parallel bootstrap.  One driver transaction exports its snapshot
-  (``pg_export_snapshot()``); every Spark partition opens its own
-  wire connection and adopts that snapshot (``SET TRANSACTION
-  SNAPSHOT``), so N parallel slice reads observe ONE point-in-time
-  state even under concurrent writes — the same exported-snapshot
-  discipline pgshovel's bootstrap uses, previously proven here only
-  against Derby via sessionInitStatement.
+- ``exported_snapshot``: the driver half of consistent parallel
+  bootstrap.  One driver transaction exports its snapshot
+  (``pg_export_snapshot()``); every partition of the native batch
+  source (``spark.read.format("pgshovel")`` with option
+  ``snapshot``) opens its own wire connection and adopts it (``SET
+  TRANSACTION SNAPSHOT``), so N parallel slice reads observe ONE
+  point-in-time state even under concurrent writes — the same
+  exported-snapshot discipline pgshovel's bootstrap uses.
 
 Scale posture: decoding a slot is SERIAL by design (Postgres streams
 WAL in commit order; ordering is the contract), so a slot pull is a
@@ -43,7 +43,6 @@ from __future__ import annotations
 import re
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pgshovel_spark.sources.pgwire import PgError, PgParams
@@ -55,7 +54,6 @@ __all__ = [
     "slot_wal_status",
     "check_slot_live",
     "exported_snapshot",
-    "snapshot_parallel_read",
 ]
 
 
@@ -172,87 +170,9 @@ _OID_SPARK = {
     23: T.LongType(),
     700: T.DoubleType(),
     701: T.DoubleType(),
-    1700: T.DoubleType(),  # numeric: lossy by declaration (see docstring)
+    1700: T.DoubleType(),  # numeric: lossy by declaration (PgShovelBatchReader)
     1082: T.DateType(),
     1114: T.TimestampNTZType(),
     1184: T.TimestampType(),
     17: T.BinaryType(),
 }
-
-
-def snapshot_parallel_read(
-    spark: SparkSession,
-    params: PgParams,
-    table: str,
-    key_col: str,
-    snapshot_id: str,
-    n_parts: int = 8,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Read ``table`` in ``n_parts`` parallel slices, every slice
-    pinned to the SAME exported snapshot — concurrent writers are
-    invisible to all of them uniformly.
-
-    Slicing is non-negative ``mod``: ``mod(mod(key, n) + n, n)`` so
-    negative keys land in a real slice (Postgres ``mod`` preserves
-    sign), and NULL keys are routed to slice 0 explicitly — the union
-    of slices is the whole table by construction, never a silent
-    subset (ADVICE r9).  Each Spark partition opens its own wire
-    connection, adopts the snapshot, reads its slice, and commits.  numeric columns decode to Decimal and are emitted as
-    DOUBLE (documented lossy; exact-decimal reads go through the
-    envelope path which keeps text).
-    """
-    if not re.match(r"[A-Za-z_][A-Za-z0-9_.]*\Z", table):
-        raise ValueError(f"invalid table name: {table!r}")
-    if not re.match(r"[A-Za-z_][A-Za-z0-9_]*\Z", key_col):
-        raise ValueError(f"invalid key column: {key_col!r}")
-    with params.connect() as c:
-        probe = c.query(f"select * from {table} limit 0")[0]
-    cols = columns or probe.columns
-    oids = dict(zip(probe.columns, probe.type_oids))
-    fields = [
-        T.StructField(name, _OID_SPARK.get(oids[name], T.StringType()))
-        for name in cols
-    ]
-    schema = T.StructType(fields)
-    col_sql = ", ".join(cols)
-    is_double = {
-        name for name in cols if isinstance(_OID_SPARK.get(oids[name]), T.DoubleType)
-    }
-
-    def read_slices(batches):
-        import pandas as pd
-
-        from pgshovel_spark.sources.pgwire import PgConnection
-
-        for pdf in batches:
-            for i in pdf["id"]:
-                i = int(i)
-                conn = PgConnection(params)
-                try:
-                    conn.query("begin isolation level repeatable read")
-                    conn.query(f"set transaction snapshot '{snapshot_id}'")
-                    pred = (
-                        f"mod(mod({key_col}, {n_parts}) + {n_parts},"
-                        f" {n_parts}) = {i}"
-                    )
-                    if i == 0:
-                        pred = f"({pred} or {key_col} is null)"
-                    res = conn.query(
-                        f"select {col_sql} from {table} where {pred}"
-                    )[0]
-                    conn.query("commit")
-                finally:
-                    conn.close()
-                data = {}
-                for j, name in enumerate(cols):
-                    vals = [r[j] for r in res.rows]
-                    if name in is_double:
-                        vals = [None if v is None else float(v) for v in vals]
-                    data[name] = vals
-                yield pd.DataFrame(data, columns=cols)
-
-    return (
-        spark.range(n_parts).repartition(n_parts, "id")
-        .mapInPandas(read_slices, schema=schema)
-    )

@@ -15,7 +15,7 @@ Design constraints that matter at scale:
 
 - picklable connection PARAMS (``PgParams``: socket dir, database,
   user), never a live socket: executors open their own connection per
-  partition (``snapshot_parallel_read`` in pglogical.py), exactly how
+  partition (``PgShovelBatchReader`` in pgdatasource.py), exactly how
   a partitioned JDBC read behaves on a cluster.
 - text format everywhere, decoded by type OID into Python values that
   Arrow infers losslessly (int, float, Decimal, datetime, date, bool,

@@ -295,8 +295,19 @@ def test_parallel_snapshot_bootstrap_mvcc(spark, pg):
             w.query("update boot_t set v = -1 where id < 100")
             w.query("delete from boot_t where id >= 900")
             w.query("insert into boot_t values (5000, 1, 1.0)")
-        df = pgl.snapshot_parallel_read(spark, pg, "boot_t", "id", snap, 8)
-        rows = df.collect()
+        from pgshovel_spark.sources.pgdatasource import register_pgshovel
+
+        register_pgshovel(spark)
+        rows = (
+            spark.read.format("pgshovel")
+            .option("sockdir", pg.sockdir)
+            .option("table", "boot_t")
+            .option("partition_col", "id")
+            .option("num_partitions", "8")
+            .option("snapshot", snap)
+            .load()
+            .collect()
+        )
     assert len(rows) == 1000  # no phantom insert, no missing deletes
     assert all(r.v == r.id * 3 for r in rows)  # no torn update
     assert {r.id for r in rows} == set(range(1000))

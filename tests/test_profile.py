@@ -1,4 +1,4 @@
-"""tools/profile.py's attribution of a Spark event log to bench rows,
+"""tools/bench_profile.py's attribution of a Spark event log to bench rows,
 on a hand-built log (no Spark): jobs, stages and tasks land on the row
 named by the job group, jobs outside the timed rows land nowhere, the
 job span is an interval union, and the plan kept is the last one."""
@@ -11,7 +11,7 @@ from pathlib import Path
 _ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_ROOT))
 
-from tools.profile import ROOT, profile, union_s  # noqa: E402
+from tools.bench_profile import ROOT, profile, union_s  # noqa: E402
 
 _SQL = "org.apache.spark.sql.execution.ui."
 

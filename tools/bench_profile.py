@@ -25,7 +25,7 @@ The run is a traced draw: event logging adds wall time, so its numbers
 never replace the untraced ``BENCH_DETAIL.json``, which is restored
 byte for byte after the run.
 
-Usage: python tools/profile.py
+Usage: python tools/bench_profile.py
 (reads bench's own environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
 """
 
