@@ -46,71 +46,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pgshovel_spark.operators.skew import plan_partitions
+
 _PID = "__gr_pid"
 _OFF = "__gr_off"
 _TOT = "__gr_tot"
 _RANK = "__gr_rank"
-
-
-def _sized_partitions(df: DataFrame) -> int:
-    """Data-derived default for the range-partition count: the input
-    plan's estimated bytes over the session's AQE advisory partition
-    size, clamped to [1, defaultParallelism].
-
-    The former default — defaultParallelism itself — made the ranked
-    layout a function of the CORE COUNT: local[32] shredded a sub-MB
-    fixture table into 32 range partitions (32-task sample + sort, 32
-    cached blocks, a 32-row offsets join) where local[8] used 8 — the
-    r13 scaling block's "32 cores lose to 8" signature on q_win_ntile
-    (VERDICT r13 item 3).  Deriving the count from estimated bytes
-    makes the same query build the same layout at ANY core count, and
-    on a cluster (advisory raised to 64-256m per SCALE.md) yields
-    advisory-sized sort partitions instead of one per core.
-
-    A runtime AQE coalesce cannot do this here: the ranged stream is
-    cached, and a cached plan pins its output partitioning
-    (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
-    defaults false), so the plan-stats estimate is the only adaptive
-    signal available before execution.  Estimates on join-bearing
-    inputs can be badly inflated (Catalyst multiplies join child
-    sizes); the defaultParallelism cap bounds that failure mode at
-    exactly the former behavior, and callers with exact knowledge
-    (catalog row counts) pass ``num_partitions`` explicitly.
-    """
-    spark = df.sparkSession
-    dp = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        n = sized_partitions(spark, size)
-    except Exception:  # pragma: no cover - estimate unavailable
-        return dp
-    return min(n, dp)
-
-
-def sized_partitions(spark, n_bytes: int) -> int:
-    """ceil(n_bytes / the session's AQE advisory partition size),
-    floored at 1 — the shared partition-count derivation for callers
-    holding an EXACT size (catalog row counts x row width), who should
-    prefer it over the plan-stats default: exact knowledge needs no
-    defaultParallelism safety cap, so the count is a pure function of
-    data size at any core count, and a rank over one partition skips
-    the range-boundary sampling pass entirely (RangePartitioner only
-    samples when it needs boundaries, i.e. numPartitions > 1 — at
-    fixture scale that deletes a full re-execution of the rank's
-    input subtree)."""
-    try:
-        target = int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-                spark.conf.get(
-                    "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
-                )
-            )
-        )
-    except Exception:  # pragma: no cover - conf unavailable
-        target = 64 * 1024 * 1024
-    return max(1, -(-int(n_bytes) // max(target, 1)))
 
 
 def with_global_rank(
@@ -154,7 +95,11 @@ def with_global_rank(
     """
     from pgshovel_spark.operators.scratch import materialize
 
-    n = num_partitions or _sized_partitions(df)
+    # The plan-stats estimate is the only adaptive signal here: the
+    # ranged stream is cached, and a cached plan pins its output
+    # partitioning (spark.sql.optimizer.canChangeCachedPlanOutput-
+    # Partitioning defaults false), so no runtime AQE coalesce follows.
+    n = num_partitions or plan_partitions(df)
     # materialize: BOTH consumers (the counts branch and the output
     # join) must read ONE execution of the range shuffle — see the
     # module docstring's boundary-divergence invariant.

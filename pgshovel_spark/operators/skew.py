@@ -6,6 +6,13 @@ aggregations, where one key's partition would otherwise serialize the
 stage.  Two-phase: aggregate on (key, salt) first — spreading a hot
 key over N reducers — then aggregate the partials on key alone.
 Works for any algebraic aggregate (sum/count/min/max).
+
+The module also owns the engine's ONE partition-sizing rule: every
+batch width is bytes / the AQE advisory partition size
+(``sized_partitions``), from an exact size or the plan-stats estimate
+(``plan_partitions``), and the scan spread (``spread_scan``) is built
+on it.  No other module reads defaultParallelism or a plan-size
+estimate (tests/test_operators.py gates it).
 """
 
 from __future__ import annotations
@@ -56,6 +63,62 @@ def salted_agg(
     return phase2
 
 
+def sized_partitions(spark, n_bytes: int) -> int:
+    """ceil(n_bytes / the session's AQE advisory partition size),
+    floored at 1 — the shared partition-count derivation for callers
+    holding an EXACT size (catalog row counts x row width), who should
+    prefer it over the plan-stats default: exact knowledge needs no
+    defaultParallelism safety cap, so the count is a pure function of
+    data size at any core count, and a rank over one partition skips
+    the range-boundary sampling pass entirely (RangePartitioner only
+    samples when it needs boundaries, i.e. numPartitions > 1 — at
+    fixture scale that deletes a full re-execution of the rank's
+    input subtree)."""
+    try:
+        target = int(
+            spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                spark.conf.get(
+                    "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
+                )
+            )
+        )
+    except Exception:  # pragma: no cover - conf unavailable
+        target = 64 * 1024 * 1024
+    return max(1, -(-int(n_bytes) // max(target, 1)))
+
+
+def plan_partitions(df: DataFrame, expansion: int = 1) -> int:
+    """Data-derived partition count for ``df``: its optimized plan's
+    estimated bytes x ``expansion`` over the AQE advisory partition
+    size (``sized_partitions``), capped at defaultParallelism; the
+    cap alone when no estimate is available.  The engine's ONE
+    plan-stats probe (it plans, it runs no job).
+
+    A core-count width makes the layout a function of the CORE COUNT:
+    local[32] shredded sub-MB fixture inputs into 32 partitions
+    (32-task sample + sort, 32 cached blocks, 3x the task dispatch of
+    local[8]) while the per-task compute never saturated the extra
+    cores — the r13 scaling block's "32 cores lose to 8" signature
+    (VERDICT r13 item 3).  Deriving the count from estimated bytes
+    builds the same layout at ANY core count, and on a cluster
+    (advisory raised to 64-256m per SCALE.md) yields advisory-sized
+    partitions instead of one per core.
+
+    Estimates on join-bearing inputs can be badly inflated (Catalyst
+    multiplies join child sizes); the cap bounds that failure mode at
+    exactly the core-count width, and callers with exact knowledge
+    (catalog row counts) call ``sized_partitions`` directly.
+    """
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        size = int(
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:  # pragma: no cover - estimate unavailable
+        return cores
+    return min(cores, sized_partitions(df.sparkSession, size * expansion))
+
+
 def spread_scan(df: DataFrame, *keys: str, expansion: int | None = None) -> DataFrame:
     """Scale-adaptive fixture spread: hash-repartition ``df`` across
     the session's cores ONLY when its planned scan parallelism is
@@ -72,28 +135,17 @@ def spread_scan(df: DataFrame, *keys: str, expansion: int | None = None) -> Data
 
     ``expansion`` (r14): when the consumer's downstream stage BLOWS UP
     the rows (window/shingle explodes), pass its documented blow-up
-    factor and the spread width derives from DATA instead of cores —
-    ceil(plan-estimated bytes x expansion / the AQE advisory partition
-    size), capped at defaultParallelism.  A plain core-count spread
-    made such stages a function of the core count: local[32] paid 3x
-    the task dispatch of local[8] on identical sub-MB inputs while the
-    per-task compute never saturated the extra cores (the r13 scaling
-    block's q_dedup_substring signature, VERDICT r13 item 3).  With a
-    data-derived width the same query runs the same layout at any
-    core count, and the cap keeps compute-bound consumers whole.
+    factor and the spread width derives from DATA instead of cores
+    (``plan_partitions``), so the same query runs the same layout at
+    any core count while the cap keeps compute-bound consumers whole.
+    Leave it unset for row-local consumers (tokenize, ``mapInPandas``):
+    a sub-advisory input would size to ONE partition and put the whole
+    per-row stage back on one task.
     """
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    if expansion is not None:
-        from pgshovel_spark.operators.rank import sized_partitions
-
-        try:
-            size = int(
-                str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-            p = min(p, sized_partitions(df.sparkSession, size * expansion))
-        except Exception:  # pragma: no cover - estimate unavailable
-            pass
+    if expansion is None:
+        p = df.sparkSession.sparkContext.defaultParallelism
+    else:
+        p = plan_partitions(df, expansion)
     if df.rdd.getNumPartitions() >= p:
         return df
     return df.repartition(p, *keys)

@@ -14,19 +14,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgshovel_spark.operators.multimodal import extract_media_features, sample_frames
-from pgshovel_spark.sources.tables import load_table
-
-
-def _spread_docs(spark, sf_dir):
-    """The documents table spread across cores: the single-file
-    fixture would otherwise feed the Arrow mapInPandas stages one
-    python worker total instead of one per partition."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+from pgshovel_spark.sources.tables import docs_parallel
 
 
 def _media(spark, sf_dir):
-    return _spread_docs(spark, sf_dir).select(
+    return docs_parallel(spark, sf_dir).select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
 
@@ -117,7 +109,7 @@ def q_mm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pgshovel_spark.operators.multimodal import _decode_wav_np
 
-    src = _spread_docs(spark, sf_dir).select("doc_id")
+    src = docs_parallel(spark, sf_dir).select("doc_id")
 
     def synth_extract(batches):
         i = np.arange(_AUD_N)
@@ -238,7 +230,7 @@ def q_mm_image(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid_average_hash,
     )
 
-    src = _spread_docs(spark, sf_dir).select("doc_id")
+    src = docs_parallel(spark, sf_dir).select("doc_id")
 
     def synth_extract(batches):
         for pdf in batches:
@@ -317,7 +309,7 @@ def q_mm_video(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_avi,
     )
 
-    src = _spread_docs(spark, sf_dir).select("doc_id")
+    src = docs_parallel(spark, sf_dir).select("doc_id")
 
     step = 2
 
@@ -413,7 +405,7 @@ def q_mm_imagedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid_average_hash,
     )
 
-    src = _spread_docs(spark, sf_dir).select("doc_id")
+    src = docs_parallel(spark, sf_dir).select("doc_id")
 
     def synth_extract(batches):
         # per-task synth memo (r14, guide §4.2): pixel content is a

@@ -55,13 +55,17 @@ def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys on h, the dedup window's own partitioning — the window then
     # runs exchange-free on it (hash(h) satisfies its clustering), so
     # the spread and the dedup shuffle are the SAME exchange; the
-    # tokenize still lands after it, 32-way parallel.
+    # tokenize still lands after it, core-wide.
+    from pgshovel_spark.operators.skew import spread_scan
     from pgshovel_spark.sources.tables import load_table
 
     d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text", F.xxhash64(norm_text("text")).alias("h"))
-        .repartition(spark.sparkContext.defaultParallelism, "h")
+        spread_scan(
+            load_table(spark, sf_dir, "documents").select(
+                "doc_id", "lang", "text", F.xxhash64(norm_text("text")).alias("h")
+            ),
+            "h",
+        )
         .select(
             "doc_id",
             "lang",

@@ -25,6 +25,7 @@ from pgshovel_spark.functions.determinism import iratio
 from pgshovel_spark.functions.textfns import tokens
 from pgshovel_spark.functions.vectors import cosine_sim
 from pgshovel_spark.operators.scratch import materialize, scratch_table
+from pgshovel_spark.operators.skew import plan_partitions, spread_scan
 from pgshovel_spark.sources.tables import load_table
 
 # Shared cross-engine hash primitives live in functions/hashing.py
@@ -262,8 +263,6 @@ def _capped_pair_counts(posting: DataFrame, key: str):
     # NO-OP at scale, where the artifact scan already yields >= cores
     # splits — the pre-round layout bought this parallelism by
     # accident of per-task file counts.
-    from pgshovel_spark.operators.skew import spread_scan
-
     posting = spread_scan(posting, "doc_id")
     drop_tab = (
         posting.groupBy(key)
@@ -528,9 +527,9 @@ def q_sim_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verification join planning.
     a1 = docs.select(F.col("doc_id").alias("id1"), F.col("toks").alias("toks1"))
     a2 = docs.select(F.col("doc_id").alias("id2"), F.col("toks").alias("toks2"))
+    pairs = cand.join(a1, "id1").join(a2, "id2")
     verified = (
-        cand.join(a1, "id1")
-        .join(a2, "id2")
+        pairs
         # spread the verification WORK UNITS uniformly before the
         # array_intersect evaluates: the join output is clustered by
         # doc id, so a clique member appearing in many candidate
@@ -538,9 +537,9 @@ def q_sim_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # measured 5 -> 26 s worst-draw tail — few stragglers, plans
         # identical).  One pair-keyed exchange caps any task at
         # pairs/N intersects regardless of per-doc candidate fan-out.
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("id1"), F.col("id2")
-        )
+        # N is the data-derived width; the join-inflated estimate
+        # caps it at the core count.
+        .repartition(plan_partitions(pairs), F.col("id1"), F.col("id2"))
         .select(
             "id1",
             "id2",

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from pgshovel_spark.functions.textfns import tokens
 from pgshovel_spark.functions.determinism import KNUTH, knuth_bucket, knuth_bucket_sql
-from pgshovel_spark.sources.tables import load_table
+from pgshovel_spark.sources.tables import docs_parallel, load_table
 
 #: context length for q_pack_sequences (tokens per training sequence)
 _PACK_CAP = 2048
@@ -34,9 +34,8 @@ _TOKS = "list_filter(string_split_regex(lower(text), '[ \\t\\n\\x0B\\f\\r]+'), x
 
 def _docs_toks(spark, sf_dir):
     """documents with a filtered token-array column `a`, spread across
-    cores (the single-file fixture otherwise scans as one task)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.repartition(spark.sparkContext.defaultParallelism, "doc_id").select(
+    cores (``docs_parallel``)."""
+    return docs_parallel(spark, sf_dir).select(
         "doc_id",
         "lang",
         "source",
@@ -1107,7 +1106,8 @@ def q_text_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang-stats exchange; round-13 optimization).  The ranked stream
     materializes once (rank.py's boundary-consistency invariant).
     """
-    from pgshovel_spark.operators.rank import sized_partitions, with_global_rank
+    from pgshovel_spark.operators.rank import with_global_rank
+    from pgshovel_spark.operators.skew import sized_partitions
     from pgshovel_spark.sources.tables import table_rowcount
 
     base = q_text_unigram_ppl(spark, sf_dir).select(

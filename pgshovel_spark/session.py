@@ -28,27 +28,23 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 _SIZE_RE = re.compile(r"^\d+(b|k|kb|m|mb|g|gb|t|tb|p|pb)?$")
 
 
-def _env_size(*names: str, default: str) -> str:
-    """First non-empty env value among ``names``, validated as a Spark
-    byte-size string (e.g. '2m', '256m', '1g').  A malformed value
-    fails HERE with the env var named — not as an opaque JVM parse
-    error at session build (ADVICE r13).  Empty/whitespace values are
-    ignored rather than passed through."""
-    for name in names:
-        raw = os.environ.get(name)
-        if raw is None:
-            continue
-        val = raw.strip().lower()
-        if not val:
-            continue
-        if not _SIZE_RE.match(val):
-            raise ValueError(
-                f"{name}={raw!r} is not a valid Spark size string "
-                "(expected digits with an optional b/k/m/g/t/p suffix, "
-                "e.g. '256m')"
-            )
-        return val
-    return default
+def _env_size(name: str, *, default: str) -> str:
+    """The env value of ``name``, validated as a Spark byte-size
+    string (e.g. '2m', '256m', '1g').  A malformed value fails HERE
+    with the env var named — not as an opaque JVM parse error at
+    session build (ADVICE r13).  An unset or empty/whitespace value
+    yields ``default`` rather than being passed through."""
+    raw = os.environ.get(name)
+    val = (raw or "").strip().lower()
+    if not val:
+        return default
+    if not _SIZE_RE.match(val):
+        raise ValueError(
+            f"{name}={raw!r} is not a valid Spark size string "
+            "(expected digits with an optional b/k/m/g/t/p suffix, "
+            "e.g. '256m')"
+        )
+    return val
 
 
 def get_session(app_name: str = "pgshovel-spark", cpus: str | None = None) -> SparkSession:
@@ -87,15 +83,11 @@ def get_session(app_name: str = "pgshovel-spark", cpus: str | None = None) -> Sp
         # Env-parameterised (round-13 contract: scale-dependent knobs
         # must be conf/env, not constants): default stays the measured
         # fixture-scale value; set SPARK_GRAFT_ADVISORY_PARTITION_BYTES
-        # to 64m-256m on a cluster (SCALE.md; the r13 name without the
-        # _BYTES suffix is kept as a legacy alias).
+        # to 64m-256m on a cluster (SCALE.md).  It divides every
+        # partition width operators/skew.py derives.
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            _env_size(
-                "SPARK_GRAFT_ADVISORY_PARTITION_BYTES",
-                "SPARK_GRAFT_ADVISORY_PARTITION",
-                default="2m",
-            ),
+            _env_size("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", default="2m"),
         )
         # Python DataSource filter pushdown (the native pgshovel
         # batch source renders supported conjuncts into the remote
@@ -122,10 +114,6 @@ def get_session(app_name: str = "pgshovel-spark", cpus: str | None = None) -> Sp
         # at 100 TB the write CPU premium repays itself in IO on the
         # first full read.
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config(
-            "spark.sql.codegen.wholeStage",
-            os.environ.get("SPARK_GRAFT_WSCG", "true"),
-        )
         # Align Spark's huge-method cutoff with HotSpot's real JIT
         # limit (-XX:-DontCompileHugeMethods threshold, 8000 bytecode
         # bytes): a generated processNext() above it is NEVER

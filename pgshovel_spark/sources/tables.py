@@ -235,12 +235,16 @@ def nation_name_expr(spark: SparkSession, sf_dir: str, key_col):
 
 
 def docs_parallel(spark: SparkSession, sf_dir: str):
-    """documents spread across all cores BEFORE tokenize/explode work —
-    the single-file fixture otherwise scans as ONE task and serializes
-    every interpreted higher-order expression onto one thread (measured
-    3-6x whole-query on the similarity family).  No-op cost on a real
-    multi-file corpus, where the scan is already parallel.  ONE shared
-    definition (text/similarity/curation/training previously carried
-    four copies of this spread)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    """documents spread across all cores BEFORE tokenize/explode or
+    ``mapInPandas`` work — the single-file fixture otherwise scans as
+    ONE task and serializes every interpreted higher-order expression
+    (measured 3-6x whole-query on the similarity family) or every Arrow
+    batch onto one thread.  The width is ``operators.skew.spread_scan``'s
+    rule: the scan is hash-spread on ``doc_id`` only when it plans
+    fewer splits than cores, so on a real multi-file corpus, where the
+    scan is already parallel, it is returned untouched.  No
+    ``expansion``: the consumers are row-local, and a data-derived
+    width would size a sub-advisory corpus to one task."""
+    from pgshovel_spark.operators.skew import spread_scan
+
+    return spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")

@@ -124,14 +124,11 @@ def test_global_rank_derived_default_partitions(spark):
     # to [1, defaultParallelism]) instead of using defaultParallelism
     # outright — the ranks must be identical either way, and for a
     # tiny input the derived count must be small (core-independent).
-    from pgshovel_spark.operators.rank import (
-        _sized_partitions,
-        sized_partitions,
-        with_global_rank,
-    )
+    from pgshovel_spark.operators.rank import with_global_rank
+    from pgshovel_spark.operators.skew import plan_partitions, sized_partitions
 
     df = spark.range(100).select(F.col("id"), (F.col("id") * 13 % 31).alias("v"))
-    n = _sized_partitions(df)
+    n = plan_partitions(df)
     assert 1 <= n <= spark.sparkContext.defaultParallelism
     got = with_global_rank(df, [F.col("v").asc(), F.col("id").asc()], rank_col="r")
     want = with_global_rank(
@@ -567,3 +564,27 @@ def test_spread_scan_expansion_derives_width_from_data(spark):
     assert spread is narrow or n < p
     # rows are preserved either way
     assert spread.count() == 1000
+
+
+def test_partition_widths_come_from_one_module():
+    # Static gate, no Spark: operators/skew.py owns the one
+    # partition-sizing rule, so no other engine module may read the
+    # core count (.defaultParallelism) or a plan-size estimate
+    # (.sizeInBytes) to pick a width of its own.  Attribute nodes
+    # only — comments and docstrings may still name them.
+    import ast
+
+    root = Path(__file__).resolve().parent.parent / "pgshovel_spark"
+    owner = root / "operators" / "skew.py"
+    assert owner.is_file()
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Attribute) and node.attr in (
+                "defaultParallelism",
+                "sizeInBytes",
+            ):
+                hits.append(f"{path.relative_to(root)}:{node.lineno} .{node.attr}")
+    assert not hits, "partition width decided outside operators/skew.py:\n" + "\n".join(hits)
