@@ -107,17 +107,23 @@ def _cmd_cdc(args) -> int:
         sslrootcert=args.sslrootcert,
     )
 
-    def _conn_opts(w):
-        """Apply the transport options to a Spark reader/writer."""
-        for k, v in (
-            ("sockdir", args.sockdir), ("host", args.host),
-            ("port", str(args.port)), ("password", args.password),
-            ("sslmode", args.sslmode), ("sslrootcert", args.sslrootcert),
-            ("database", args.database), ("user", args.user),
-        ):
-            if v:
-                w = w.option(k, v)
-        return w
+    def _table_specs():
+        """``--table T[:PART_COL]`` values as (table, partition column)
+        pairs, or None after naming a table that has no column."""
+        specs = []
+        for t in args.table:
+            name, _, pcol = t.partition(":")
+            pcol = pcol or args.partition_col
+            if not pcol:
+                print(
+                    f"{args.action}: no partition column for {name!r}"
+                    " (use T:PART_COL or --partition-col)",
+                    file=sys.stderr,
+                )
+                return None
+            specs.append((name, pcol))
+        return specs
+
     if args.action == "create-slot":
         lsn = po.create_slot_pgoutput(params, args.name)
         print(json.dumps({"slot": args.name, "consistent_point": lsn}))
@@ -150,25 +156,19 @@ def _cmd_cdc(args) -> int:
         # covers them all — the multi-table replication-set shape),
         # land parquet per table — then start the stream from this
         # slot with zero gap/overlap
-        specs = []
-        for t in args.table:
-            name, _, pcol = t.partition(":")
-            pcol = pcol or args.partition_col
-            if not pcol:
-                print(
-                    f"bootstrap: no partition column for {name!r}"
-                    " (use T:PART_COL or --partition-col)",
-                    file=sys.stderr,
-                )
-                return 2
-            specs.append((name, pcol))
+        specs = _table_specs()
+        if specs is None:
+            return 2
         if not (specs and args.out):
             print("bootstrap needs --table and --out", file=sys.stderr)
             return 2
         import os
 
         from pgshovel_spark.session import get_session
-        from pgshovel_spark.sources.pgdatasource import register_pgshovel
+        from pgshovel_spark.sources.pgdatasource import (
+            pg_options,
+            register_pgshovel,
+        )
 
         spark = get_session("cli-bootstrap")
         register_pgshovel(spark)
@@ -181,7 +181,8 @@ def _cmd_cdc(args) -> int:
                     else os.path.join(args.out, table)
                 )
                 (
-                    _conn_opts(spark.read.format("pgshovel"))
+                    spark.read.format("pgshovel")
+                    .options(**pg_options(params))
                     .option("table", table)
                     .option("partition_col", pcol)
                     .option("num_partitions", str(args.num_partitions))
@@ -210,18 +211,9 @@ def _cmd_cdc(args) -> int:
         # and 2PC-upsert the image into the target at the bumped
         # --epoch; restart `cdc stream` afterwards with a FRESH
         # checkpoint and the same --epoch.
-        specs = []
-        for t in args.table:
-            name, _, pcol = t.partition(":")
-            pcol = pcol or args.partition_col
-            if not pcol:
-                print(
-                    f"rebootstrap: no partition column for {name!r}"
-                    " (use T:PART_COL or --partition-col)",
-                    file=sys.stderr,
-                )
-                return 2
-            specs.append((name, pcol))
+        specs = _table_specs()
+        if specs is None:
+            return 2
         if not (specs and args.to_table and args.keys and args.flatten):
             print(
                 "rebootstrap needs --table, --to-table, --keys and"
@@ -280,7 +272,10 @@ def _cmd_cdc(args) -> int:
         from pyspark.sql import functions as F
 
         from pgshovel_spark.session import get_session
-        from pgshovel_spark.sources.pgdatasource import register_pgshovel
+        from pgshovel_spark.sources.pgdatasource import (
+            pg_options,
+            register_pgshovel,
+        )
 
         spark = get_session("cli-relay")
         register_pgshovel(spark)
@@ -291,7 +286,9 @@ def _cmd_cdc(args) -> int:
                 F.col("after")[name].cast(typ or "string").alias(name)
             )
         keys = [k.strip() for k in args.keys.split(",")]
-        src = _conn_opts(spark.readStream.format("pgshovel"))
+        src = spark.readStream.format("pgshovel").options(
+            **pg_options(params)
+        )
         if args.shards:
             src = src.option("shards", args.shards)
         else:
@@ -310,7 +307,8 @@ def _cmd_cdc(args) -> int:
             .repartition(max(2, len(keys)), *keys)
         )
         q = (
-            _conn_opts(flat.writeStream.format("pgshovel"))
+            flat.writeStream.format("pgshovel")
+            .options(**pg_options(params))
             .option("table", args.to_table)
             .option("keys", args.keys)
             .option("order_cols", "epoch,seq")

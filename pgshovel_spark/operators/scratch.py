@@ -35,11 +35,9 @@ for).  Two safety properties follow:
   which only changes when direct children change, so a long-lived
   session could lose a LIVE artifact mid-run.
 
-Two more helpers: ``materialize`` marks a per-query multi-branch
+One more helper: ``materialize`` marks a per-query multi-branch
 subtree cached WITH lineage intact (compute once, recoverable from
-the plan), and ``truncate`` is a reliable checkpoint into the scratch
-root for iterative algorithms that must cut lineage while keeping the
-round table on storage.
+the plan).
 
 Everything here is driver-light: paths and a dict of DataFrame
 handles; no data ever reaches the driver.
@@ -114,13 +112,6 @@ def _gc_once() -> None:
                 pass
 
 
-def _app_dir(spark: SparkSession) -> Path:
-    """Per-session dir (checkpoints and other session-private state)."""
-    d = SCRATCH_ROOT / spark.sparkContext.applicationId
-    d.mkdir(parents=True, exist_ok=True)
-    return d
-
-
 def scratch_table(
     spark: SparkSession, name: str, sf_dir: str, build, partition_by=None,
     persist: bool = True,
@@ -192,23 +183,19 @@ def scratch_table(
             # invalidates both for this path only.
             spark.catalog.refreshByPath(str(path))
         got = spark.read.parquet(str(path))
+        # Mark the handle cached once, as it enters the memo: consumers
+        # typically fan the artifact into several plan branches, and a
+        # cached scan feeds them all from memory instead of re-decoding
+        # parquet per branch.  Lineage stays intact (it IS the parquet
+        # scan), so an evicted/unpersisted/lost block silently re-reads
+        # from storage — durable, unlike a localCheckpoint.
+        if persist:
+            got.persist(StorageLevel.MEMORY_AND_DISK)
         _BUILT[key] = got
     try:
         (path / "_HEARTBEAT").touch()
     except OSError:
         pass
-    # (Re-)mark the handle cached: consumers typically fan the artifact
-    # into several plan branches, and a cached scan feeds them all from
-    # memory instead of re-decoding parquet per branch.  Lineage stays
-    # intact (it IS the parquet scan), so an evicted/unpersisted/lost
-    # block silently re-reads from storage — durable, unlike a
-    # localCheckpoint.  Idempotent, and cheap to re-call after external
-    # housekeeping (e.g. bench.py's between-query unpersist).
-    if persist:
-        try:
-            got.persist(StorageLevel.MEMORY_AND_DISK)
-        except Exception:  # pragma: no cover - already cached with other level
-            pass
     return got
 
 
@@ -289,27 +276,3 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     if eager:
         df.count()
     return df
-
-
-def truncate(df: DataFrame) -> DataFrame:
-    """Reliable checkpoint into the scratch root: cut the lineage of an
-    ITERATIVE algorithm's round table so plans stay flat across rounds,
-    while the round data lands on storage — a lost executor re-reads
-    instead of stranding the iteration (a localCheckpoint here would).
-
-    Sets the context checkpoint dir lazily so the call also works
-    under an externally owned SparkSession (the correctness driver's).
-    The app dir's heartbeat is refreshed on EVERY call — not just at
-    setup — so a session checkpointing for longer than the GC stale
-    window keeps its live checkpoint dir out of a fresh process's
-    sweep."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        d = _app_dir(spark) / "checkpoints"
-        sc.setCheckpointDir(str(d))
-    try:
-        (_app_dir(spark) / "_HEARTBEAT").touch()
-    except OSError:
-        pass
-    return df.checkpoint(eager=True)

@@ -4,7 +4,8 @@ Python DataSource API (``pyspark.sql.datasource``).
 
 This is the one way changes leave a replication slot: a
 CHECKPOINT-NATIVE source whose only watermark is Spark's own offset
-log, decoding the binary ``pgoutput`` plugin (sources/pgoutput.py).
+log, decoding the binary ``pgoutput`` plugin, protocol v1
+(sources/pgoutput.py).
 ONE stream reader serves every shape: ``PgShovelStreamReader``, a full
 ``DataSourceStreamReader`` with one input partition per replication
 slot.  ``option("shards", '[{"slot": ..., "publication": ...,
@@ -91,7 +92,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-__all__ = ["PgShovelDataSource", "register_pgshovel", "rebootstrap_slot"]
+__all__ = [
+    "PgShovelDataSource",
+    "register_pgshovel",
+    "rebootstrap_slot",
+    "pg_options",
+]
 
 
 def _opt(options, key: str, default=None):
@@ -135,6 +141,22 @@ def _params_from_options(options, database: str | None = None):
         sslmode=_opt(options, "sslmode", "disable"),
         sslrootcert=_opt(options, "sslrootcert", ""),
     )
+
+
+def pg_options(params) -> dict[str, str]:
+    """Source/sink options for ``params`` — the inverse of
+    :func:`_params_from_options`; empty transport fields are left out
+    so their defaults apply."""
+    opts = {
+        "database": params.database,
+        "user": params.user,
+        "port": str(params.port),
+    }
+    for k in ("sockdir", "host", "password", "sslmode", "sslrootcert"):
+        v = getattr(params, k)
+        if v:
+            opts[k] = v
+    return opts
 
 
 # ---------------------------------------------------------------------------
@@ -284,10 +306,10 @@ class PgShovelStreamReader(DataSourceStreamReader):
     alone larger than the budget is delivered in budget-sized chunks
     over several batches (``_plan_chunk``).
 
-    Restrictions (enforced): protocol v1, no v2 streaming (stream
-    segments interleave across the probe's commit-grouping),
-    origin='any' (a decoder-side origin drop would desync the probe's
-    server-side count), and no publication covering the meta table
+    Restrictions (enforced): the decoder speaks pgoutput protocol v1
+    only, so options asking for ``proto_version`` other than 1,
+    ``streaming=true`` or an ``origin`` other than 'any' are rejected;
+    and no publication may cover the meta table
     (``_check_pub_excludes_meta`` — FOR ALL TABLES is rejected).
     """
 
@@ -363,15 +385,15 @@ class PgShovelStreamReader(DataSourceStreamReader):
         #: probe short-circuit and the slot/meta write amplification
         #: when only SOME shards have traffic.
         self._committed: dict[str, dict] = {}
-        #: last end offset REPORTED to Spark this run, per slot.  The
-        #: engine fires source.commit(N) only when batch N+1 is
+        #: last end offset REPORTED to Spark this run, per slot, or
+        #: the end of a batch the engine replayed (``partitions``).
+        #: The engine fires source.commit(N) only when batch N+1 is
         #: CONSTRUCTED, so while a bounded backlog drains, the meta
         #: row lags the reported position by one batch — a probe that
         #: planned only from meta would re-report batch N's end
         #: forever and the stream would deadlock (no new offset -> no
         #: batch N+1 -> no commit(N)).  Driver-memory only: a fresh
-        #: runner falls back to meta and Spark replays any
-        #: uncommitted batch from its own offset log.
+        #: runner starts from the replayed batch's end, else from meta.
         self._reported: dict[str, dict] = {}
 
     def _params(self, shard: dict):
@@ -591,9 +613,10 @@ class PgShovelStreamReader(DataSourceStreamReader):
         return end
 
     def _effective_start(self, slot: str, m: dict) -> dict:
-        """The position the next batch must continue from: the last
-        end reported to Spark THIS RUN when one exists (>= the meta
-        row by construction), else the meta row's position."""
+        """The position the next batch must continue from: the
+        furthest end this run reported to Spark or planned partitions
+        for (a restart's replayed batch counts), when it is at or past
+        the meta row; else the meta row's position."""
         rep = self._reported.get(slot)
         if rep is not None and rep["seq"] >= m["base_seq"]:
             return rep
@@ -801,6 +824,13 @@ class PgShovelStreamReader(DataSourceStreamReader):
             e = end.get(slot)
             if e is None or e["seq"] <= s["seq"]:
                 continue  # shard idle this batch
+            # a restarted driver replays the engine's last logged batch
+            # before it probes again, while meta may still trail that
+            # batch's start (the engine logs batch N+1 before it calls
+            # commit(N)): the replayed end is the planning floor
+            rep = self._reported.get(slot)
+            if rep is None or e["seq"] > rep["seq"]:
+                self._reported[slot] = e
             parts.append(_ShardPartition(self.shards[slot], s, e))
         return parts
 
@@ -1636,17 +1666,6 @@ def rebootstrap_slot(
             if e.sqlstate != "42P01":  # no meta table: nothing to clear
                 raise
 
-    def _conn(w):
-        for k in ("sockdir", "host", "password", "sslmode", "sslrootcert"):
-            v = getattr(params, k, "")
-            if v:
-                w = w.option(k, v)
-        return (
-            w.option("database", params.database)
-            .option("user", params.user)
-            .option("port", str(params.port))
-        )
-
     counts: dict[str, int] = {}
     with exported_slot_snapshot(params, slot) as (
         cpoint,
@@ -1654,7 +1673,8 @@ def rebootstrap_slot(
     ):
         for table, pcol in tables:
             df = (
-                _conn(spark.read.format("pgshovel"))
+                spark.read.format("pgshovel")
+                .options(**pg_options(params))
                 .option("table", table)
                 .option("partition_col", pcol)
                 .option("num_partitions", str(num_partitions))
@@ -1679,7 +1699,8 @@ def rebootstrap_slot(
                 .repartition(max(2, num_partitions), *keys)
             )
             (
-                _conn(out.write.format("pgshovel"))
+                out.write.format("pgshovel")
+                .options(**pg_options(params))
                 .option("table", to_table)
                 .option("keys", ",".join(keys))
                 .option("order_cols", "epoch,seq")

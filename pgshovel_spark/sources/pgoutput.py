@@ -6,7 +6,11 @@ Debezium, AWS DMS) speaks ``pgoutput``: the binary message set (Begin /
 Relation / Insert / Update / Delete / Commit ...) defined by the
 public "Logical Streaming Replication Protocol" chapter of the
 PostgreSQL documentation, scoped by a PUBLICATION.  This module
-implements that decoder and BOTH transports:
+implements that decoder and BOTH transports, all in protocol v1:
+every transaction arrives whole, Begin..Commit, in commit order.  The
+v2 streamed-transaction frames (StreamStart/Stop/Commit/Abort) and
+the PG16 ``origin`` filter are not spoken; an ``O`` (Origin) frame of
+a replicated transaction is parsed and its rows are kept.
 
 - ``raw_slot_changes_pgoutput``: the SQL-level transport
   (``pg_logical_slot_peek_binary_changes``; the watermark moves only
@@ -26,8 +30,8 @@ implements that decoder and BOTH transports:
 
 Decoder semantics:
 
-- values travel as their TEXT renderings (proto_version 1 tuples are
-  text-format; typed projection stays the consumer's job),
+- values travel as their TEXT renderings (v1 tuples are text-format;
+  typed projection stays the consumer's job),
 - the ``key`` map is populated from the Relation message's own
   key-column flags — pgoutput ships the replica identity, so no
   caller-provided key map is needed,
@@ -37,9 +41,10 @@ Decoder semantics:
 Scale posture: a slot is SERIAL by design (WAL commit order IS the
 contract), so decode is a control-plane read; executor fan-out
 happens per slot (the stream reader's one input partition per slot)
-or after the source hands rows to Spark.  Relation metadata is a tiny per-stream dict (pgoutput
-re-sends a Relation message whenever the schema changes, which is
-also how live drift surfaces mid-stream).
+or after the source hands rows to Spark.  Relation metadata is a
+tiny per-stream dict (pgoutput re-sends a Relation message whenever
+the schema changes, which is also how live drift surfaces
+mid-stream).
 """
 
 from __future__ import annotations
@@ -180,114 +185,48 @@ def _read_tuple(r: _Reader, rel: _Relation) -> dict[str, str | None]:
 def parse_pgoutput(
     messages: list[tuple[str, int, bytes]],
     relations: dict[int, _Relation] | None = None,
-    streams: dict[int, list[dict]] | None = None,
-    origin: str = "any",
 ) -> list[dict]:
-    """Decode raw ``(lsn, xid, payload)`` pgoutput messages (from the
-    binary slot functions or walsender XLogData) into change dicts
-    (op/table/key/before/after/txid/ts/lsn/commit_lsn) — the input
-    ``pgdatasource._slice_changes`` turns into CHANGE_SCHEMA rows.
+    """Decode raw protocol-v1 ``(lsn, xid, payload)`` pgoutput messages
+    (from the binary slot functions or walsender XLogData) into change
+    dicts (op/table/key/before/after/txid/ts/lsn/commit_lsn) — the
+    input ``pgdatasource._slice_changes`` turns into CHANGE_SCHEMA rows.
 
     ``relations`` carries Relation metadata across calls for a
     LONG-LIVED stream (walsender); pass a dict to persist it.  The
     SQL-function transport re-decodes from the slot's restart point,
     so each batch is self-contained and the default fresh dict works.
 
-    ``streams`` likewise persists protocol-v2 OPEN streamed
-    transactions across calls: the walsender interleaves S..E
-    segments of a large in-progress transaction with OTHER
-    transactions' commits, so a parse triggered by one transaction's
-    Commit may be holding another's open segments — without a
-    persistent dict those would be dropped silently (live streams
-    never resend frames).  (Internal shape note: streamed-transaction
-    origin marks persist in the same dict under ``("origin", xid)``
-    tuple keys — int change-list keys never collide with them.)
-
-    ``origin`` mirrors pgoutput's PG16+ server-side option,
-    implemented decoder-side so it works against ANY server version:
-    ``"any"`` (default) keeps every transaction; ``"none"`` DROPS
-    whole transactions that carry a replication-origin mark (an
-    Origin message) — the loop-prevention filter a bidirectional /
-    cascading replication topology needs, applied at commit time so a
-    transaction is kept or dropped ATOMICALLY.
+    Protocol v1 only: every transaction arrives whole at its commit,
+    Begin..Commit.  A v2 streamed-transaction frame (StreamStart/Stop/
+    Commit/Abort) fails as an unknown message kind.
     """
-    if origin not in ("any", "none"):
-        raise ValueError(f"origin must be 'any' or 'none', got {origin!r}")
     rels = relations if relations is not None else {}
     changes: list[dict] = []
     txn: list[dict] = []
-    txn_origin: str | None = None
     commit_ts: datetime.datetime | None = None
     begin_xid = 0  # from the Begin message: the walsender transport
     # carries no per-message xid (unlike the slot functions), so
-    # non-streamed changes fall back to it when the transport xid is 0
-    # protocol v2 streamed-transaction state: changes of in-progress
-    # large transactions arrive in S..E segments BEFORE their commit,
-    # keyed by the toplevel xid from StreamStart; per-message xids
-    # (which may be subtransactions) are recorded so StreamAbort can
-    # discard exactly one subtransaction's changes.
-    streams = streams if streams is not None else {}
-    stream_xid: int | None = None  # inside an S..E segment when set
+    # changes fall back to it when the transport xid is 0
     for lsn, xid, payload in messages:
         if not payload:
             raise ValueError("empty pgoutput message")
         r = _Reader(payload)
         kind = chr(r.u8())
-        msg_xid = xid
-        if stream_xid is not None and kind in "RIUDTMY":
-            # v2: DML/metadata inside a stream segment is xid-prefixed
-            # (the documented set: Relation, Type, Insert, Update,
-            # Delete, Truncate, Message — Type ('Y') included)
-            msg_xid = r.i32()
         if kind == "B":  # Begin: final_lsn, commit_ts, xid
             r.i64()
             commit_ts = _pg_ts(r.i64())
             begin_xid = r.i32()
             txn = []
-            txn_origin = None
         elif kind == "C":  # Commit: flags, commit_lsn, end_lsn, ts
             # Stamp the Commit frame's own lsn: the only position
             # monotone across transactions (decoding emits in COMMIT
             # order; change lsns interleave) — the offset key the
             # native streaming source (pgdatasource.py) tracks.
-            if origin == "none" and txn_origin is not None:
-                txn = []  # foreign-origin txn dropped whole
             for ch in txn:
                 ch["commit_lsn"] = lsn
             changes.extend(txn)
             txn = []
             commit_ts = None
-            txn_origin = None
-        elif kind == "S":  # v2 StreamStart: xid, first-segment flag
-            stream_xid = r.i32()
-            r.u8()
-            streams.setdefault(stream_xid, [])
-        elif kind == "E":  # v2 StreamStop
-            stream_xid = None
-        elif kind == "c":  # v2 StreamCommit: xid, flags, 2 lsn, ts
-            sxid = r.i32()
-            r.u8()
-            r.i64()
-            r.i64()
-            ts = _pg_ts(r.i64())
-            done = streams.pop(sxid, [])
-            s_origin = streams.pop(("origin", sxid), None)
-            if origin == "none" and s_origin is not None:
-                done = []  # foreign-origin streamed txn dropped whole
-            for ch in done:
-                ch["ts"] = ts
-                ch["commit_lsn"] = lsn  # StreamCommit frame position
-            changes.extend(done)
-        elif kind == "A":  # v2 StreamAbort: xid, subxid
-            sxid = r.i32()
-            sub = r.i32()
-            if sub == sxid:
-                streams.pop(sxid, None)  # whole transaction rolled back
-                streams.pop(("origin", sxid), None)
-            elif sxid in streams:  # one subtransaction rolled back
-                streams[sxid] = [
-                    ch for ch in streams[sxid] if ch["txid"] != sub
-                ]
         elif kind == "R":  # Relation
             oid = r.i32()
             ns = r.cstr()
@@ -316,18 +255,9 @@ def parse_pgoutput(
             r.i32()
             r.cstr()
             r.cstr()
-        elif kind == "O":  # Origin: commit lsn on the origin, name
+        elif kind == "O":  # Origin of a replicated txn: lsn, name
             r.i64()
-            o_name = r.cstr()
-            # An Origin frame inside an S..E segment marks the OPEN
-            # streamed transaction (it is NOT xid-prefixed); outside,
-            # it marks the current plain transaction.  The mark
-            # persists with the stream state so a commit parsed in a
-            # LATER read() still sees it.
-            if stream_xid is not None:
-                streams[("origin", stream_xid)] = o_name
-            else:
-                txn_origin = o_name
+            r.cstr()
         elif kind == "M":  # Message: flags, lsn, prefix, length, body
             r.u8()
             r.i64()
@@ -380,34 +310,32 @@ def parse_pgoutput(
                     }
             src = after if after is not None else (before or {})
             key = {k: src.get(k) for k in rel.key_columns if k in src}
-            sink = streams[stream_xid] if stream_xid is not None else txn
-            sink.append(
+            txn.append(
                 {
                     "op": {"I": "INSERT", "U": "UPDATE", "D": "DELETE"}[kind],
                     "table": rel.name,
                     "key": key or None,
                     "before": before,
                     "after": after,
-                    "txid": msg_xid or begin_xid,
-                    "ts": commit_ts,  # None in a stream; StreamCommit stamps
+                    "txid": xid or begin_xid,
+                    "ts": commit_ts,
                     "lsn": lsn,
                 }
             )
         elif kind == "T":  # Truncate: nrels, options, oids
             nrels = r.i32()
             r.u8()
-            sink = streams[stream_xid] if stream_xid is not None else txn
             for _ in range(nrels):
                 oid = r.i32()
                 rel = rels.get(oid)
-                sink.append(
+                txn.append(
                     {
                         "op": "TRUNCATE",
                         "table": rel.name if rel else f"oid:{oid}",
                         "key": None,
                         "before": None,
                         "after": None,
-                        "txid": msg_xid or begin_xid,
+                        "txid": xid or begin_xid,
                         "ts": commit_ts,
                         "lsn": lsn,
                     }
@@ -598,42 +526,26 @@ def raw_slot_changes_pgoutput(
     params: PgParams,
     slot: str,
     publication: str,
-    peek: bool = True,
-    proto_version: int = 1,
-    streaming: bool = False,
-    work_mem: str | None = None,
     limit: int | None = None,
 ) -> list[tuple[str, int, bytes]]:
-    """Raw ``(lsn, xid, payload)`` rows from the binary slot functions
-    — the ONE construction of the peek/get SQL (options, publication,
-    bound), used by the native streaming source (pgdatasource.py).
-    ``limit`` is the server's ``upto_nchanges``: it counts raw frames
-    (Begin/Relation/Commit included, not changes), and a non-streamed
-    transaction's frames are all emitted at its commit record, so a
-    bounded peek still ends on a transaction boundary."""
-    import re
-
+    """Raw protocol-v1 ``(lsn, xid, payload)`` rows from a
+    non-destructive binary slot peek (the watermark moves only on
+    ``pglogical.advance``), used by the native streaming source
+    (pgdatasource.py) and ``cdc peek``.  ``limit`` is the server's
+    ``upto_nchanges``: it counts raw frames (Begin/Relation/Commit
+    included, not changes), and a v1 transaction's frames are all
+    emitted at its commit record, so a bounded peek still ends on a
+    transaction boundary."""
     from pgshovel_spark.sources.pglogical import _check_slot
 
     _check_publication(publication)
-    fn = (
-        "pg_logical_slot_peek_binary_changes"
-        if peek
-        else "pg_logical_slot_get_binary_changes"
-    )
-    opts = f"'proto_version', '{int(proto_version)}'"
-    if streaming:
-        opts += ", 'streaming', 'on'"
     bound = "null" if limit is None else str(int(limit))
     with params.connect() as c:
-        if work_mem is not None:
-            if not re.match(r"[0-9]+[kMG]?B\Z", work_mem):
-                raise ValueError(f"invalid work_mem: {work_mem!r}")
-            c.query(f"set logical_decoding_work_mem = '{work_mem}'")
         res = c.query(
-            f"select lsn::text, xid::text, data from {fn}"
-            f"('{_check_slot(slot)}', null, {bound},"
-            f" {opts}, 'publication_names', '{publication}')"
+            "select lsn::text, xid::text, data"
+            " from pg_logical_slot_peek_binary_changes"
+            f"('{_check_slot(slot)}', null, {bound}, 'proto_version', '1',"
+            f" 'publication_names', '{publication}')"
         )[0]
     return [(lsn, int(xid), data) for lsn, xid, data in res.rows]
 
@@ -647,8 +559,7 @@ def raw_slot_changes_pgoutput(
 #: commit lsn is its transaction's Commit frame: rows are grouped to
 #: their closing commit via a running commit-frame count (decoding
 #: emits whole transactions in commit order, so the group of a change
-#: is closed by the next 'C' frame).  Protocol v1 only: v2 stream
-#: segments interleave and would break the grouping.
+#: is closed by the next 'C' frame), as in protocol v1.
 _PROBE_CTES = """
 with raw as (
   select t.lsn, get_byte(t.data, 0) as k, t.data, t.rn
@@ -701,7 +612,7 @@ def backlog_plan_pgoutput(
     alone exceeding the budget yields ``n == 0`` with ``first_count >
     budget``: the caller's signal to switch to intra-commit chunking
     (:func:`giant_commit_plan`).  Counting parity with
-    ``parse_pgoutput`` as in ``_PROBE_CTES``; protocol v1 only."""
+    ``parse_pgoutput`` as in ``_PROBE_CTES``."""
     import re
 
     from pgshovel_spark.sources.pglogical import _check_slot
@@ -902,12 +813,9 @@ class PgReplicationConnection(PgConnection):
         slot: str,
         publication: str,
         start_lsn: str = "0/0",
-        proto_version: int = 1,
-        streaming: bool = False,
     ) -> "ReplicationStream":
         """Enter CopyBoth mode streaming ``slot`` through pgoutput
-        (``proto_version=2, streaming=True`` = in-progress transaction
-        streaming for large transactions, PG 14+)."""
+        protocol v1."""
         import re
 
         from pgshovel_spark.sources.pglogical import _check_slot
@@ -915,11 +823,9 @@ class PgReplicationConnection(PgConnection):
         _check_publication(publication)
         if not re.match(r"[0-9A-Fa-f]+/[0-9A-Fa-f]+\Z", start_lsn):
             raise ValueError(f"invalid LSN: {start_lsn!r}")
-        stream_opt = ", streaming 'on'" if streaming else ""
         sql = (
             f"START_REPLICATION SLOT {_check_slot(slot)} LOGICAL {start_lsn}"
-            f" (proto_version '{int(proto_version)}',"
-            f" publication_names '{publication}'{stream_opt})"
+            f" (proto_version '1', publication_names '{publication}')"
         )
         body = sql.encode() + b"\x00"
         self._sock.sendall(b"Q" + struct.pack("!i", len(body) + 4) + body)
@@ -964,10 +870,6 @@ class ReplicationStream:
         self.flush_lsn = 0  # last position the CALLER confirmed durable
         self._pending: list[tuple[str, int, bytes]] = []  # open-txn tail
         self.relations: dict = {}  # stream-lifetime Relation metadata
-        # stream-lifetime OPEN v2 transactions: segments already parsed
-        # but not yet StreamCommit'ed/aborted survive across read()
-        # calls even when another transaction's commit triggers a parse
-        self._streams: dict = {}
 
     def read(self, max_seconds: float = 5.0, relations=None) -> list[dict]:
         """Read until a Commit message closes a transaction (returning
@@ -993,9 +895,8 @@ class ReplicationStream:
                     start, end, _clock = struct.unpack("!qqq", payload[1:25])
                     self.wal_end = max(self.wal_end, end)
                     batch.append((lsn_to_str(start), 0, payload[25:]))
-                    # Commit (v1) or StreamCommit (v2) closes a txn
-                    if payload[25:26] in (b"C", b"c"):
-                        return parse_pgoutput(batch, rels, self._streams)
+                    if payload[25:26] == b"C":  # Commit closes a txn
+                        return parse_pgoutput(batch, rels)
                 elif tag == b"k":  # keepalive: end, clock, reply?
                     end, _clock, reply = struct.unpack("!qqB", payload[1:18])
                     self.wal_end = max(self.wal_end, end)

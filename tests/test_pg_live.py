@@ -89,12 +89,11 @@ def _read_batch(rdr, start: dict) -> tuple[list, dict]:
     return _read_range(rdr, start, end), end
 
 
-def _envelope(spark, pg, slot: str, pub: str, origin: str = "any", **peek):
+def _envelope(spark, pg, slot: str, pub: str):
     """Peek ``slot`` through the one capture path (raw pgoutput frames
     -> ``parse_pgoutput`` -> the native source's ``_slice_changes`` and
     ``_changes_to_batches``) and return ``(CHANGE_SCHEMA DataFrame,
-    last frame lsn or None)``; ``peek`` passes through to
-    ``raw_slot_changes_pgoutput``."""
+    last frame lsn or None)``."""
     import pyarrow as pa
 
     from pgshovel_spark.sources import pgoutput as po
@@ -104,9 +103,9 @@ def _envelope(spark, pg, slot: str, pub: str, origin: str = "any", **peek):
     )
     from pgshovel_spark.streaming.change_stream import CHANGE_SCHEMA
 
-    raw = po.raw_slot_changes_pgoutput(pg, slot, pub, **peek)
+    raw = po.raw_slot_changes_pgoutput(pg, slot, pub)
     rows, _end = _slice_changes(
-        po.parse_pgoutput(raw, origin=origin), _ORIGIN, _ALL, slot, 0
+        po.parse_pgoutput(raw), _ORIGIN, _ALL, slot, 0
     )
     batches = _changes_to_batches(rows)
     df = (
@@ -701,7 +700,8 @@ def _msg_begin(ts_us=820540800000000, xid=700):
 def test_pgoutput_decoder_unit():
     """Decoder conformance on hand-built bytes: Begin/Relation/Insert/
     Update(K and O)/Delete/Commit framing, NULLs, unchanged-TOAST
-    sentinel, Truncate, and key extraction from Relation flags."""
+    sentinel, Truncate, key extraction from Relation flags, and a
+    replicated transaction's Origin frame (its rows are kept)."""
     import struct as st
 
     from pgshovel_spark.sources import pgoutput as po
@@ -743,6 +743,31 @@ def test_pgoutput_decoder_unit():
     assert all(c["ts"].year == 2026 for c in out)
     # uncommitted transactions yield nothing (atomic envelope)
     assert po.parse_pgoutput(msgs[:-1]) == []
+
+    # v1 sends an Origin frame after Begin for a transaction replicated
+    # from another node; the decoder keeps every row of it, in commit
+    # order between the local transactions around it
+    origin = b"O" + st.pack("!q", 0x99) + b"node_b\x00"
+
+    def txn(xid, ids, with_origin):
+        out = [("0/%X" % (xid * 16), xid, _msg_begin(xid=xid))]
+        if with_origin:
+            out.append(("0/%X" % (xid * 16 + 1), xid, origin))
+        for j, i in enumerate(ids):
+            out.append(("0/%X" % (xid * 16 + 2 + j), xid,
+                        b"I" + st.pack("!i", 99) + b"N" + _tuple_data([i, "x"])))
+        out.append(("0/%X" % (xid * 16 + 9), xid, commit))
+        return out
+
+    replicated = po.parse_pgoutput(
+        [("0/1", 1, rel)]
+        + txn(2, [1, 2], with_origin=False)
+        + txn(3, [3], with_origin=True)
+        + txn(4, [4], with_origin=False)
+    )
+    assert [(c["txid"], c["after"]["id"]) for c in replicated] == [
+        (2, "1"), (2, "2"), (3, "3"), (4, "4")
+    ]
 
 
 def test_pgoutput_decoder_malformed():
@@ -1196,126 +1221,6 @@ def test_kafka_envelope_byte_parity_with_live_capture(spark, pg, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# pgoutput protocol v2 — streamed in-progress transactions (round 10)
-# ---------------------------------------------------------------------------
-
-
-def test_pgoutput_v2_stream_unit():
-    """Decoder conformance on hand-built v2 bytes: S..E segments,
-    xid-prefixed DML, StreamCommit stamping + ordering, StreamAbort of
-    a subtransaction and of the whole transaction, interleaved small
-    (non-streamed) transactions."""
-    import struct as st
-
-    from pgshovel_spark.sources import pgoutput as po
-
-    TS = 820540800000000  # 2026-01-01 in pg microseconds
-    rel = _msg_relation(99, "public", "t", ["id", "v"], ["id"])
-
-    def s_start(xid, first=1):
-        return b"S" + st.pack("!iB", xid, first)
-
-    def s_ins(xid, *vals):
-        return b"I" + st.pack("!i", xid) + st.pack("!i", 99) + b"N" + _tuple_data(list(vals))
-
-    def s_rel(xid):
-        return b"R" + st.pack("!i", xid) + rel[1:]
-
-    s_commit = b"c" + st.pack("!iBqqq", 700, 0, 0, 0, TS)
-    msgs = [
-        # segment 1 of streamed txn 700 (relation arrives IN the stream)
-        ("0/10", 700, s_start(700)),
-        ("0/11", 700, s_rel(700)),
-        ("0/12", 700, s_ins(700, 1, "a")),
-        ("0/13", 700, s_ins(701, 90, "sub")),   # subtransaction 701
-        ("0/14", 700, b"E"),
-        # a SMALL txn 800 commits in between (non-streamed v1 framing)
-        ("0/20", 800, _msg_begin(TS, 800)),
-        ("0/21", 800, b"I" + st.pack("!i", 99) + b"N" + _tuple_data([50, "mid"])),
-        ("0/22", 800, b"C" + b"\x00" + st.pack("!qqq", 0, 0, TS)),
-        # segment 2 of txn 700; subtxn 701 aborts, then txn commits
-        ("0/30", 700, s_start(700, 0)),
-        ("0/31", 700, s_ins(700, 2, "b")),
-        ("0/32", 700, b"E"),
-        ("0/33", 700, b"A" + st.pack("!ii", 700, 701)),  # abort subtxn
-        ("0/34", 700, s_commit),
-    ]
-    out = po.parse_pgoutput(msgs)
-    # commit ORDER: txn 800 commits before txn 700's StreamCommit
-    assert [(c["txid"], c["after"]["id"]) for c in out] == [
-        (800, "50"), (700, "1"), (700, "2")
-    ]
-    assert all(c["ts"] is not None and c["ts"].year == 2026 for c in out)
-    # whole-transaction abort drops everything
-    msgs_abort = msgs[:5] + [("0/40", 700, b"A" + st.pack("!ii", 700, 700))]
-    assert po.parse_pgoutput(msgs_abort) == []
-
-
-def test_pgoutput_v2_streamed_equals_unstreamed(spark, pg):
-    """A 30k-row transaction decoded TWICE from one slot (peek is
-    non-destructive): proto 1 plain vs proto 2 with a 64kB
-    logical_decoding_work_mem forcing stream segments.  The envelope
-    must be IDENTICAL — streaming is a transport detail, not a
-    semantic one."""
-    from pgshovel_spark.sources import pgoutput as po
-
-    with pg.connect() as c:
-        c.query("create table pov2_t(id int primary key, v text)")
-    po.create_publication(pg, "pov2_pub", ["pov2_t"])
-    po.create_slot_pgoutput(pg, "pov2_slot")
-    with pg.connect() as c:
-        c.query(
-            "insert into pov2_t select g, 'p' || g from generate_series(1, 30000) g"
-        )
-        c.query("update pov2_t set v = 'x' where id = 7")
-    plain, lsn1 = _envelope(spark, pg, "pov2_slot", "pov2_pub")
-    streamed, lsn2 = _envelope(
-        spark, pg, "pov2_slot", "pov2_pub",
-        proto_version=2, streaming=True, work_mem="64kB",
-    )
-    assert lsn1 == lsn2
-    cols = ["op", "table", "key", "before", "after", "seq"]
-    a = [tuple(str(r[c]) for c in cols) for r in plain.orderBy("seq").collect()]
-    b = [tuple(str(r[c]) for c in cols) for r in streamed.orderBy("seq").collect()]
-    assert a == b and len(a) == 30001
-    pgl.drop_slot(pg, "pov2_slot")
-
-
-def test_pgoutput_v2_walsender_streamed(pg):
-    """The v2 streamed path over the REAL walsender transport: SET the
-    work_mem on the replication session (database-replication mode
-    accepts SQL), START_REPLICATION with streaming 'on', and read a
-    large transaction arriving as stream segments."""
-    from pgshovel_spark.sources import pgoutput as po
-
-    with pg.connect() as c:
-        c.query("create table powv2_t(id int primary key, v text)")
-    po.create_publication(pg, "powv2_pub", ["powv2_t"])
-    po.create_slot_pgoutput(pg, "powv2_slot")
-    rc = po.PgReplicationConnection(pg)
-    try:
-        rc.query("set logical_decoding_work_mem = '64kB'")
-        stream = rc.start_replication(
-            "powv2_slot", "powv2_pub", proto_version=2, streaming=True
-        )
-        with pg.connect() as c:
-            c.query(
-                "insert into powv2_t select g, 'w' || g"
-                " from generate_series(1, 20000) g"
-            )
-        changes = stream.read(max_seconds=30.0)
-        assert len(changes) == 20000
-        ids = sorted(int(c_["after"]["id"]) for c_ in changes)
-        assert ids == list(range(1, 20001))
-        assert all(c_["ts"] is not None for c_ in changes)
-        stream.send_status(stream.wal_end)
-        stream.stop()
-    finally:
-        rc.close()
-    pgl.drop_slot(pg, "powv2_slot")
-
-
-# ---------------------------------------------------------------------------
 # transaction framing, live
 # ---------------------------------------------------------------------------
 
@@ -1562,47 +1467,6 @@ def test_buffered_sock_timeout_preserves_partial_bytes():
     assert rd.read_exact(2) == b"ef"
 
 
-def test_walsender_interleaved_stream_segments_survive_commit_parse():
-    """v2 interleaving: a small transaction COMMITS between a large
-    streamed transaction's segments.  The commit-triggered parse must
-    not discard the open stream's already-consumed segments — they
-    persist in the stream state and the eventual StreamCommit emits
-    the COMPLETE transaction."""
-    import struct as st
-
-    rel = _msg_relation(99, "public", "t", ["id", "v"], ["id"])
-
-    def s_ins(xid, i):
-        return (b"I" + st.pack("!i", xid) + st.pack("!i", 99)
-                + b"N" + _tuple_data([i, f"v{i}"]))
-
-    TS = 820540800000000
-    stream, sock = _scripted_stream(
-        # segment 1 of streamed txn 70 (relation inside the stream)
-        _xlog(10, b"S" + st.pack("!iB", 70, 1))
-        + _xlog(11, b"R" + st.pack("!i", 70) + rel[1:])
-        + _xlog(12, s_ins(70, 1))
-        + _xlog(13, b"E")
-        # small txn 80 commits in between -> triggers a parse
-        + _xlog(20, _msg_begin(TS, 80))
-        + _xlog(21, b"I" + st.pack("!i", 99) + b"N" + _tuple_data([50, "mid"]))
-        + _xlog(22, b"C\x00" + st.pack("!qqq", 0, 0, TS))
-    )
-    first = stream.read(max_seconds=1.0)
-    assert [c["after"]["id"] for c in first] == ["50"]  # txn 80 only
-    # the streamed txn's tail arrives and commits
-    sock.feed(
-        _xlog(30, b"S" + st.pack("!iB", 70, 0))
-        + _xlog(31, s_ins(70, 2))
-        + _xlog(32, b"E")
-        + _xlog(33, b"c" + st.pack("!iBqqq", 70, 0, 0, 0, TS))
-    )
-    second = stream.read(max_seconds=2.0)
-    # BOTH segments' rows: segment 1 was not lost to the earlier parse
-    assert [c["after"]["id"] for c in second] == ["1", "2"]
-    assert all(c["txid"] == 70 and c["ts"] is not None for c in second)
-
-
 # ---------------------------------------------------------------------------
 # native streaming source: spark.readStream.format("pgshovel")
 # ---------------------------------------------------------------------------
@@ -1696,6 +1560,23 @@ def test_stream_rejects_single_slot_reader_checkpoint():
         {"sockdir": "/nonexistent", "slot": "seq", "publication": "p"}
     )
     assert seq_rdr.partitions({"seq": dict(_ORIGIN)}, {"seq": dict(_ORIGIN)}) == []
+
+
+def test_stream_rejects_options_beyond_protocol_v1():
+    """The decoder speaks pgoutput protocol v1 only: options asking
+    for protocol 2, v2 streaming or an origin filter are refused when
+    the reader is built, before any server is contacted."""
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
+
+    base = {"sockdir": "/nonexistent", "slot": "s", "publication": "p"}
+    for extra, pat in (
+        ({"proto_version": "2"}, "proto_version=1"),
+        ({"streaming": "true"}, "v2 streaming"),
+        ({"origin": "none"}, "origin='any'"),
+    ):
+        with pytest.raises(ValueError, match=pat):
+            PgShovelStreamReader({**base, **extra})
+    PgShovelStreamReader({**base, "proto_version": "1", "origin": "any"})
 
 
 def test_pgdatasource_stream_capture(spark, pg, tmp_path):
@@ -1829,12 +1710,12 @@ def test_pgdatasource_checkpoint_restart_exactly_once(spark, pg, tmp_path):
 
 
 def test_pgoutput_decoder_malformed_metadata():
-    """Round-11 fuzz extension (r10 verdict ask #5): Origin/Type/
-    Message frames and v2 Stream* frames are PARSED field-by-field —
+    """Origin/Type/Message frames are PARSED field-by-field —
     well-formed ones pass through silently, truncated/corrupt ones
-    raise the declared descriptive error.  Table-driven; no silent
-    skips: a framing desync must never masquerade as 'metadata we
-    don't care about'."""
+    raise the declared descriptive error — and protocol-v2 stream
+    frames, which a v1 slot never sends, are unknown kinds.
+    Table-driven; no silent skips: a framing desync must never
+    masquerade as 'metadata we don't care about'."""
     import struct as st
 
     import pytest as _p
@@ -1870,8 +1751,8 @@ def test_pgoutput_decoder_malformed_metadata():
     out = po.parse_pgoutput(msgs)
     assert [(c["op"], c["after"]["id"]) for c in out] == [("INSERT", "1")]
 
-    # 2. MALFORMED metadata/stream frames: declared exceptions, table-
-    #    driven (payload, error-regex)
+    # 2. MALFORMED metadata and v2 stream frames: declared exceptions,
+    #    table-driven (payload, error-regex)
     base = [("0/10", 1, _msg_begin(TS, 1)), ("0/11", 1, rel)]
     CASES = [
         # Origin
@@ -1889,141 +1770,16 @@ def test_pgoutput_decoder_malformed_metadata():
          + b"xx", "truncated"),                           # over-declared len
         (b"M\x01" + st.pack("!q", 1) + b"p\x00" + st.pack("!i", -5),
          "negative pgoutput Message content length"),
-        # v2 Stream* frames
-        (b"S" + st.pack("!i", 7)[:2], "truncated"),       # StreamStart xid cut
-        (b"S" + st.pack("!i", 7), "truncated"),           # missing first-flag
-        (b"c" + st.pack("!iB", 7, 0) + st.pack("!q", 0)[:3],
-         "truncated"),                                    # StreamCommit lsn cut
-        (b"A" + st.pack("!i", 7), "truncated"),           # StreamAbort one xid
+        # v2 StreamStart/Stop/Commit/Abort, well-formed: not v1 frames
+        (b"S" + st.pack("!iB", 7, 1), "unknown pgoutput message kind"),
+        (b"E", "unknown pgoutput message kind"),
+        (b"c" + st.pack("!iBqqq", 7, 0, 0, 0, TS),
+         "unknown pgoutput message kind"),
+        (b"A" + st.pack("!ii", 7, 7), "unknown pgoutput message kind"),
     ]
     for payload, pat in CASES:
         with _p.raises(ValueError, match=pat):
             po.parse_pgoutput(base + [("0/12", 1, payload)])
-
-    # 3. INSIDE a v2 stream segment: Y/M are xid-prefixed; a frame cut
-    #    inside the prefix itself still fails loudly
-    stream_base = [("0/20", 7, b"S" + st.pack("!iB", 7, 1))]
-    for payload in (b"Y" + st.pack("!i", 7)[:2],          # xid prefix cut
-                    b"M" + st.pack("!i", 7)):             # prefix ok, no flags
-        with _p.raises(ValueError, match="truncated"):
-            po.parse_pgoutput(stream_base + [("0/21", 7, payload)])
-
-    # 4. well-formed xid-prefixed Type/Message INSIDE a stream pass
-    #    through; the stream's DML still assembles on StreamCommit
-    v2 = [
-        ("0/20", 7, b"S" + st.pack("!iB", 7, 1)),
-        ("0/21", 7, b"Y" + st.pack("!i", 7) + typemsg()[1:]),
-        ("0/22", 7, b"M" + st.pack("!i", 7) + logmsg()[1:]),
-        ("0/23", 7, b"R" + st.pack("!i", 7) + rel[1:]),
-        ("0/24", 7, b"I" + st.pack("!i", 7) + ins[1:]),
-        ("0/25", 7, b"E"),
-        ("0/26", 7, b"c" + st.pack("!iBqqq", 7, 0, 0, 0, TS)),
-    ]
-    out = po.parse_pgoutput(v2)
-    assert [(c["txid"], c["after"]["id"]) for c in out] == [(7, "1")]
-    assert out[0]["ts"] is not None
-
-
-def test_pgoutput_origin_filter_unit():
-    """Decoder-side replication-origin filter (round 11): origin='none'
-    drops a foreign-origin transaction ATOMICALLY at commit — plain
-    and v2-streamed framing, including an Origin mark whose stream
-    commits in a LATER parse call (persistent streams dict)."""
-    import struct as st
-
-    import pytest as _p
-
-    from pgshovel_spark.sources import pgoutput as po
-
-    TS = 820540800000000
-    rel = _msg_relation(99, "public", "t", ["id", "v"], ["id"])
-    origin_msg = b"O" + st.pack("!q", 0x99) + b"node_b\x00"
-
-    def txn(xid, ids, with_origin):
-        out = [("0/%X" % (xid * 16), xid, _msg_begin(TS, xid))]
-        if with_origin:
-            out.append(("0/%X" % (xid * 16 + 1), xid, origin_msg))
-        for j, i in enumerate(ids):
-            out.append(("0/%X" % (xid * 16 + 2 + j), xid,
-                        b"I" + st.pack("!i", 99) + b"N" + _tuple_data([i, "x"])))
-        out.append(("0/%X" % (xid * 16 + 9), xid,
-                    b"C\x00" + st.pack("!qqq", 0, 0, TS)))
-        return out
-
-    msgs = ([("0/1", 1, rel)]
-            + txn(2, [1, 2], with_origin=False)
-            + txn(3, [3], with_origin=True)       # foreign
-            + txn(4, [4], with_origin=False))
-    keep_all = po.parse_pgoutput(msgs, origin="any")
-    assert [c["after"]["id"] for c in keep_all] == ["1", "2", "3", "4"]
-    local_only = po.parse_pgoutput(msgs, origin="none")
-    assert [c["after"]["id"] for c in local_only] == ["1", "2", "4"]
-
-    with _p.raises(ValueError, match="origin must be"):
-        po.parse_pgoutput(msgs, origin="weird")
-
-    # v2 streamed txn: Origin in segment 1 (call 1), data + commit in
-    # call 2 — the mark must survive in the persistent streams dict
-    streams: dict = {}
-    rels: dict = {}
-    seg1 = [
-        ("0/20", 7, b"S" + st.pack("!iB", 7, 1)),
-        ("0/21", 7, origin_msg),                  # NOT xid-prefixed
-        ("0/22", 7, b"R" + st.pack("!i", 7) + rel[1:]),
-        ("0/23", 7, b"I" + st.pack("!i", 7) + st.pack("!i", 99)
-         + b"N" + _tuple_data([10, "s"])),
-        ("0/24", 7, b"E"),
-    ]
-    assert po.parse_pgoutput(seg1, rels, streams, origin="none") == []
-    seg2 = [
-        ("0/30", 7, b"S" + st.pack("!iB", 7, 0)),
-        ("0/31", 7, b"I" + st.pack("!i", 7) + st.pack("!i", 99)
-         + b"N" + _tuple_data([11, "s"])),
-        ("0/32", 7, b"E"),
-        ("0/33", 7, b"c" + st.pack("!iBqqq", 7, 0, 0, 0, TS)),
-    ]
-    assert po.parse_pgoutput(seg2, rels, streams, origin="none") == []
-    assert streams == {}  # mark cleaned up with the dropped txn
-    # same frames under origin='any' deliver both segments' rows
-    streams2: dict = {}
-    rels2: dict = {}
-    po.parse_pgoutput(seg1, rels2, streams2, origin="any")
-    out = po.parse_pgoutput(seg2, rels2, streams2, origin="any")
-    assert [c["after"]["id"] for c in out] == ["10", "11"]
-
-
-def test_pgoutput_origin_filter_live(spark, pg):
-    """Origin filter against a REAL server: a session marked with
-    pg_replication_origin_session_setup writes one transaction; under
-    origin='none' the decoder drops it, under 'any' it arrives — the
-    loop-prevention a bidirectional topology needs, without requiring
-    the PG16 server-side option."""
-    from pgshovel_spark.sources import pgoutput as po
-
-    with pg.connect() as c:
-        c.query("create table orig_t(id int primary key, v text)")
-    po.create_publication(pg, "orig_pub", ["orig_t"])
-    po.create_slot_pgoutput(pg, "orig_slot")
-
-    with pg.connect() as c:
-        c.query("insert into orig_t values (1, 'local')")
-    with pg.connect() as c:  # a REPLICATED session (has an origin)
-        c.query("select pg_replication_origin_create('peer_node')")
-        c.query("select pg_replication_origin_session_setup('peer_node')")
-        c.query("insert into orig_t values (2, 'from_peer')")
-        c.query("select pg_replication_origin_session_reset()")
-    with pg.connect() as c:
-        c.query("insert into orig_t values (3, 'local2')")
-
-    df_all, _ = _envelope(spark, pg, "orig_slot", "orig_pub", origin="any")
-    ids_all = sorted(r.after["id"] for r in df_all.collect())
-    assert ids_all == ["1", "2", "3"]
-    df_local, _ = _envelope(
-        spark, pg, "orig_slot", "orig_pub", origin="none"
-    )
-    ids_local = sorted(r.after["id"] for r in df_local.collect())
-    assert ids_local == ["1", "3"]
-    pgl.drop_slot(pg, "orig_slot")
 
 
 # ---------------------------------------------------------------------------
@@ -4679,6 +4435,74 @@ def test_simple_reader_max_changes_cap_on_txn_boundary(cap_db):
     rdr.commit({"cbd_slot": ends[4]})
     assert _confirmed_flush(pp, "cbd_slot") == ends[4]["lsn"]
     pgl.drop_slot(pp, "cbd_slot")
+
+
+def test_restart_plans_past_the_replayed_batch(cap_db):
+    """The engine logs batch N+1's offsets before it calls commit(N),
+    so a driver that dies between the two restarts with
+    ``pgshovel_shard_meta`` one batch behind the engine.  The fresh
+    reader first replays the logged batch; its next probe must plan
+    from that batch's end — planning from meta reports an end behind
+    the engine's, and the batch after it re-delivers changes
+    (duplicate seqs, up to 2 x max_changes).  Whole commits (ten 3-row
+    transactions under a cap of 6) and chunks of one giant commit (100
+    rows under 30)."""
+    from pgshovel_spark.sources.pgdatasource import PgShovelStreamReader
+
+    pp = cap_db
+    for name, rows_sql, cap, total in (
+        (
+            "rrw",
+            [
+                f"insert into {{t}} select g, 'v' || g"
+                f" from generate_series({3 * k + 1}, {3 * k + 3}) g"
+                for k in range(10)
+            ],
+            6,
+            30,
+        ),
+        (
+            "rrg",
+            ["insert into {t} select g, 'v' || g from generate_series(1, 100) g"],
+            30,
+            100,
+        ),
+    ):
+        slot = f"{name}_slot"
+        a = _capped_reader(pp, name, rows_sql, cap)
+        # first run, engine order, dying after batch 3 is logged but
+        # before commit(batch 2)
+        o0 = a.initialOffset()
+        o1 = a.latestOffset()
+        seen = sum(b.num_rows for b in _read_range(a, o0, o1))
+        o2 = a.latestOffset()
+        a.commit(o1)
+        seen += sum(b.num_rows for b in _read_range(a, o1, o2))
+        o3 = a.latestOffset()
+        assert [o[slot]["seq"] for o in (o1, o2, o3)] == [cap, 2 * cap, 3 * cap]
+        # restart: a fresh reader replays (o2, o3], then plans
+        b = PgShovelStreamReader(
+            {
+                "sockdir": pp.sockdir,
+                "database": pp.database,
+                "slot": slot,
+                "publication": f"{name}_pub",
+                "max_changes": str(cap),
+            }
+        )
+        seen += sum(x.num_rows for x in _read_range(b, o2, o3))
+        prev, cur = o2, o3
+        for _ in range(10):
+            end = b.latestOffset()
+            if end == cur:
+                break
+            assert end[slot]["seq"] == min(cur[slot]["seq"] + cap, total)
+            b.commit(prev)
+            seen += sum(x.num_rows for x in _read_range(b, cur, end))
+            prev, cur = cur, end
+        assert cur[slot]["seq"] == seen == total
+        b.commit(cur)
+        pgl.drop_slot(pp, slot)
 
 
 def test_sharded_schema_drift_mid_stream(spark, pg, tmp_path):
