@@ -700,8 +700,7 @@ def _msg_begin(ts_us=820540800000000, xid=700):
 def test_pgoutput_decoder_unit():
     """Decoder conformance on hand-built bytes: Begin/Relation/Insert/
     Update(K and O)/Delete/Commit framing, NULLs, unchanged-TOAST
-    sentinel, Truncate, key extraction from Relation flags, and a
-    replicated transaction's Origin frame (its rows are kept)."""
+    sentinel, Truncate, key extraction from Relation flags."""
     import struct as st
 
     from pgshovel_spark.sources import pgoutput as po
@@ -744,9 +743,19 @@ def test_pgoutput_decoder_unit():
     # uncommitted transactions yield nothing (atomic envelope)
     assert po.parse_pgoutput(msgs[:-1]) == []
 
-    # v1 sends an Origin frame after Begin for a transaction replicated
-    # from another node; the decoder keeps every row of it, in commit
-    # order between the local transactions around it
+
+def test_pgoutput_origin_filter_unit():
+    """The decoder has no origin filter (the reader accepts only
+    origin='any'): v1 sends an Origin frame after Begin for a
+    transaction replicated from another node, and the decoder keeps
+    every row of it, in commit order between the local transactions
+    around it."""
+    import struct as st
+
+    from pgshovel_spark.sources import pgoutput as po
+
+    rel = _msg_relation(99, "public", "t", ["id", "v"], ["id"])
+    commit = b"C" + b"\x00" + st.pack("!qqq", 0, 0, 820540800000000)
     origin = b"O" + st.pack("!q", 0x99) + b"node_b\x00"
 
     def txn(xid, ids, with_origin):
@@ -1712,9 +1721,7 @@ def test_pgdatasource_checkpoint_restart_exactly_once(spark, pg, tmp_path):
 def test_pgoutput_decoder_malformed_metadata():
     """Origin/Type/Message frames are PARSED field-by-field —
     well-formed ones pass through silently, truncated/corrupt ones
-    raise the declared descriptive error — and protocol-v2 stream
-    frames, which a v1 slot never sends, are unknown kinds.
-    Table-driven; no silent skips: a framing desync must never
+    raise the declared descriptive error.  Table-driven; no silent skips: a framing desync must never
     masquerade as 'metadata we don't care about'."""
     import struct as st
 
@@ -1751,8 +1758,8 @@ def test_pgoutput_decoder_malformed_metadata():
     out = po.parse_pgoutput(msgs)
     assert [(c["op"], c["after"]["id"]) for c in out] == [("INSERT", "1")]
 
-    # 2. MALFORMED metadata and v2 stream frames: declared exceptions,
-    #    table-driven (payload, error-regex)
+    # 2. MALFORMED metadata: declared exceptions, table-driven
+    #    (payload, error-regex)
     base = [("0/10", 1, _msg_begin(TS, 1)), ("0/11", 1, rel)]
     CASES = [
         # Origin
@@ -1770,15 +1777,32 @@ def test_pgoutput_decoder_malformed_metadata():
          + b"xx", "truncated"),                           # over-declared len
         (b"M\x01" + st.pack("!q", 1) + b"p\x00" + st.pack("!i", -5),
          "negative pgoutput Message content length"),
-        # v2 StreamStart/Stop/Commit/Abort, well-formed: not v1 frames
-        (b"S" + st.pack("!iB", 7, 1), "unknown pgoutput message kind"),
-        (b"E", "unknown pgoutput message kind"),
-        (b"c" + st.pack("!iBqqq", 7, 0, 0, 0, TS),
-         "unknown pgoutput message kind"),
-        (b"A" + st.pack("!ii", 7, 7), "unknown pgoutput message kind"),
     ]
     for payload, pat in CASES:
         with _p.raises(ValueError, match=pat):
+            po.parse_pgoutput(base + [("0/12", 1, payload)])
+
+
+def test_pgoutput_v2_stream_unit():
+    """The decoder speaks protocol v1 only: well-formed v2
+    StreamStart/Stop/Commit/Abort frames, which a v1 slot never sends,
+    fail as unknown message kinds instead of being skipped."""
+    import struct as st
+
+    import pytest as _p
+
+    from pgshovel_spark.sources import pgoutput as po
+
+    TS = 820540800000000
+    rel = _msg_relation(99, "public", "t", ["id", "v"], ["id"])
+    base = [("0/10", 1, _msg_begin(TS, 1)), ("0/11", 1, rel)]
+    for payload in [
+        b"S" + st.pack("!iB", 7, 1),
+        b"E",
+        b"c" + st.pack("!iBqqq", 7, 0, 0, 0, TS),
+        b"A" + st.pack("!ii", 7, 7),
+    ]:
+        with _p.raises(ValueError, match="unknown pgoutput message kind"):
             po.parse_pgoutput(base + [("0/12", 1, payload)])
 
 
